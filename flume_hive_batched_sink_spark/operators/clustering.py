@@ -15,9 +15,9 @@
   eval can't drift from the clustering).
 
 Iterative-algorithm shape on Spark: each Lloyd iteration is ONE
-corpus scan (row-local assignment against k*64 broadcast literals —
-no join, no shuffle) + ONE k-row wide aggregate; the k x 64 means
-make a bounded driver collect (the MLlib pattern). At 100 TB, k
+corpus scan (row-local vectorized assignment against the k collected
+centroids — no join, no shuffle) + ONE k-row aggregate; the k x 64
+means make a bounded driver collect (the MLlib pattern). At 100 TB, k
 scales with the corpus (SemDeDup uses cell-bounded k ~ n/1000) and
 the only shuffles stay k-keyed; k is pinned here (like
 similarity._IVF_MAX_CELLS) so the oracle geometry is fixed while
@@ -33,7 +33,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .dedup import min_label_components
-from .registry import dsum, query, sql_dsum, tbl, unrolled_dot_enabled
+from .registry import dsum, query, sql_dsum, tbl
 from .similarity import _dot_dbl, unrolled_left_chain
 
 _KM_K = 8  # clusters (fixed oracle geometry; production scales with n)
@@ -131,29 +131,16 @@ _AUTO_K_SQL = (
 
 def _sqdiff_chain(x: Column, cvals: list[float]) -> Column:
     """Left-fold squared euclidean distance of an array column against
-    64 literal centroid coordinates. Default: zip_with/aggregate HOF —
+    64 literal centroid coordinates: a zip_with/aggregate HOF —
     left-associated double adds, bit-identical to the oracle's
     list_reduce fold (the 0.0 seed is exact: squared diffs are never
-    -0.0, so 0.0 + t1 == t1 bitwise). HOF over unrolled chain is the
+    -0.0, so 0.0 + t1 == t1 bitwise). HOF over an unrolled chain is the
     measured _dot_dec tradeoff: k=8 unrolled 64-term projections blew
     Janino compile to ~15 s PER PLAN at any corpus size, while the
     interpreted fold costs ~nothing to plan and its per-row penalty is
-    bounded by k*dim. On a long-running job set
-    SPARK_GRAFT_UNROLLED_DOT=1 (registry.unrolled_dot_enabled): the
-    chain unrolls into codegen, KEEPING left association (double adds
-    are order-sensitive — a balanced tree would drift low bits, so
-    unlike _dot_dec's exact-decimal tree this stays a left chain) —
-    values are bit-identical under either strategy, property-tested.
-    Degenerate inputs: an x SHORTER than the centroid width poisons
-    to NULL on both paths (HOF: NULL-padded zip element; unrolled:
-    NULL getItem term); LONGER x is out of schema contract
-    (FIXTURES.md pins 64) and only there would the two diverge."""
-    if unrolled_dot_enabled():
-        return unrolled_left_chain(
-            lambda i: (F.get(x, i).cast("double") - F.lit(float(cvals[i])))
-            * (F.get(x, i).cast("double") - F.lit(float(cvals[i]))),
-            len(cvals),
-        )
+    bounded by k*dim. Degenerate inputs: an x SHORTER than the
+    centroid width poisons to NULL (NULL-padded zip element); LONGER
+    x is out of schema contract (FIXTURES.md pins 64)."""
     carr = F.array(*[F.lit(float(v)) for v in cvals])
     prods = F.zip_with(
         x,
@@ -161,50 +148,6 @@ def _sqdiff_chain(x: Column, cvals: list[float]) -> Column:
         lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
     )
     return F.aggregate(prods, F.lit(0.0), lambda acc, p: acc + p)
-
-
-# Assignment strategy flip (r11: measured three-regime heuristic —
-# the r10 k-only proxy paid a documented ~1.3x penalty in the middle
-# regime). The literal-projection form (_assign: k HOF folds per row,
-# ZERO shuffle) vs the broadcast-join form (_assign_join: one
-# codegen'd distance per (row, centroid) join row + shuffles), full
-# semdedup-protocol A/B measured this round, solo box:
-# - SMALL corpus (n=2k, k=62): join 7.9 s vs literal ~15 s — the
-#   literal plan's k-proportional analyze/codegen cost (~0.07 s per
-#   centroid struct per pass) dwarfs sub-second data work. Join.
-# - MID n·k (n=20k, k=78, n·k=1.6e6): literal 32.3 s vs join 41.6 s —
-#   the n·k-row expansion's sorts/shuffles (re-executed by every
-#   downstream consumer of the assignment) cost more than the
-#   interpreted folds they replace. Literal.
-# - LARGE n·k or large k (n=200k, k=781, n·k=1.6e8): join 203 s vs
-#   literal 541 s — k interpreted folds per row is catastrophic and
-#   the k-struct literal plan is the Janino/plan-size cliff. Join.
-# Hence: literal only in the band (n >= _LITERAL_MIN_N, k <=
-# _LITERAL_MAX_K, n·k <= _JOIN_ASSIGN_MIN_NK); join otherwise (above
-# the k floor). Every test-SF geometry keeps its r10 plan bit-for-bit
-# (sf0.01 auto-k: n=500 < _LITERAL_MIN_N ⇒ join, same as r10, so the
-# driver hash gate still runs THROUGH the join path; pinned k=8 ops
-# stay literal via the floor, no count() ever issued for them).
-# Caveat for cluster scale: _LITERAL_MIN_N exists because local plan
-# compile dominates small inputs; on a 1000-executor run the same
-# compile amortizes over far more data, so the literal band widens —
-# the knobs are module constants precisely so a deployment can re-pin
-# them from its own decade measurements.
-_JOIN_ASSIGN_MIN_K = 12
-_JOIN_ASSIGN_MIN_NK = 10_000_000
-_LITERAL_MAX_K = 256
-_LITERAL_MIN_N = 10_000
-
-
-def _use_join_assign(n: int, k: int) -> bool:
-    """True when nearest-centroid assignment should take the
-    broadcast-join strategy for a corpus of n vectors and k centroids
-    (see the three-regime crossover note above)."""
-    if k < _JOIN_ASSIGN_MIN_K:
-        return False
-    if k > _LITERAL_MAX_K or n < _LITERAL_MIN_N:
-        return True
-    return n * k > _JOIN_ASSIGN_MIN_NK
 
 
 def _sqdiff_cols(a: Column, b: Column, dim: int = _KM_DIM) -> Column:
@@ -222,46 +165,6 @@ def _sqdiff_cols(a: Column, b: Column, dim: int = _KM_DIM) -> Column:
     )
 
 
-def _assign_join(
-    em: DataFrame, cents: list[tuple[int, list[float]]]
-) -> DataFrame:
-    """Nearest-centroid assignment for LARGE k: broadcast the k-row
-    centroid table, compute one codegen'd distance per (vector,
-    centroid) join row, take the per-vector min of the (d2, j) struct
-    (lexicographic struct ordering = ORDER BY d2, j — ties to the
-    smallest j, same as the literal form and the oracle), then map
-    the winner back onto the corpus with a 1:1 vec_id join.
-
-    Scale shape: the corpus never replicates — the n x k expansion is
-    rows of (vec_id, j, d2) only (embedding dropped before the
-    explode), the min is a map-side-combined agg keyed on vec_id, and
-    the centroid side is k x 64 doubles broadcast once. This is the
-    MLlib assignment shape; it holds while k x 64 fits a broadcast
-    (~48 MB at k=100k), far past any literal-projection plan."""
-    spark = em.sparkSession
-    cdf = spark.createDataFrame(
-        [(int(j), [float(v) for v in c]) for j, c in cents],
-        "j int, c array<double>",
-    )
-    d2 = _sqdiff_cols(F.col("embedding"), F.col("c"))
-    best = (
-        em.select("vec_id", "embedding")
-        .join(F.broadcast(cdf))
-        .select(
-            "vec_id",
-            F.struct(d2.alias("d"), F.col("j").alias("j")).alias("dj"),
-        )
-        .groupBy("vec_id")
-        .agg(F.min("dj").alias("m"))
-    )
-    return em.join(best, ["vec_id"]).select(
-        "vec_id",
-        "embedding",
-        F.col("m.j").alias("cl"),
-        F.col("m.d").alias("d2"),
-    )
-
-
 def _dlit_sql(v: float) -> str:
     """Exact double literal for generated SQL — registry.dlit_sql
     (shared with similarity's row-local IVF assignment since r15)."""
@@ -271,15 +174,14 @@ def _dlit_sql(v: float) -> str:
 
 
 def _sqdiff_chain_sql(x_sql: str, cvals: list[float]) -> str:
-    """SQL text of _sqdiff_chain's default HOF-fold form — the SAME
-    zip_with/aggregate expression tree, but parsed by the JVM in ONE
-    expr() call instead of being assembled Column-by-Column over
-    py4j. Profiling (guide §1.1) showed DataFrame CONSTRUCTION, not
-    execution, dominating the PQ/kmeans family at sf0.1 (e.g.
-    ns_similarity_ivfpq: 8.0 s build vs 1.4 s exec; pq_train's
-    argmin projection alone cost 1.6 s of py4j chatter per call).
-    Values are bit-identical: the parsed expressions are the ones
-    the Column API built."""
+    """SQL text of _sqdiff_chain — the SAME zip_with/aggregate
+    expression tree, but parsed by the JVM in ONE expr() call instead
+    of being assembled Column-by-Column over py4j. Profiling (guide
+    §1.1) showed DataFrame CONSTRUCTION, not execution, dominating the
+    PQ/kmeans family at sf0.1 (e.g. ns_similarity_ivfpq: 8.0 s build
+    vs 1.4 s exec; pq_train's argmin projection alone cost 1.6 s of
+    py4j chatter per call). Values are bit-identical: the parsed
+    expressions are the ones the Column API built."""
     lits = ", ".join(_dlit_sql(v) for v in cvals)
     return (
         f"aggregate(zip_with({x_sql}, array({lits}), "
@@ -288,34 +190,32 @@ def _sqdiff_chain_sql(x_sql: str, cvals: list[float]) -> str:
     )
 
 
-def _assign_arrow(
-    em: DataFrame, cents: list[tuple[int, list[float]]]
-) -> DataFrame:
-    """Nearest-centroid assignment as ONE mapInArrow pass (guide
-    §4.2: hand whole batches to vectorized native code): NumPy
-    computes all k×dim squared-difference folds per batch, replacing
-    k interpreted `aggregate(zip_with(...))` HOF folds per row
-    (measured 2× at the sf0.1 auto-k geometry for the bare
-    assignment, and it removes the k·dim-literal SQL string from the
-    plan entirely).
+def _assign(em: DataFrame, cents: list[tuple[int, list[float]]]) -> DataFrame:
+    """Nearest-centroid assignment (vec_id, embedding, cl, d2) as ONE
+    mapInArrow pass (guide §4.2: hand whole batches to vectorized
+    native code) — the engine's one flat nearest-centroid kernel.
+    NumPy computes all k squared-difference folds per batch; zero
+    shuffle, and no k·dim-literal SQL string in the plan. Measured
+    2.5-4.5x faster than the broadcast-join form it replaced at every
+    geometry from n=500/k=15 to n=20k/k=625 (SCALING.md).
 
-    Bit-parity with _assign / the oracle's list_reduce, proven
-    term by term: (a) the per-element work is cast-to-double,
-    subtract, square — exact IEEE ops NumPy evaluates identically;
-    (b) the fold is accumulated with an explicit dim-step loop
-    (`acc += t*t`, one vectorized step per dimension), i.e. the SAME
-    left-associated double addition chain as the HOF fold — never
-    np.sum, whose pairwise summation reorders low bits; (c) argmin
-    ties break to the FIRST (smallest) centroid id because the
-    centroid rows are sorted by id — the struct-min (d2, j) rule.
-    Verified bit-exact (cl + d2 doubles byte-compared) against
-    _assign on the sf0.1 corpus at k=62; the oracle sweep gates every
-    consumer. Zero shuffle, same (vec_id, embedding, cl, d2) output.
+    Bit-parity with the oracle's `ORDER BY d2, j` over list_reduce
+    distances, term by term: (a) the per-element work is
+    cast-to-double, subtract, square — exact IEEE ops NumPy evaluates
+    identically; (b) the fold is accumulated with an explicit dim-step
+    loop (one vectorized `acc += t*t` per dimension), i.e. the SAME
+    left-associated double addition chain — never np.sum, whose
+    pairwise summation reorders low bits; (c) ties break to the
+    smallest centroid id because the centroid rows are sorted by id.
+    Degenerate input follows the same order: a NaN distance ranks
+    after every number (inf included), and a row whose distance is
+    NULL — a NULL embedding, an inner NULL element, or a length other
+    than the centroid width — gets the smallest centroid id with
+    d2 = NULL. Parity is tested against DuckDB on those rows.
 
-    Memory: batches are processed in row CHUNKS sized so the n×k×dim
-    temporary stays ~32 MB regardless of Arrow batch size."""
-    import numpy as np
-
+    Memory: batches are processed in row CHUNKS so the chunk × k
+    accumulator (and its one scratch twin) stays ~32 MB (4M doubles)
+    regardless of Arrow batch size; dim is never materialised."""
     pairs = sorted(
         ((int(j), [float(v) for v in c]) for j, c in cents),
         key=lambda t: t[0],
@@ -324,87 +224,66 @@ def _assign_arrow(
     carr = np.array([c for _, c in pairs], dtype=np.float64)
     vt = em.schema["vec_id"].dataType.simpleString()
     et = em.schema["embedding"].dataType.elementType.simpleString()
-    dim = carr.shape[1]
-    chunk = max(1, (4 << 20) // max(1, carr.shape[0] * dim))
+    k, dim = carr.shape
+    chunk = max(1, (4 << 20) // k)
 
     def fn(it):
         import numpy as np
         import pyarrow as pa
+        import pyarrow.compute as pc
 
         for b in it:
-            if len(b) == 0:
+            n = len(b)
+            if n == 0:
                 continue
             emb = b.column(1)
-            if emb.null_count:
-                raise ValueError("_assign_arrow: null embedding")
-            x = np.asarray(emb.flatten(), dtype=np.float64).reshape(
-                len(b), dim
+            flat = emb.flatten()
+            vals = np.asarray(
+                flat.to_numpy(zero_copy_only=False), dtype=np.float64
             )
-            cls = np.empty(len(b), dtype=np.int64)
-            dmin = np.empty(len(b), dtype=np.float64)
-            for lo in range(0, len(b), chunk):
+            # rows with a NULL distance: NULL list, wrong length, or
+            # an inner NULL (to_numpy turned those into NaN above)
+            ok = pc.list_value_length(emb).fill_null(-1).to_numpy() == dim
+            if ok.all() and not flat.null_count:
+                x, mask = vals.reshape(n, dim), None
+            else:
+                owner = pc.list_parent_indices(emb).to_numpy()
+                if flat.null_count:
+                    inner = flat.is_null().to_numpy(zero_copy_only=False)
+                    ok[owner[inner]] = False
+                x, mask = np.zeros((n, dim)), ~ok
+                x[ok] = vals[ok[owner]].reshape(-1, dim)
+            cls = np.empty(n, dtype=np.int64)
+            dmin = np.empty(n, dtype=np.float64)
+            for lo in range(0, n, chunk):
                 xs = x[lo:lo + chunk]
-                acc = np.zeros((xs.shape[0], carr.shape[0]))
+                acc = np.zeros((xs.shape[0], k))
+                t = np.empty_like(acc)
                 for i in range(dim):  # left-assoc fold, per dim
-                    t = xs[:, None, i] - carr[None, :, i]
-                    acc += t * t
+                    np.subtract(xs[:, None, i], carr[None, :, i], out=t)
+                    t *= t
+                    acc += t
                 a = acc.argmin(axis=1)
+                nan = np.isnan(acc)
+                if nan.any():  # argmin stops at the first NaN
+                    best = np.where(nan, np.inf, acc).min(axis=1)
+                    a = (acc == best[:, None]).argmax(axis=1)
                 cls[lo:lo + chunk] = jarr[a]
                 dmin[lo:lo + chunk] = acc[np.arange(xs.shape[0]), a]
+            if mask is not None:
+                cls[mask] = jarr[0]
             yield pa.RecordBatch.from_arrays(
                 [
                     b.column(0),
                     emb,
                     pa.array(cls, type=pa.int32()),
-                    pa.array(dmin, type=pa.float64()),
+                    pa.array(dmin, type=pa.float64(), mask=mask),
                 ],
                 names=["vec_id", "embedding", "cl", "d2"],
             )
 
     return em.select("vec_id", "embedding").mapInArrow(
         fn, f"vec_id {vt}, embedding array<{et}>, cl int, d2 double"
-    )
-
-
-def _assign(em: DataFrame, cents: list[tuple[int, list[float]]]) -> DataFrame:
-    """Row-local nearest-centroid assignment: one projection, zero
-    shuffle — each row min-reduces an array of (d2, j) structs built
-    from literal centroids (ties break to the smallest j, mirroring
-    the oracle's ORDER BY d2, j). When _use_join_assign(n, k) the
-    caller uses _assign_join instead. Default path since r15:
-    _assign_arrow (one vectorized mapInArrow pass — guide §4.2,
-    bit-parity documented there); the unrolled knob keeps the
-    Column-API construction; SPARK_GRAFT_ASSIGN_HOF=1 forces the r14
-    generated-SQL HOF form (the parity-comparison baseline)."""
-    import os as _os
-
-    if not unrolled_dot_enabled() and (
-        _os.environ.get("SPARK_GRAFT_ASSIGN_HOF") != "1"
-    ):
-        return _assign_arrow(em, cents)
-    if unrolled_dot_enabled():
-        cands = F.array(
-            *[
-                F.struct(
-                    _sqdiff_chain(F.col("embedding"), c).alias("d"),
-                    F.lit(int(j)).alias("j"),
-                )
-                for j, c in cents
-            ]
-        )
-        m = F.array_min(cands)
-    else:
-        structs = ", ".join(
-            f"struct({_sqdiff_chain_sql('embedding', c)} as d, "
-            f"{int(j)} as j)"
-            for j, c in cents
-        )
-        m = F.expr(f"array_min(array({structs}))")
-    return em.select(
-        "vec_id",
-        "embedding",
-        m.getField("j").alias("cl"),
-        m.getField("d").alias("d2"),
     )
 
 
@@ -446,13 +325,13 @@ def _assign_hier(
     em: DataFrame, cents: list[tuple[int, list[float]]]
 ) -> DataFrame:
     """2-level hierarchical nearest-centroid assignment for LARGE k
-    (the SCALING.md continuation of _assign_join): cluster the k
+    (the SCALING.md continuation of the flat form): cluster the k
     centroids into s = ⌈√k⌉ super-cells ON THE DRIVER (k rows), then
     route each corpus vector through the tree — nearest super-centroid
     first (n x s expansion), then nearest centroid WITHIN that
     super-cell (n x cell expansion, cell ≈ √k). Total distance rows
-    n·(√k + cell) instead of the flat form's n·k; both levels are the
-    same broadcast-join + min(struct(d, j)) shape as _assign_join
+    n·(√k + cell) instead of the flat form's n·k; both levels are a
+    broadcast join + min(struct(d, j)) over _sqdiff_cols distances
     (ties to the smallest index at each level).
 
     APPROXIMATE by design: a vector whose true nearest centroid sits
@@ -521,31 +400,20 @@ def kmeans_assign(
     spark: SparkSession,
     sf_dir: str,
     k: int = _KM_K,
-    n: int | None = None,
     hierarchical: bool | None = None,
 ) -> DataFrame:
     """Shared 2-iteration Lloyd assignment (vec_id, embedding, cl,
     d2) used by ns_cluster_kmeans and ns_semdedup. Two bounded driver
     collects: the k init rows and the k x 64 iteration-1 means (the
     classic driver-coordinated Lloyd loop — MLlib's shape; each
-    iteration is one corpus scan). `n` (corpus count) feeds the n·k
-    assignment-strategy crossover; callers that already counted pass
-    it through, otherwise one bounded count() is issued — and only
-    when k is large enough for the strategy question to be live.
+    iteration is one corpus scan through the _assign kernel).
     `hierarchical` forces the 2-level tree on (True) or off (False);
     None auto-enables it at k >= _HIER_ASSIGN_MIN_K (the approximate
     n·√k path — never reached by the hash-gated test-SF geometries)."""
     em = tbl(spark, sf_dir, "embeddings", parallel=True)
     if hierarchical is None:
         hierarchical = k >= _HIER_ASSIGN_MIN_K
-    if hierarchical:
-        assign = _assign_hier
-    elif k < _JOIN_ASSIGN_MIN_K:
-        assign = _assign
-    else:
-        if n is None:
-            n = em.count()
-        assign = _assign_join if _use_join_assign(n, k) else _assign
+    assign = _assign_hier if hierarchical else _assign
     init = em.orderBy("vec_id").limit(k).collect()
     cents0 = [
         (j, [float(v) for v in row.embedding])
@@ -603,9 +471,9 @@ def ns_cluster_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     first oracle-checked iterative operator in this engine alongside
     ns_dedup_clusters' fixpoint).
 
-    Scale: assignment is row-local against k*64 broadcast literals
-    (zero shuffle, whole-stage codegen); the update step is one
-    k-row wide aggregate (map-side combine) + a bounded k x 64
+    Scale: assignment is one row-local mapInArrow pass against the
+    k collected centroids (zero shuffle); the update step is one
+    k-row aggregate (map-side combine) + a bounded k x 64
     driver collect per iteration. Iterations are a driver loop —
     checkpointing between them (localCheckpoint, the
     ns_dedup_clusters pattern) caps lineage if k or the iteration
@@ -736,7 +604,6 @@ def _sem_near(
     spark: SparkSession,
     sf_dir: str,
     k: int = _KM_K,
-    n: int | None = None,
     hierarchical: bool | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """(assignment, near): the shared SemDeDup front — 2-iteration
@@ -748,15 +615,15 @@ def _sem_near(
     twin of _sem_near_sql."""
     from .registry import persist_evicting
 
-    a2 = kmeans_assign(spark, sf_dir, k, n=n, hierarchical=hierarchical)
+    a2 = kmeans_assign(spark, sf_dir, k, hierarchical=hierarchical)
     nrm = F.sqrt(_dot_dbl(F.col("embedding"), F.col("embedding")))
-    # The assignment projection is the expensive part of this frame
-    # (k interpreted HOF folds per row — 62 at the sf0.1 auto-k
-    # geometry) and the plan consumed it THREE times: both sides of
-    # the pair self-join plus the final manifest join-back. Persist
-    # it once per invocation (guide §5 reuse rule; the MLlib Lloyd
-    # shape — strictly within-invocation, evicted on the next call)
-    # so the fold and the parquet scan run once, not three times.
+    # The assignment pass is the expensive part of this frame (k
+    # distance folds per row) and the plan consumed it THREE times:
+    # both sides of the pair self-join plus the final manifest
+    # join-back. Persist it once per invocation (guide §5 reuse rule;
+    # the MLlib Lloyd shape — strictly within-invocation, evicted on
+    # the next call) so the assignment and the parquet scan run once,
+    # not three times.
     base = persist_evicting(
         a2.select("vec_id", "cl", "embedding", nrm.alias("nrm")),
         "clustering._sem_near.base",
@@ -789,13 +656,12 @@ def semdedup_frame(
     spark: SparkSession,
     sf_dir: str,
     k: int = _KM_K,
-    n: int | None = None,
     hierarchical: bool | None = None,
 ) -> DataFrame:
     """k-parameterized SemDeDup body — the registered operator pins
     k=_KM_K (the fixed oracle geometry); scale runs pass k=auto_k(n)
     so cells stay ~256 and pair work stays linear in the corpus."""
-    a2, near = _sem_near(spark, sf_dir, k, n=n, hierarchical=hierarchical)
+    a2, near = _sem_near(spark, sf_dir, k, hierarchical=hierarchical)
     # both orientations of each edge via one row-local explode — the
     # unionAll form this replaces duplicated the whole `near` subtree
     # (pair join + n²/k cosine folds) into BOTH branches, computing
@@ -864,9 +730,8 @@ def ns_semdedup_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterations, same exact-decimal means, same within-cluster pair
     join keyed on cl."""
     em = tbl(spark, sf_dir, "embeddings", parallel=True)
-    n = em.count()
-    k = auto_k(n, _AUTO_CELL)
-    out = semdedup_frame(spark, sf_dir, k, n=n)
+    k = auto_k(em.count(), _AUTO_CELL)
+    out = semdedup_frame(spark, sf_dir, k)
     return out.select(
         F.lit(int(k)).cast("bigint").alias("k"), *out.columns
     )
@@ -1090,9 +955,11 @@ def ns_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     flag.
 
     Determinism: distances are the shared left-fold double chains
-    (_sqdiff_chain — bit-identical to the oracle's list_reduce);
-    the running min folds through the SAME least() nesting on both
-    engines; winner selection is a (dmin DESC, vec_id) total order.
+    (_sqdiff_chain in the selection loop, the _assign kernel for the
+    final assignment — both bit-identical to the oracle's
+    list_reduce); the running min folds through the SAME least()
+    nesting on both engines; winner selection is a (dmin DESC,
+    vec_id) total order.
 
     Iterative shape on Spark (the Lloyd/BPE loop pattern): each round
     is ONE corpus pass plus a bounded TakeOrdered(1) driver collect
@@ -1104,29 +971,21 @@ def ns_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     cadence), capping total fold work at ~n·k·cadence/2 = O(n·k) and
     plan depth at the cadence. Zero shuffle in the selection loop
     (the orderBy-limit-1 is TakeOrderedAndProject); the final
-    assignment is a row-local array_min over k broadcast-literal
-    structs (at very large k the _use_join_assign broadcast-join form
-    applies, the kmeans crossover). At 100 TB the per-round collect
-    stays 1 row regardless of corpus size."""
+    assignment is the row-local _assign kernel with the centers
+    passed in rank order (its smallest-id tie-break is the oracle's
+    ORDER BY d2, rnk), center_id looked up from the rank. At 100 TB
+    the per-round collect stays 1 row regardless of corpus size."""
     em = tbl(spark, sf_dir, "embeddings", parallel=True)
     centers = kcenter_select(em, _KC_K)
-    structs = F.array(
-        *[
-            F.struct(
-                _sqdiff_chain(F.col("embedding"), c).alias("d2"),
-                F.lit(r).alias("rnk"),
-                F.lit(cid).alias("cid"),
-            )
-            for r, (cid, c) in enumerate(centers)
-        ]
-    )
-    best = F.array_min(structs)
     center_ids = [cid for cid, _ in centers]
-    return em.select(
+    a = _assign(em, [(r, c) for r, (_, c) in enumerate(centers)])
+    return a.select(
         "vec_id",
-        best["cid"].cast("bigint").alias("center_id"),
-        best["rnk"].cast("int").alias("center_rank"),
-        best["d2"].alias("d2_nearest"),
+        F.get(F.array(*map(F.lit, center_ids)), F.col("cl"))
+        .cast("bigint")
+        .alias("center_id"),
+        F.col("cl").alias("center_rank"),
+        F.col("d2").alias("d2_nearest"),
         F.when(F.col("vec_id").isin(center_ids), 1)
         .otherwise(0)
         .alias("is_center"),
@@ -1181,12 +1040,11 @@ def ns_sample_cluster_balanced(
     vec_id string (byte-identical cross-engine, the ccnet-sample
     precedent) with vec_id itself as tiebreak.
 
-    Scale: assignment is the kmeans_assign path (row-local folds vs
-    literal centroids at small k; join/hierarchical beyond the
-    measured crossovers); the quota rank is a cl-partitioned window
-    whose rank<=Q filter Spark pushes into WindowGroupLimit (top-Q
-    per partition, never a full per-cell sort materialization); the
-    sizes join is a k-row broadcast."""
+    Scale: assignment is the kmeans_assign path (the row-local
+    _assign kernel; the 2-level tree at very large k); the quota rank
+    is a cl-partitioned window whose rank<=Q filter Spark pushes into
+    WindowGroupLimit (top-Q per partition, never a full per-cell sort
+    materialization); the sizes join is a k-row broadcast."""
     from pyspark.sql.window import Window as W
 
     a = kmeans_assign(spark, sf_dir)
@@ -1448,24 +1306,11 @@ def _pq_sub(m: int) -> Column:
 
 
 def _pq_argmin(m: int, cb: dict) -> Column:
-    """Row-local nearest-codeword struct (d, j) for subspace m — the
-    _assign array_min convention ((d2, j) lexicographic == the
-    oracle's ORDER BY d2, j). Default path built as ONE generated-SQL
-    expr (the _sqdiff_chain_sql rationale: profiling put ~1.6 s of
-    py4j Column assembly per pq_train call); the unrolled knob keeps
-    the Column-API construction."""
-    if unrolled_dot_enabled():
-        return F.array_min(
-            F.array(
-                *[
-                    F.struct(
-                        _sqdiff_chain(_pq_sub(m), cb[(m, j)]).alias("d"),
-                        F.lit(j).alias("j"),
-                    )
-                    for j in range(_PQ_K)
-                ]
-            )
-        )
+    """Row-local nearest-codeword struct (d, j) for subspace m — an
+    array_min over (d2, j) structs ((d2, j) lexicographic == the
+    oracle's ORDER BY d2, j). Built as ONE generated-SQL expr (the
+    _sqdiff_chain_sql rationale: profiling put ~1.6 s of py4j Column
+    assembly per pq_train call)."""
     x = f"slice(embedding, {m * _PQ_DSUB + 1}, {_PQ_DSUB})"
     structs = ", ".join(
         f"struct({_sqdiff_chain_sql(x, cb[(m, j)])} as d, {j} as j)"
@@ -1595,8 +1440,8 @@ def ns_embedding_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass is ONE (m, cl, dim)-keyed aggregate over the posexploded
     subvectors (the ns_embedding_profile shape, ≤ M·K·D_SUB = 256
     output rows) and ONE bounded 256-value collect (Lloyd pattern).
-    At production K=256 the codebook is 16k literals — the
-    _JOIN_ASSIGN crossover heuristic applies the same way."""
+    At production K=256 the codebook is 16k plan literals — the
+    cost the literal-free _assign kernel removes for k-means."""
     em = tbl(spark, sf_dir, "embeddings", parallel=True)
     cb1 = _pq_train(em)
     mins = [_pq_argmin(m, cb1) for m in range(_PQ_M)]

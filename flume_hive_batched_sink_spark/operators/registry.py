@@ -50,29 +50,6 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     return deco
 
 
-# --- unrolled-dot knob (long-running-job codegen tradeoff) ---
-
-
-def unrolled_dot_enabled() -> bool:
-    """True when SPARK_GRAFT_UNROLLED_DOT=1: vector inner loops that
-    default to interpreted `F.aggregate` HOF folds (similarity
-    `_dot_dec`, clustering `_sqdiff_chain`) switch to UNROLLED
-    fixed-width expression chains that stay inside whole-stage
-    codegen. Values are bit-identical either way (decimal adds are
-    exact/associative; the double chains keep the fold's left
-    association), so oracle parity is knob-independent — only the
-    physical expression strategy flips. Default OFF because the
-    unrolled decimal trees cost multi-second Janino compiles PER PLAN
-    (measured ~15 s at k=8 in r9) that dominate short local runs; ON
-    for long-running jobs where compile amortizes to zero and the
-    per-row win is ~2-10x on dot-product-bound operators
-    (SCALING.md's knob section has the measured decade). Read per
-    call, not cached, so a session can flip it between plans."""
-    import os
-
-    return os.environ.get("SPARK_GRAFT_UNROLLED_DOT", "") == "1"
-
-
 def dlit_sql(v: float) -> str:
     """Exact double literal for generated SQL: a string cast parses
     via Double.parseDouble, so the shortest-round-trip repr recovers

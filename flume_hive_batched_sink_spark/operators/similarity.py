@@ -24,70 +24,30 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from .registry import (
-    persist_evicting,
-    query,
-    tbl,
-    unrolled_dot_enabled,
-)
+from .registry import persist_evicting, query, tbl
 
 # precision 25 keeps decimal addition below Spark's 38-digit cap, so
 # the fold never rescales (stays exact); |values| here are ≪ 10^13.
 _DEC = "decimal(25,12)"
 
 
-def _dot_dec(a: Column, b: Column, dim: int = 64) -> Column:
+def _dot_dec(a: Column, b: Column) -> Column:
     """Exact dot product: per-element double multiply (IEEE, identical
     in both engines) → decimal(25,12) → exact sum → double.
 
-    Two physical strategies behind `unrolled_dot_enabled()` (the
-    SPARK_GRAFT_UNROLLED_DOT=1 knob, registry.py):
-    - OFF (default): interpreted `zip_with`+`aggregate` HOF fold —
-      zero compile cost; per-row penalty bounded by the candidate
-      count (banded LSH keeps candidates ≪ |corpus|²). Right for
-      short local runs: the unrolled decimal tree's Janino compile
-      (~15 s per heavy plan, measured r9) made the similarity queries
-      3-5× slower END-TO-END at sf0.1 despite ~2× faster rows.
-    - ON: balanced GetArrayItem·multiply·decimal-add tree, fully
-      codegen'd. Decimal addition is EXACT, hence associative, so the
-      balanced tree returns the bit-identical value the left fold
-      does — oracle parity is knob-independent (property-tested).
-      Right for long-running 100 TB jobs where compile amortizes to
-      zero and the dot product is hot.
+    An interpreted `zip_with`+`aggregate` HOF fold — zero compile
+    cost; per-row penalty bounded by the candidate count (banded LSH
+    keeps candidates ≪ |corpus|²). A balanced, fully codegen'd
+    decimal tree was measured against it (r9-r10): its Janino compile
+    (~15 s per heavy plan) made the similarity queries 3-5× slower END
+    TO END at sf0.1 despite ~2× faster rows, and it never paid at
+    local scale (SCALING.md), so the fold is the only form.
 
-    Degenerate-input parity (r10 code review, two passes): indexing
-    past the end of a SHORT array must behave like the fold — element
-    access is `F.get` (NULL out of bounds; `getItem` THROWS under
-    ANSI mode), and a tree term becomes an exact decimal zero ONLY
-    when the position is out of bounds on BOTH sides (the fold's zip
-    simply has no such term; adding 0 is exact). The OOB test is on
-    array SIZE, not value NULL-ness: an IN-RANGE element pair that is
-    genuinely NULL must poison the sum to NULL exactly like the
-    fold's NULL product does (pass 2 caught the isNull() shortcut
-    treating those as zeros). Length-MISMATCHED pairs poison via the
-    one-sided NULL product, matching zip_with's padding. Arrays
-    LONGER than `dim` are out of schema contract (FIXTURES.md pins
-    64) — `dim` is the schema width, not a cap."""
-    if unrolled_dot_enabled():
-        terms = [
-            F.when(
-                (F.lit(i) >= F.size(a)) & (F.lit(i) >= F.size(b)),
-                F.lit(0).cast(_DEC),
-            )
-            .otherwise(
-                (F.get(a, i).cast("double") * F.get(b, i).cast("double"))
-                .cast(_DEC)
-            )
-            for i in range(dim)
-        ]
-        while len(terms) > 1:  # balanced: keeps codegen depth log(dim)
-            terms = [
-                (terms[i] + terms[i + 1]).cast(_DEC)
-                if i + 1 < len(terms)
-                else terms[i]
-                for i in range(0, len(terms), 2)
-            ]
-        return terms[0].cast("double")
+    Degenerate inputs (property-tested): equal-length SHORT arrays
+    give the real sum of their products; a length-MISMATCHED pair
+    poisons to NULL via zip_with's NULL padding; an IN-RANGE NULL
+    element poisons to NULL through its NULL product. Arrays LONGER
+    than the schema width are out of contract (FIXTURES.md pins 64)."""
     prods = F.zip_with(
         a, b, lambda x, y: (x.cast("double") * y.cast("double")).cast(_DEC)
     )
@@ -105,11 +65,10 @@ def unrolled_left_chain(term, dim: int) -> Column:
     a flat expression chain. The association is load-bearing: double
     adds are order-sensitive, and every oracle twin replays a LEFT
     fold (list_reduce), so all unrolled double chains in the repo
-    (_dot_dbl here, clustering's _sqdiff_cols / _sqdiff_chain knob
-    branch) MUST route through this one helper — a balanced or
-    reordered copy would silently break hash parity for just the
-    operators using that copy (r10 code review: three hand-rolled
-    twins collapsed into this)."""
+    (_dot_dbl here, clustering's _sqdiff_cols) MUST route through this
+    one helper — a balanced or reordered copy would silently break
+    hash parity for just the operators using that copy (r10 code
+    review: three hand-rolled twins collapsed into this)."""
     out = term(0)
     for i in range(1, dim):
         out = out + term(i)
@@ -835,7 +794,7 @@ def _ivf_assigned(em: DataFrame, cent: DataFrame) -> DataFrame:
 
     r15 shape (guide §2.4): ROW-LOCAL argmin over the collected
     centroid literals — `array_min(array(struct(-cdot, cent_id)))`,
-    the clustering._assign form — replacing a broadcast nested-loop
+    the clustering._pq_argmin form — replacing a broadcast nested-loop
     n×C expansion + per-vec_id row_number window that carried both
     64-dim arrays through a sort (measured 1.6-1.9 s of the
     recall_eval invocation at sf0.1; one Exchange gone per consumer).

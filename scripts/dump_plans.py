@@ -515,13 +515,13 @@ def plan_checks(spark, sf_dir: str) -> list[dict]:
         "BroadcastHashJoin present" if "BroadcastHashJoin" in p
         else "BroadcastHashJoin MISSING")
 
-    # ns_cluster_kmeans (r9): assignment is row-local against literal
-    # centroids — the final plan must contain NO join of any kind
-    # (the k x 64 means travel via bounded driver collects).
+    # ns_cluster_kmeans (r9): assignment is the row-local _assign
+    # kernel — the final plan must contain NO join of any kind (the
+    # k x 64 means travel via bounded driver collects).
     p = _formatted(ops.QUERIES["ns_cluster_kmeans"](spark, sf_dir))
     joins = _re.findall(r"(\w*Join\w*)", p)
     add("ns_cluster_kmeans",
-        "assignment is join-free (literal centroids, row-local)",
+        "assignment is join-free (row-local kernel)",
         not joins, f"join nodes: {sorted(set(joins))}" if joins
         else "no join nodes in formatted plan")
 
@@ -536,36 +536,19 @@ def plan_checks(spark, sf_dir: str) -> list[dict]:
         f"forbidden: {sorted(bad)}" if bad
         else "keyed join present, no BNLJ/cartesian")
 
-    # ns_semdedup_auto (r10): the pair join must stay KEYED on cl
-    # (SortMergeJoin/ShuffledHashJoin — never cartesian), and the only
-    # nested loops allowed are the _assign_join centroid expansions —
-    # keyless broadcasts of the bounded k-row centroid frame (the
-    # ann_ivf pattern: n*k assignment IS the k-means workload). Every
-    # BNLJ must be a BuildRight broadcast; a single CartesianProduct
-    # or a data-x-data BNLJ fails.
+    # ns_semdedup_auto: the pair join must stay KEYED on cl
+    # (SortMergeJoin/ShuffledHashJoin) and, with assignment on the
+    # row-local clustering._assign kernel at every k, there is NO
+    # nested loop or cartesian anywhere — the same rule as
+    # ns_semdedup, plus the keyed-join node itself.
     p = _formatted(ops.QUERIES["ns_semdedup_auto"](spark, sf_dir))
     keyed = ("SortMergeJoin" in p) or ("ShuffledHashJoin" in p)
-    # formatted tree lines read `BroadcastNestedLoopJoin <type>
-    # Build<side> (n)`; detail sections repeat the bare node name as
-    # `(n) BroadcastNestedLoopJoin` — audit the TREE lines only.
-    tree_lines = [
-        ln for ln in p.splitlines()
-        if "BroadcastNestedLoopJoin" in ln
-        and not _re.match(r"^\(\d+\) BroadcastNestedLoopJoin", ln.strip())
-    ]
-    unbuilt = [
-        ln for ln in tree_lines
-        if not _re.search(
-            r"BroadcastNestedLoopJoin \w+ Build(Right|Left)", ln
-        )
-    ]
+    bad = {n for n in ("BroadcastNestedLoopJoin", "CartesianProduct")
+           if n in p}
     add("ns_semdedup_auto",
-        "keyed cl pair join; nested loops only as broadcast centroid "
-        "assignment (BuildRight/Left), no cartesian",
-        "CartesianProduct" not in p and keyed
-        and tree_lines and not unbuilt,
-        f"cart={'CartesianProduct' in p} keyed={keyed} "
-        f"bnlj_tree={len(tree_lines)} non_broadcast={len(unbuilt)}")
+        "keyed cl pair join; no BNLJ/cartesian (row-local assignment)",
+        keyed and not bad,
+        f"keyed={keyed} forbidden={sorted(bad)}")
 
     # ns_bpe_merges (r10): the registered operator returns a
     # driver-built 2-row literal frame (bounded Lloyd-style loop), so
@@ -709,8 +692,8 @@ def plan_checks(spark, sf_dir: str) -> list[dict]:
         f"identity-broadcast={'IdentityBroadcastMode' in p}")
 
     # ns_kcenter_coreset (r11): the FINAL assignment plan is a pure
-    # row-local projection — array_min over k literal centroid
-    # structs — so the returned frame must contain no join, no
+    # row-local pass — the _assign kernel over the k centers — so
+    # the returned frame must contain no join, no
     # window, no sort, and no keyed/range exchange (the selection
     # loop's own 1-row TakeOrdered collects happen before this plan
     # is built and never appear in it).
@@ -723,7 +706,7 @@ def plan_checks(spark, sf_dir: str) -> list[dict]:
     ]
     add("ns_kcenter_coreset",
         "final assignment is row-local (no join/sort/window/keyed "
-        "exchange — array_min over literal centroid structs)",
+        "exchange — the row-local _assign kernel)",
         not bad_nodes,
         bad_nodes[0] if bad_nodes
         else "project-over-scan only")

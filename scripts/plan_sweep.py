@@ -146,14 +146,10 @@ ALLOWED = {
     "ns_dedup_bloom": "1-row broadcast filter-geometry scalar "
     "(m_bits, derived from the exact base key count) joined onto "
     "build and probe streams",
-    # ns_cluster_kmeans / ns_semdedup need NO entries: assignment is
-    # row-local against literal centroids (no join at all) and the
-    # semdedup pair join is cl-keyed — the sweep verifies both clean.
-    "ns_semdedup_auto": "keyless broadcasts of the bounded k-row "
-    "centroid frame (_assign_join) — the n*k nearest-centroid "
-    "expansion IS the k-means assignment workload (the ann_ivf "
-    "pattern); the pair join itself stays cl-keyed (PLANCHECK pins "
-    "both properties)",
+    # ns_cluster_kmeans / ns_semdedup / ns_semdedup_auto need NO
+    # entries: assignment is the row-local clustering._assign kernel
+    # (no join at all) and the semdedup pair join is cl-keyed — the
+    # sweep verifies all three clean.
     # first adjudicated by the r10 streaming sweep (previously the
     # whole family was skipped):
     "stream_windowed_topk_state": "1-row broadcast of the final "

@@ -1,14 +1,11 @@
-"""SemDeDup / k-means 100x decade under the r10 execution strategies.
+"""SemDeDup / k-means 100x decade.
 
 Re-measures the SCALING.md row `ns_semdedup (auto_k path, k=781;
 embeddings-only 100x corpus)` — r9 read 10.16 s -> 541.4 s (ratio
-53.3), dominated by the n*k*dim interpreted HOF assignment — after
-the r10 change that routes k >= _JOIN_ASSIGN_MIN_K assignments
-through the broadcast-join form (ONE codegen'd 64-term distance per
-(vector, centroid) join row). Also measures the
-SPARK_GRAFT_UNROLLED_DOT=1 knob on the k=8 literal path
-(ns_cluster_kmeans's registered geometry), where the HOF fold is
-still the default.
+53.3), dominated by the n*k*dim interpreted HOF assignment — on the
+shipped assignment (the row-local clustering._assign kernel, and the
+2-level tree at k >= _HIER_ASSIGN_MIN_K), plus ns_cluster_kmeans at
+its registered k=8 geometry.
 
 Corpus: embeddings-only blow-up (scale_check's key-shift rule) —
 building all tables at K=100 would be a multi-hundred-GB lineitem
@@ -70,14 +67,9 @@ def main() -> None:
 
     results: dict[str, dict] = {}
 
-    def sem(sf_dir, hierarchical=None):
+    def sem(sf_dir):
         n = load_table(spark, sf_dir, "embeddings").count()
-        # production 256; hierarchical None = the shipped auto gate
-        # (k >= _HIER_ASSIGN_MIN_K), False = forced flat for the
-        # strategy-comparison rows
-        return semdedup_frame(
-            spark, sf_dir, auto_k(n), n=n, hierarchical=hierarchical
-        )
+        return semdedup_frame(spark, sf_dir, auto_k(n))  # production 256
 
     n1 = load_table(spark, BASE_SF, "embeddings").count()
     nk = load_table(spark, big, "embeddings").count()
@@ -89,19 +81,7 @@ def main() -> None:
     }
     r = results["semdedup_auto256_shipped"]
     r["ratio"] = round(r["t_Kx"] / r["t_1x"], 1)
-    print("semdedup auto-k (shipped heuristic):", r, flush=True)
-
-    # forced-flat twin: isolates what the 2-level tree buys at the
-    # Kx decade (at 1x the auto gate picks flat anyway, so only the
-    # Kx cell differs)
-    results["semdedup_auto256_flat"] = {
-        "t_Kx": timed(lambda: sem(big, hierarchical=False)),
-    }
-    r = results["semdedup_auto256_flat"]
-    r["hier_speedup_Kx"] = round(
-        r["t_Kx"] / results["semdedup_auto256_shipped"]["t_Kx"], 2
-    )
-    print("semdedup auto-k (forced flat):", r, flush=True)
+    print("semdedup auto-k (shipped):", r, flush=True)
 
     # the REGISTERED auto op (gate cell 32 ⇒ k = n/32): its own
     # decade row — at K=10 the join expansion is n*k = n²/32 rows,
@@ -120,22 +100,17 @@ def main() -> None:
     r["ratio"] = round(r["t_Kx"] / r["t_1x"], 1)
     print("ns_semdedup_auto (registered):", r, flush=True)
 
-    for knob in ("0", "1"):
-        os.environ["SPARK_GRAFT_UNROLLED_DOT"] = knob
-        key = f"kmeans_k8_literal_knob{knob}"
-        results[key] = {
-            "t_1x": timed(
-                lambda: ops.QUERIES["ns_cluster_kmeans"](spark, BASE_SF)
-            ),
-            "t_Kx": timed(
-                lambda: ops.QUERIES["ns_cluster_kmeans"](spark, big)
-            ),
-        }
-        results[key]["ratio"] = round(
-            results[key]["t_Kx"] / results[key]["t_1x"], 1
-        )
-        print(key, results[key], flush=True)
-    os.environ.pop("SPARK_GRAFT_UNROLLED_DOT", None)
+    key = "kmeans_k8"
+    results[key] = {
+        "t_1x": timed(
+            lambda: ops.QUERIES["ns_cluster_kmeans"](spark, BASE_SF)
+        ),
+        "t_Kx": timed(lambda: ops.QUERIES["ns_cluster_kmeans"](spark, big)),
+    }
+    results[key]["ratio"] = round(
+        results[key]["t_Kx"] / results[key]["t_1x"], 1
+    )
+    print(key, results[key], flush=True)
     print(json.dumps({"K": k_blow, "n_1x": n1, "n_Kx": nk, **results}))
 
 

@@ -1821,38 +1821,91 @@ def test_semdedup_verdict_consistency(spark):
     assert sum(r.n_dup_neighbors for r in rows) % 2 == 0
 
 
-def test_assign_join_matches_literal_assign(spark):
-    """The two nearest-centroid assignment strategies — literal
-    projection (small k, the pinned-oracle path) and broadcast-join
-    (k >= _JOIN_ASSIGN_MIN_K, the ns_semdedup_auto scale path) — must
-    be BIT-identical on the same centroids: same unrolled
-    left-associated double arithmetic, same (d2, j) tie-break. Run
-    both at a k on the join side of the flip and compare exactly."""
-    from .conftest import SF_ORACLE
+def test_assign_kernel_matches_duckdb(spark):
+    """The _assign kernel (every flat nearest-centroid consumer runs
+    through it) must reproduce the oracle's own kd1/ka1 fragment of
+    _km_sql_prefix — list_reduce distances ranked by ORDER BY d2, j —
+    with cl and d2 bit-equal. Degenerate frame first, spread over
+    more partitions than rows so some Arrow partitions are empty:
+    centroid 0 carries a NaN coordinate (a NaN distance must rank
+    after every number, inf included), centroids 2 and 3 are equal
+    (ties go to the smaller id), and the corpus holds an inner-NULL
+    row, a NULL embedding, a short row (all NULL distances: smallest
+    id, d2 NULL), an all-NaN row and an inf row. Then the sf0.01
+    corpus at the pinned k=8 and the auto-k geometry k=15."""
+    import os
+
+    import duckdb
+    import numpy as np
+    import pyarrow as pa
+
     from flume_hive_batched_sink_spark.operators.clustering import (
-        _JOIN_ASSIGN_MIN_K,
         _assign,
-        _assign_join,
+        _km_sql_prefix,
     )
     from flume_hive_batched_sink_spark.operators.registry import tbl
 
-    k = _JOIN_ASSIGN_MIN_K + 3
-    em = tbl(spark, SF_ORACLE, "embeddings", parallel=True)
-    cents = [
-        (j, [float(v) for v in row.embedding])
-        for j, row in enumerate(em.orderBy("vec_id").limit(k).collect())
-    ]
-    lit = {
-        r.vec_id: (r.cl, r.d2)
-        for r in _assign(em, cents).select("vec_id", "cl", "d2").collect()
-    }
-    jn = {
-        r.vec_id: (r.cl, r.d2)
-        for r in _assign_join(em, cents)
-        .select("vec_id", "cl", "d2")
-        .collect()
-    }
-    assert lit == jn  # exact: same cluster AND bit-equal distance
+    from .oracle_harness import duck_connection
+
+    def bits(d2):
+        return None if d2 is None else d2.hex()  # nan.hex() == "nan"
+
+    def duck(con, k):
+        sql = f"""WITH {_km_sql_prefix(str(k))}
+            SELECT a.vec_id, a.cl, d.d2
+            FROM ka1 a JOIN kd1 d ON d.vec_id = a.vec_id AND d.j = a.cl"""
+        return {(v, cl, bits(d2)) for v, cl, d2 in con.execute(sql).fetchall()}
+
+    def kernel(em, cents):
+        return {
+            (r.vec_id, r.cl, bits(r.d2))
+            for r in _assign(em, cents).select("vec_id", "cl", "d2").collect()
+        }
+
+    rng = np.random.default_rng(7)
+    embs = [[float(v) for v in rng.normal(size=64)] for _ in range(12)]
+    embs[0][5] = float("nan")
+    embs[3] = list(embs[2])
+    embs[6] = embs[6][:32]
+    embs[7][3] = None
+    embs[9] = None
+    embs[10] = [float("nan")] * 64
+    embs[11][0] = float("inf")
+    rows = list(enumerate(embs))
+    k = 4
+    cents = [(j, embs[j]) for j in range(k)]
+    em = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, len(rows) + 4),
+        "vec_id long, embedding array<double>",
+    )
+    con = duckdb.connect()
+    con.register(
+        "embeddings",
+        pa.table(
+            {
+                "vec_id": pa.array([v for v, _ in rows], pa.int64()),
+                "embedding": pa.array(
+                    [e for _, e in rows], pa.list_(pa.float64())
+                ),
+            }
+        ),
+    )
+    got, want = kernel(em, cents), duck(con, k)
+    assert got == want
+    by_id = {v: (cl, d2) for v, cl, d2 in got}
+    assert all(by_id[v] == (0, None) for v in (6, 7, 9))
+    assert by_id[10] == (0, "nan") and by_id[11] == (1, "inf")
+    assert by_id[2][0] == 2 and by_id[4][0] != 0
+
+    sf = os.path.join(os.path.dirname(SF_SMALL), "sf0.01")
+    con = duck_connection(sf)
+    em = tbl(spark, sf, "embeddings", parallel=True)
+    for k in (8, 15):
+        cents = [
+            (j, [float(v) for v in row.embedding])
+            for j, row in enumerate(em.orderBy("vec_id").limit(k).collect())
+        ]
+        assert kernel(em, cents) == duck(con, k), k
 
 
 def test_assign_hier_bounded_vs_flat(spark):
@@ -1869,8 +1922,8 @@ def test_assign_hier_bounded_vs_flat(spark):
     2-level tree, since super-cells barely separate)."""
     from .conftest import SF_ORACLE
     from flume_hive_batched_sink_spark.operators.clustering import (
+        _assign,
         _assign_hier,
-        _assign_join,
     )
     from flume_hive_batched_sink_spark.operators.registry import tbl
 
@@ -1882,9 +1935,7 @@ def test_assign_hier_bounded_vs_flat(spark):
     ]
     flat = {
         r.vec_id: (r.cl, r.d2)
-        for r in _assign_join(em, cents)
-        .select("vec_id", "cl", "d2")
-        .collect()
+        for r in _assign(em, cents).select("vec_id", "cl", "d2").collect()
     }
     hier = {
         r.vec_id: (r.cl, r.d2)
@@ -2043,32 +2094,11 @@ def test_semdedup_components_contract(spark):
     assert len(keep_ids) < len(comp)
 
 
-def test_unrolled_dot_knob_bit_parity(spark, monkeypatch):
-    """SPARK_GRAFT_UNROLLED_DOT=1 flips the physical dot-product
-    strategy (interpreted HOF fold → codegen'd unrolled chain) and
-    must NOT flip a single bit of output: decimal adds are exact so
-    _dot_dec's balanced tree equals the left fold, and _sqdiff_chain's
-    unroll keeps left association. Pin it on the two consumer shapes:
-    a decimal-dot similarity op and the literal-centroid kmeans."""
-    from .conftest import SF_ORACLE
-
-    def run(name):
-        return sorted(
-            tuple(r) for r in QUERIES[name](spark, SF_ORACLE).collect()
-        )
-
-    for name in ("ns_similarity_topk", "ns_cluster_kmeans"):
-        monkeypatch.delenv("SPARK_GRAFT_UNROLLED_DOT", raising=False)
-        off = run(name)
-        monkeypatch.setenv("SPARK_GRAFT_UNROLLED_DOT", "1")
-        on = run(name)
-        monkeypatch.delenv("SPARK_GRAFT_UNROLLED_DOT", raising=False)
-        assert off == on, name
-
-    # degenerate-array parity (r10 code review): equal-length-SHORT
-    # arrays must produce the fold's real sum on both strategies (the
-    # unrolled tree maps both-null tail terms to exact zeros), and a
-    # length-mismatched pair must poison to NULL on both
+def test_dot_dec_degenerate_arrays(spark):
+    """_dot_dec on degenerate arrays (r10 code review): equal-length
+    SHORT arrays give the real sum of their products, a
+    length-mismatched pair poisons to NULL, and an in-range NULL
+    element poisons to NULL."""
     from flume_hive_batched_sink_spark.operators.similarity import (
         _dot_dec,
     )
@@ -2083,14 +2113,10 @@ def test_unrolled_dot_knob_bit_parity(spark, monkeypatch):
         ],
         "a array<double>, b array<double>",
     )
-    def dots():
-        return [r[0] for r in df.select(_dot_dec(F.col("a"), F.col("b"))).collect()]
-    monkeypatch.delenv("SPARK_GRAFT_UNROLLED_DOT", raising=False)
-    off = dots()
-    monkeypatch.setenv("SPARK_GRAFT_UNROLLED_DOT", "1")
-    on = dots()
-    monkeypatch.delenv("SPARK_GRAFT_UNROLLED_DOT", raising=False)
-    assert off == on == [1.5 * 2.0 * 52, None, None]
+    dots = [
+        r[0] for r in df.select(_dot_dec(F.col("a"), F.col("b"))).collect()
+    ]
+    assert dots == [1.5 * 2.0 * 52, None, None]
 
 
 def test_semdedup_auto_k_derivation(spark):
