@@ -252,16 +252,10 @@ def _scan_split_estimate(spark: SparkSession, path: str) -> int:
         sizes = [os.path.getsize(path)]
     if not sizes:
         return 0
-    def _bytes(v: str) -> int:
-        v = v.strip().lower()
-        for suf, mul in (
-            ("kb", 1 << 10), ("mb", 1 << 20), ("gb", 1 << 30),
-            ("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30), ("b", 1),
-        ):
-            if v.endswith(suf):
-                return int(v[: -len(suf)]) * mul
-        return int(v)
-
+    # the JVM's own byte-string parser: every form Spark accepts
+    # ("1t", "1tb", "128m", plain bytes) parses as Spark parses it
+    java_utils = spark._jvm.org.apache.spark.network.util.JavaUtils
+    _bytes = java_utils.byteStringAsBytes
     conf = spark.conf
     max_pb = _bytes(
         conf.get("spark.sql.files.maxPartitionBytes", "134217728")

@@ -6,22 +6,31 @@ close/finalize path :349-407 + leader epilogue :177-227):
   register partition → upsert bookkeeping (name, logdate, hostname,
   counts) → leader checks completeness → mark CHECKED → REST notify.
 
-Spark form: ONE `foreachBatch` function. The micro-batch is
-checkpoint-bounded (exactly-once for idempotent writes — this
-structurally fixes the data-loss FIXME at HiveBatchedSink.scala:335,
-commit-before-flush); dynamic partition append replaces the writer
-pool + add_partition DDL; the bookkeeping upsert is a last-write-wins
-merge; the completeness check is the driver-side epilogue (the driver
-is always "leader" — ZK election collapses, SURVEY.md §3.4).
+Spark form: ONE `foreachBatch` function. Dynamic partition append
+replaces the writer pool + add_partition DDL; the bookkeeping upsert
+is a last-write-wins merge of appends; the completeness check is the
+driver-side epilogue (the driver is always "leader" — ZK election
+collapses, SURVEY.md §3.4), so the bookkeeping view the epilogue
+decides on lives on the driver too (one `_Book` per bookkeeping path)
+and is read back from disk only on restart and reconcile ticks.
+
+Guarantee: the micro-batch is checkpoint-bounded, so a batch is never
+skipped (this structurally fixes the data-loss FIXME at
+HiveBatchedSink.scala:335, commit-before-flush). The data write and
+the bookkeeping appends are NOT idempotent under replay: a batch_id
+replayed after a crash before its checkpoint commit lands its rows
+and adds its count a second time (ROADMAP item 2).
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+import threading
 from collections.abc import Callable
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import SinkConfig
@@ -48,24 +57,154 @@ def route_and_parse(df: DataFrame, cfg: SinkConfig) -> DataFrame:
     )
 
 
-def _apply_file_naming(data_path: str, cfg: SinkConfig) -> None:
+def _apply_file_naming(
+    spark: SparkSession,
+    data_path: str,
+    cfg: SinkConfig,
+    logdates: list[str | None],
+) -> None:
     """Rename committed part files to `<prefix>part-...<suffix>`
-    (Config.scala:25-27). Driver-side but bounded: one os.rename per
-    newly committed file (file count per batch is bounded by
-    `repartition(partition_col)` × maxRecordsPerFile). Idempotent —
-    already-renamed files no longer match the `part-` pattern (or
-    already carry the suffix) and are skipped, so append batches
-    never double-rename."""
+    (Config.scala:25-27). Driver-side and bounded: it walks only the
+    partition directories of the logdates this batch wrote (their
+    names escaped by Spark's own ExternalCatalogUtils), never the
+    whole table. Idempotent — already-renamed files no longer match
+    the `part-` pattern (or already carry the suffix) and are
+    skipped, so append batches never double-rename."""
     if not cfg.file_name_prefix and not cfg.file_name_suffix:
         return
-    for root, _dirs, files in os.walk(data_path):
-        for name in files:
+    catalog = spark._jvm.org.apache.spark.sql.catalyst.catalog
+    part_dir = catalog.ExternalCatalogUtils.getPartitionPathString
+    for logdate in logdates:
+        root = os.path.join(data_path, part_dir(cfg.partition_col, logdate))
+        for name in os.listdir(root):
             if not name.startswith("part-") or name.endswith(".crc"):
                 continue
             if cfg.file_name_suffix and name.endswith(cfg.file_name_suffix):
                 continue
             new = f"{cfg.file_name_prefix}{name}{cfg.file_name_suffix}"
             os.rename(os.path.join(root, name), os.path.join(root, new))
+
+
+def _book_path(cfg: SinkConfig) -> str:
+    return os.path.join(cfg.output_path, f"{cfg.table}__bookkeeping")
+
+
+def _window_end(cfg: SinkConfig) -> Column:
+    """End instant (epoch µs) of the bucket window a logdate names.
+    logdate is a LOCAL wall time (cfg.timezone); shift back to the
+    true instant before adding the bucket width."""
+    return F.unix_micros(
+        F.to_utc_timestamp(
+            F.to_timestamp(F.col(cfg.partition_col), cfg.partition_format),
+            cfg.timezone,
+        )
+        + F.expr(f"INTERVAL {cfg.round_seconds} SECOND")
+    )
+
+
+def _micros(ts: Column) -> Column:
+    """Epoch µs of an event time. A TIMESTAMP_NTZ reads in the session
+    time zone, as Spark reads it when comparing it with a window end."""
+    return F.unix_micros(ts.cast("timestamp"))
+
+
+class _Row(NamedTuple):
+    """One bookkeeping row; the first five fields are the on-disk
+    schema (updatetime as epoch µs, see _micros), `window_end` is
+    derived."""
+
+    logdate: str | None
+    sinkcount: int
+    updatetime: int | None
+    batch_id: int
+    state: str
+    window_end: int | None
+
+
+class _Book:
+    """Driver-resident bookkeeping of one table: the last-write-wins
+    view of its appends (logdate → _Row, what `lww_bookkeeping` reads
+    back) and the high-water event time `wm` — the max updatetime over
+    the RAW appends, which is monotone by construction (the lww view
+    is not: a late row for the logdate holding the max replaces that
+    logdate's updatetime with a smaller value). `rows is None` until
+    loaded; every read and write holds `lock`, so the stream's
+    foreachBatch and a reconcile_timer thread never interleave.
+    `ts_type` is the on-disk type of updatetime: the type of the
+    stream's event time (timestamp or timestamp_ntz)."""
+
+    def __init__(self) -> None:
+        self.lock = threading.Lock()
+        self.rows: dict[str | None, _Row] | None = None
+        self.wm: int | None = None
+        self.ts_type = "timestamp"
+
+    def load(self, spark: SparkSession, cfg: SinkConfig) -> None:
+        """Rebuild from the durable appends (restart / reconcile
+        ticks). No bookkeeping on disk → empty, with no Spark job."""
+        from pyspark.errors import AnalysisException
+
+        self.rows = None  # stays unloaded if a read below raises
+        if not os.path.isdir(_book_path(cfg)):
+            return self.reset()
+        try:
+            raw = spark.read.parquet(_book_path(cfg))
+        except AnalysisException:  # directory without appends
+            return self.reset()
+        view = lww_bookkeeping(raw, cfg).select(
+            cfg.partition_col,
+            "sinkcount",
+            _micros(F.col("updatetime")),
+            "batch_id",
+            "state",
+            _window_end(cfg),
+        )
+        rows = {r[0]: _Row(*r) for r in view.collect()}
+        self.wm = raw.agg(_micros(F.max("updatetime"))).first()[0]
+        self.ts_type = raw.schema["updatetime"].dataType.simpleString()
+        self.rows = rows
+
+    def reset(self) -> None:
+        """A fresh stream: its appends start from nothing."""
+        self.rows, self.wm = {}, None
+
+
+# One view per bookkeeping directory in this process, keyed by its
+# absolute path: the view mirrors that directory, and the driver is
+# its only writer (the leader), so every caller landing or
+# reconciling a table must share the one view and its lock.
+_BOOKS: dict[str, _Book] = {}
+_BOOKS_LOCK = threading.Lock()
+
+
+def _book(cfg: SinkConfig) -> _Book:
+    with _BOOKS_LOCK:
+        return _BOOKS.setdefault(os.path.abspath(_book_path(cfg)), _Book())
+
+
+def _append(
+    spark: SparkSession, cfg: SinkConfig, rows: list[_Row], ts_type: str
+) -> None:
+    """One bookkeeping append, JVM-local: a pandas frame under the
+    session's Arrow setting plans a LocalRelation (a Python list
+    would plan a LogicalRDD and start Python workers)."""
+    import pandas as pd
+
+    pdf = pd.DataFrame(
+        [r[:5] for r in rows],
+        columns=[cfg.partition_col, "sinkcount", "updatetime", "batch_id",
+                 "state"],
+    ).astype({"sinkcount": "int64", "updatetime": "Int64",
+              "batch_id": "int32"})
+    df = spark.createDataFrame(
+        pdf,
+        f"`{cfg.partition_col}` string, sinkcount bigint, "
+        "updatetime bigint, batch_id int, state string",
+    ).withColumn(
+        "updatetime", F.timestamp_micros("updatetime").cast(ts_type)
+    )
+    capture_batch_plan(df, f"land_batch:{cfg.table}")
+    df.write.mode("append").parquet(_book_path(cfg))
 
 
 def land_batch(
@@ -78,17 +217,22 @@ def land_batch(
 
     1. route+parse, 2. partitioned columnar append (partition
     registration is implicit in the directory layout / would be
-    `saveAsTable` against a real metastore), 3. bookkeeping upsert,
-    4. completeness epilogue (A17/A18/A23/A24): logdates whose
-    bucket-window has fully elapsed by this batch's max event time
-    are 'CHECKED' and reported via the `on_complete` callback (the
-    reference's REST POST, DTEUtils.scala:23-33).
-    """
+    `saveAsTable` against a real metastore), 3. one small collect of
+    this batch's per-logdate counts, 4. bookkeeping upsert +
+    completeness epilogue (A17/A18/A20/A23/A24, `_epilogue`): logdates
+    whose bucket-window has fully elapsed by the high-water event
+    time are 'CHECKED' and reported via the `on_complete` callback
+    (the reference's REST POST, DTEUtils.scala:23-33).
+
+    A logdate's `sinkcount` is cumulative: the count the bookkeeping
+    already holds plus this batch's rows (the reference's counter
+    map, SURVEY.md §3.3). Replaying a batch_id adds its rows again —
+    idempotence under replay is not provided (module docstring)."""
     spark = batch_df.sparkSession
     routed = route_and_parse(batch_df, cfg).persist()
     try:
         # plan audit (scripts/plan_sweep.py): foreachBatch pipelines
-        # are invisible to explainInternal, so record the batch plan
+        # are invisible to explainInternal, so record the batch plans
         capture_batch_plan(routed, f"land_batch:{cfg.table}")
         data_path = os.path.join(cfg.output_path, cfg.table)
         (
@@ -99,145 +243,124 @@ def land_batch(
             .format(cfg.file_format)
             .save(data_path)
         )
-        _apply_file_naming(data_path, cfg)
-
-        # bookkeeping upsert (A20): per (logdate, host-bucket) counts
-        book_path = os.path.join(cfg.output_path, f"{cfg.table}__bookkeeping")
-        batch_counts = (
+        counts = (
             routed.groupBy(cfg.partition_col)
             .agg(
-                F.count("*").alias("sinkcount"),
-                F.max("ts").alias("updatetime"),
+                F.count("*").alias("n"),
+                _micros(F.max("ts")).alias("updatetime"),
             )
-            .withColumn("batch_id", F.lit(batch_id))
-            .withColumn("state", F.lit("NEW"))
+            .withColumn("window_end", _window_end(cfg))
         )
-        capture_batch_plan(batch_counts, f"land_batch:{cfg.table}")
-        batch_counts.write.mode("append").parquet(book_path)
-
-        # completeness epilogue (A17/A18/A24): scan BOOKKEEPING for
-        # every not-yet-NOTIFIED logdate whose window end has passed
-        # the high-water event time, mark those CHECKED, notify, then
-        # mark NOTIFIED — the reference's leader loop
-        # (getFinishedLogdateList → updateCheckedState → REST,
-        # HiveBatchedSink.scala:205-227) plus a durable notified
-        # state the reference lacks. The loop re-checks ALL open
-        # logdates every tick, not just the current batch's:
-        # batch-local checking would never finalize a logdate whose
-        # window closes during a batch carrying none of its rows
-        # (caught by the r10 notifier integration test).
-        #
-        # Crash-safety (r11 verdict #5): states advance NEW → CHECKED
-        # → NOTIFIED as separate durable appends. CHECKED is written
-        # BEFORE on_complete fires (updateCheckedState-then-POST, the
-        # reference's own order, HiveBatchedSink.scala:216-227);
-        # NOTIFIED is written only AFTER on_complete returns. A crash
-        # between the CHECKED append and the POST leaves the logdate
-        # CHECKED-but-unnotified, and because the epilogue's scan
-        # includes CHECKED rows, the next tick after restart
-        # reconciles it — re-notifying instead of silently losing the
-        # notification. A crash between the POST and the NOTIFIED
-        # append re-notifies on restart, so the cross-crash guarantee
-        # is AT-LEAST-ONCE (the at-most-once window the pre-r12 code
-        # documented is closed). Within one uncrashed run NOTIFIED
-        # filters a logdate out, so notification stays once-per-
-        # logdate; a LATE row flips it back to NEW (higher batch_id
-        # wins) and it re-notifies when it re-finalizes — the same
-        # late-data replay path as before. RestNotifier swallows
-        # HTTP-level failures (recorded in .failed, DTEUtils.scala:
-        # 29-32 semantics), so an unreachable endpoint still advances
-        # to NOTIFIED — the durable state tracks crashes, not HTTP.
-        if on_complete is not None:
-            _completeness_epilogue(
-                spark, cfg, on_complete, batch_id, book_path
-            )
+        capture_batch_plan(counts, f"land_batch:{cfg.table}")
+        counts = counts.collect()
     finally:
         routed.unpersist()
+    _apply_file_naming(spark, data_path, cfg, [r[0] for r in counts])
+
+    book = _book(cfg)
+    with book.lock:
+        if book.rows is None:
+            book.load(spark, cfg)
+        book.ts_type = batch_df.schema["ts"].dataType.simpleString()
+        new = [
+            _Row(
+                ld,
+                (book.rows[ld].sinkcount if ld in book.rows else 0) + n,
+                ut,
+                batch_id,
+                "NEW",
+                we,
+            )
+            for ld, n, ut, we in counts
+        ]
+        _epilogue(spark, cfg, book, batch_id, new, on_complete)
 
 
-def _completeness_epilogue(
+def _epilogue(
     spark: SparkSession,
     cfg: SinkConfig,
-    on_complete: Callable[[list[str]], None],
+    book: _Book,
     batch_id: int,
-    book_path: str,
+    new: list[_Row],
+    on_complete: Callable[[list[str]], None] | None,
 ) -> list[str]:
-    """One completeness tick over the durable bookkeeping: find every
+    """One bookkeeping tick (caller holds `book.lock`): append this
+    batch's NEW rows, then — with an `on_complete` — find every
     not-yet-NOTIFIED logdate whose window end has passed the raw
-    high-water event time, mark CHECKED, notify, mark NOTIFIED.
-    Shared by the per-batch epilogue (land_batch) and the startup
-    reconcile (reconcile_notifications) so the two paths cannot
+    high-water event time, mark it CHECKED, notify, mark NOTIFIED.
+    The per-batch path (land_batch) and the startup / timer reconcile
+    (reconcile_notifications, `new=[]`) share it, so the paths cannot
     drift. Returns the notified logdates.
 
-    ONE raw bookkeeping read serves both inputs (review pass 2: the
-    lww view re-read the same parquet): the high-water event time
-    comes from the RAW appends — monotone by construction; the
-    last-write-wins view would NOT be safe for it (a late row for the
-    logdate holding the global max replaces that logdate's updatetime
-    with a smaller value — with bucket-aligned logdates the
-    regression happens to stay above every earlier window end, but
-    the raw max removes the subtlety instead of relying on it)."""
-    raw_book = spark.read.parquet(book_path)
-    book = lww_bookkeeping(raw_book, cfg)
-    wm = raw_book.agg(F.max("updatetime")).collect()[0][0]
-    finished = (
-        book.filter(F.col("state") != "NOTIFIED")
-        .withColumn(
-            # logdate is a LOCAL wall time (cfg.timezone);
-            # shift back to the true instant before comparing
-            # against the high-water event time.
-            "window_end",
-            F.to_utc_timestamp(
-                F.to_timestamp(
-                    F.col(cfg.partition_col), cfg.partition_format
-                ),
-                cfg.timezone,
-            )
-            + F.expr(f"INTERVAL {cfg.round_seconds} SECOND"),
-        )
-        .filter(F.col("window_end") <= F.lit(wm))
-    ) if wm is not None else None
-    if finished is not None:
-        capture_batch_plan(finished, f"land_batch:{cfg.table}")
-    rows = finished.collect() if finished is not None else []
-    if not rows:
+    The loop re-checks ALL open logdates every tick, not just the
+    current batch's: batch-local checking would never finalize a
+    logdate whose window closes during a batch carrying none of its
+    rows (caught by the r10 notifier integration test). This is the
+    reference's leader loop (getFinishedLogdateList →
+    updateCheckedState → REST, HiveBatchedSink.scala:205-227) plus a
+    durable notified state the reference lacks.
+
+    Crash-safety (r11 verdict #5): states advance NEW → CHECKED →
+    NOTIFIED as durable appends. NEW and CHECKED rows go in ONE
+    append BEFORE on_complete fires (updateCheckedState-then-POST,
+    the reference's own order, HiveBatchedSink.scala:216-227);
+    NOTIFIED is appended only AFTER on_complete returns. The driver
+    view advances only after each append succeeded, so it never runs
+    ahead of the disk. A crash between the CHECKED append and the
+    POST leaves the logdate CHECKED-but-unnotified, and because the
+    check includes CHECKED rows, the next tick after restart
+    reconciles it — re-notifying instead of silently losing the
+    notification. A crash between the POST and the NOTIFIED append
+    re-notifies on restart, so the cross-crash guarantee is
+    AT-LEAST-ONCE. Within one uncrashed run NOTIFIED filters a
+    logdate out, so notification stays once-per-logdate; a LATE row
+    flips it back to NEW (higher batch_id wins) and it re-notifies
+    when it re-finalizes. Marks carry the tick's batch_id, so
+    lww_bookkeeping's same-batch ranking (NOTIFIED > CHECKED > NEW)
+    advances the logdate without outranking later batches.
+    RestNotifier swallows HTTP-level failures (recorded in .failed,
+    DTEUtils.scala:29-32 semantics), so an unreachable endpoint still
+    advances to NOTIFIED — the durable state tracks crashes, not
+    HTTP."""
+    rows = {**book.rows, **{r.logdate: r for r in new}}
+    wm = max(
+        (t for t in (book.wm, *(r.updatetime for r in new)) if t is not None),
+        default=None,
+    )
+    finished = sorted(
+        ld
+        for ld, r in rows.items()
+        if on_complete is not None
+        and wm is not None
+        and r.state != "NOTIFIED"
+        and r.window_end is not None
+        and r.window_end <= wm
+    )
+
+    def mark(state: str, logdates: list[str]) -> list[_Row]:
+        return [
+            rows[ld]._replace(batch_id=batch_id, state=state)
+            for ld in logdates
+        ]
+
+    # Rows already CHECKED here are the reconcile path (a prior tick
+    # crashed between its CHECKED append and the POST).
+    first = new + mark(
+        "CHECKED", [ld for ld in finished if rows[ld].state != "CHECKED"]
+    )
+    if first:
+        _append(spark, cfg, first, book.ts_type)
+    rows.update((r.logdate, r) for r in first)
+    book.rows, book.wm = rows, wm
+    if not finished:
         return []
-
-    def _mark(state: str, marked) -> None:
-        spark.createDataFrame(
-            [
-                (
-                    r[cfg.partition_col],
-                    r["sinkcount"],
-                    r["updatetime"],
-                    batch_id,
-                    state,
-                )
-                for r in marked
-            ],
-            raw_book.select(
-                cfg.partition_col,
-                "sinkcount",
-                "updatetime",
-                "batch_id",
-                "state",
-            ).schema,
-        ).write.mode("append").parquet(book_path)
-
-    # A18: mark CHECKED before notifying (the reference's
-    # order); same batch_id — lww_bookkeeping breaks the
-    # tie by state rank within a batch. Rows already
-    # CHECKED here are the restart-reconcile path (a prior
-    # run crashed between its CHECKED append and POST).
-    to_check = [r for r in rows if r["state"] != "CHECKED"]
-    if to_check:
-        _mark("CHECKED", to_check)
-    notified = sorted(r[cfg.partition_col] for r in rows)
-    on_complete(notified)
-    # NOTIFIED only after on_complete returned: a crash
-    # anywhere above re-notifies on restart (at-least-once)
-    _mark("NOTIFIED", rows)
-    return notified
+    on_complete(finished)
+    # NOTIFIED only after on_complete returned: a crash anywhere
+    # above re-notifies on restart (at-least-once)
+    notified = mark("NOTIFIED", finished)
+    _append(spark, cfg, notified, book.ts_type)
+    rows.update((r.logdate, r) for r in notified)
+    return finished
 
 
 def reconcile_notifications(
@@ -253,23 +376,16 @@ def reconcile_notifications(
     stream startup (run_landing_stream does, on its restart path)
     to deliver it immediately, independent of new data.
 
-    The marks append under the current max batch_id so the lww view's
-    same-batch state ranking (NOTIFIED > CHECKED > NEW) advances the
-    logdate without outranking genuinely-later batches. No
-    bookkeeping on disk → nothing to reconcile → []."""
-    from pyspark.errors import AnalysisException
-
-    book_path = os.path.join(cfg.output_path, f"{cfg.table}__bookkeeping")
-    try:
-        raw_book = spark.read.parquet(book_path)
-        max_bid = raw_book.agg(F.max("batch_id")).collect()[0][0]
-    except AnalysisException:  # no bookkeeping on disk → nothing owed
-        return []
-    if max_bid is None:
-        return []
-    return _completeness_epilogue(
-        spark, cfg, on_complete, int(max_bid), book_path
-    )
+    Reloads the driver view from disk first, then runs one epilogue
+    tick whose marks carry the current max batch_id. No bookkeeping
+    on disk → nothing to reconcile → []."""
+    book = _book(cfg)
+    with book.lock:
+        book.load(spark, cfg)
+        if not book.rows:
+            return []
+        max_bid = max(r.batch_id for r in book.rows.values())
+        return _epilogue(spark, cfg, book, max_bid, [], on_complete)
 
 
 def lww_bookkeeping(raw: DataFrame, cfg: SinkConfig) -> DataFrame:
@@ -297,8 +413,7 @@ def lww_bookkeeping(raw: DataFrame, cfg: SinkConfig) -> DataFrame:
 
 def read_bookkeeping(spark: SparkSession, cfg: SinkConfig) -> DataFrame:
     """Current bookkeeping state from disk (see lww_bookkeeping)."""
-    book_path = os.path.join(cfg.output_path, f"{cfg.table}__bookkeeping")
-    return lww_bookkeeping(spark.read.parquet(book_path), cfg)
+    return lww_bookkeeping(spark.read.parquet(_book_path(cfg)), cfg)
 
 
 def reconcile_timer(
@@ -316,13 +431,11 @@ def reconcile_timer(
     daemon thread re-runs reconcile_notifications every `interval_s`
     — the Spark analog of the reference's leader-side timer loop
     (HiveBatchedSink.scala:205-227 runs getFinishedLogdateList on a
-    schedule, not per event). Driver-side bookkeeping reads only;
-    delivery stays at-least-once and once-per-logdate via the same
-    durable CHECKED/NOTIFIED marks. Returns a zero-arg stopper; the
-    availableNow one-shot paths don't need it (they reconcile at
-    startup and tick per batch)."""
-    import threading
-
+    schedule, not per event). Each tick reloads the driver view from
+    disk under the view's lock; delivery stays at-least-once and
+    once-per-logdate via the same durable CHECKED/NOTIFIED marks.
+    Returns a zero-arg stopper; the availableNow one-shot paths don't
+    need it (they reconcile at startup and tick per batch)."""
     stop = threading.Event()
 
     def loop() -> None:
@@ -361,26 +474,31 @@ def run_landing_stream(
     reference's DTE notification, HiveBatchedSink.scala:205-227).
 
     `fresh=True` (the harness default) wipes table + bookkeeping +
-    checkpoint and starts a new generation. `fresh=False` is the
-    RESTART path: prior state is kept, and one reconcile pass runs
-    BEFORE the stream starts so a notification lost to a crash
-    between the CHECKED append and the POST is re-delivered even if
-    no new data ever arrives (the per-batch epilogue alone only
-    reconciles on data-bearing batches — r12 advice)."""
+    checkpoint and starts a new generation with an empty driver view
+    (no disk read). `fresh=False` is the RESTART path: prior state is
+    kept and the driver view is reloaded from disk; with a notifier,
+    one reconcile pass runs BEFORE the stream starts so a
+    notification lost to a crash between the CHECKED append and the
+    POST is re-delivered even if no new data ever arrives (the
+    per-batch epilogue alone only reconciles on data-bearing batches
+    — r12 advice)."""
     if on_complete is None and cfg.notify_url:
         from .notify import rest_notifier
 
         on_complete = rest_notifier(cfg.notify_url, cfg.notify_logid)
+    book = _book(cfg)
     if fresh:
         shutil.rmtree(
             os.path.join(cfg.output_path, cfg.table), ignore_errors=True
         )
-        shutil.rmtree(
-            os.path.join(cfg.output_path, f"{cfg.table}__bookkeeping"),
-            ignore_errors=True,
-        )
+        shutil.rmtree(_book_path(cfg), ignore_errors=True)
+        with book.lock:
+            book.reset()
     elif on_complete is not None:
         reconcile_notifications(spark, cfg, on_complete)
+    else:
+        with book.lock:
+            book.load(spark, cfg)
     ckpt = os.path.join(SCRATCH, "checkpoints", f"land_{cfg.table}")
     if fresh:
         shutil.rmtree(ckpt, ignore_errors=True)

@@ -41,14 +41,14 @@ _STAGE_CACHE: dict[str, tuple[str, object]] = {}
 # writeStream sites) and every foreachBatch body records the plan
 # text it actually ran here, and the sweep diffs this dict around
 # each operator invocation. Keys are query/stage names; values are
-# BOUNDED lists of recent plan dumps — land_batch captures up to 3
+# BOUNDED lists of recent plan dumps — land_batch captures up to 4
 # plans per micro-batch on the PRODUCTION landing path, so an
 # unbounded buffer would grow driver memory monotonically on a
 # long-running stream (r10 code review). The cap must exceed what one
-# sweep invocation pushes: the landing replay is 3 micro-batches x 3
-# captures (routed, batch_counts, finished) = 9 under ONE key, so 16
-# leaves headroom — the sweep's around-the-call diff never loses
-# entries (a second review pass caught 8 < 9).
+# sweep invocation pushes: the landing replay is 3 micro-batches x at
+# most 4 captures (routed, the counts collect, the NEW/CHECKED
+# append, the NOTIFIED append) = 12 under ONE key, so 16 leaves
+# headroom — the sweep's around-the-call diff never loses entries.
 LAST_PLANS: dict[str, list[str]] = {}
 _PLAN_BUF = 16
 

@@ -310,8 +310,10 @@ def test_count_min_error_bound(spark):
 
 def test_landing_file_naming(spark, tmp_path):
     """Config.scala:25-27 fileNamePrefix/fileSuffix: landed part
-    files carry the configured prefix/suffix, and the renamed files
-    read back with no row loss."""
+    files of every micro-batch carry the configured prefix/suffix
+    exactly once (a later batch neither misses its own files nor
+    re-renames earlier ones), and the renamed files read back with no
+    row loss."""
     import os
 
     from flume_hive_batched_sink_spark.catalog import load_table
@@ -319,8 +321,14 @@ def test_landing_file_naming(spark, tmp_path):
     from flume_hive_batched_sink_spark.streaming.land import run_landing_stream
     from flume_hive_batched_sink_spark.streaming.stage import stage_chunks
 
-    ev = load_table(spark, SF_SMALL, "events").limit(300)
-    staged, schema = stage_chunks("naming", [ev])
+    ev = load_table(spark, SF_SMALL, "events").limit(300).cache()
+    # two micro-batches, the second landing in partition directories
+    # that already hold the first one's renamed files
+    staged, schema = stage_chunks(
+        "naming",
+        [ev.filter("event_id % 2 = 0"), ev.filter("event_id % 2 = 1")],
+    )
+    ev.unpersist()
     cfg = SinkConfig(
         table="events_named",
         output_path=str(tmp_path),
@@ -338,9 +346,17 @@ def test_landing_file_naming(spark, tmp_path):
         if not f.startswith((".", "_"))
     ]
     assert files
+    # prefix and suffix exactly once on every file of both batches
     assert all(
-        f.startswith("flume.part-") and f.endswith(".data") for f in files
+        f.startswith("flume.part-")
+        and f.endswith(".data")
+        and f.count("flume.") == 1
+        and f.count(".data") == 1
+        for f in files
     ), files
+    # both batches' files are there: Spark names a write job's part
+    # files part-<n>-<job uuid>
+    assert len({f.split("-", 2)[2][:36] for f in files}) == 2, files
     assert spark.read.parquet(table_dir).count() == 300
 
 
@@ -3573,7 +3589,7 @@ def test_plan_buffer_survives_repeat_invocations(spark):
     p2, c2 = run_once()
     assert p1 == p2  # same replay → same capture count
     assert c2 == c1 + p2  # counter is monotonic across invocations
-    # the scenario must actually wrap the buffer (9+9 > 16 today) —
+    # the scenario must actually wrap the buffer (12+12 > 16 today) —
     # a pre-call-length diff would have dropped the earliest captures
     assert c2 > stage._PLAN_BUF
     # the buffer itself is bounded — the counter is what preserved
@@ -4068,6 +4084,8 @@ def test_ivfpq_large_probe_batch_join_path(spark, monkeypatch):
     dispatch and stays bounded, (b) the join path's rows are
     BIT-IDENTICAL to the CASE path's (same doubles, same fold), and
     (c) the join is a BroadcastHashJoin, never a nested loop."""
+    import re
+
     from flume_hive_batched_sink_spark.operators import clustering as cl
     from flume_hive_batched_sink_spark.operators.registry import tbl
     from flume_hive_batched_sink_spark.operators.similarity import (
@@ -4096,16 +4114,13 @@ def test_ivfpq_large_probe_batch_join_path(spark, monkeypatch):
     monkeypatch.setattr(cl, "_IVFPQ_CASE_MAX_PROBES", 10_000)
     case = cl.ivfpq_topk(em, cent, probe_ids)
     plan_case = case._jdf.queryExecution().executedPlan().toString()
-    # the CASE plan text grows ~linearly with |probes| (100 arms of
-    # M·K literals); the join plan stays a small constant multiple
-    # the two plans share the (large, |probes|-independent) literal
-    # text of the row-local coarse assignment (r15 _ivf_assigned), so
-    # compare the probe-dependent DELTA, not a blanket ratio: the
-    # 100-arm CASE carries ~100·M·K double literals the join plan
-    # does not.
-    assert len(plan_case) - len(plan_join) > 50_000, (
-        f"join plan {len(plan_join)} not ≪ case plan {len(plan_case)}"
-    )
+    # the CASE dispatch node is one CaseWhen with one `s.probe_id =
+    # <id>` arm (and its M·K literals) per probe: the literal plan
+    # carries exactly one arm per probe, the join plan none at all
+    # (its tables ride the broadcast probe table instead)
+    arm = re.compile(r"WHEN \(s#\d+\.probe_id = (\d+)\) THEN")
+    assert sorted(int(p) for p in arm.findall(plan_case)) == probe_ids
+    assert not arm.search(plan_join)
     rows_case = sorted(
         (r.probe_id, r.neighbor_id, r.adc_d2, r.rank)
         for r in case.collect()
@@ -5590,6 +5605,34 @@ def test_tbl_metadata_cache_identity_and_invalidation(spark):
         c = tbl(spark, tmp, "documents")
         assert c is not a  # mtime fingerprint invalidates
         assert c.count() == a.count()
+
+
+def test_tbl_accepts_every_spark_byte_string(spark):
+    """Byte confs the engine does not set itself parse the way Spark
+    parses them: a session with `spark.sql.files.maxPartitionBytes=1t`
+    (or openCostInBytes in `tb` form) must not crash tbl(), and the
+    split estimate must still match the RDD probe under it."""
+    import os
+
+    from flume_hive_batched_sink_spark.operators.registry import (
+        _scan_split_estimate,
+        tbl,
+    )
+
+    for max_pb, open_cost in (("1t", "4mb"), ("128m", "1tb")):
+        scoped = spark.newSession()  # fresh tbl() cache, own conf
+        scoped.conf.set("spark.sql.files.maxPartitionBytes", max_pb)
+        scoped.conf.set("spark.sql.files.openCostInBytes", open_cost)
+        for sf_dir in (SF_SMALL, "/root/testdata/sf0.01"):
+            df = tbl(scoped, sf_dir, "events", parallel=True)
+            assert df.count() > 0
+            path = os.path.join(sf_dir, "events.parquet")
+            probe = scoped.read.parquet(path).rdd.getNumPartitions()
+            assert _scan_split_estimate(scoped, path) == probe, (
+                max_pb,
+                open_cost,
+                sf_dir,
+            )
 
 
 def test_scan_split_estimate_matches_rdd_probe(spark):
