@@ -38,20 +38,39 @@ TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+def data_files(path: str) -> list[str]:
+    """The data files of a table path, in sorted order: the path
+    itself when it is a file; under a directory (a partitioned table,
+    e.g. a landed one) every file of a sorted walk that skips what
+    Spark's file index skips — names starting with `.` (checksum
+    siblings) or `_` (`_SUCCESS`, `_temporary`), unless a `_` name
+    holds `=` (a partition directory)."""
+    if not os.path.isdir(path):
+        return [path]
+
+    def hidden(n: str) -> bool:
+        return n.startswith(".") or (n.startswith("_") and "=" not in n)
+
+    out = []
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not hidden(d))
+        out.extend(
+            os.path.join(root, f) for f in sorted(files) if not hidden(f)
+        )
+    return out
+
+
 @lru_cache(maxsize=256)
 def _nanos_ts_columns(path: str) -> tuple[str, ...]:
-    """Column names stored as timestamp[ns] in the parquet footer."""
+    """Column names stored as timestamp[ns] in the parquet footer of
+    the table's first data file."""
     import pyarrow.parquet as pq
     import pyarrow.types as pt
 
-    first = path
-    if os.path.isdir(path):
-        parts = sorted(
-            f for f in os.listdir(path) if f.endswith(".parquet")
-        )
-        if parts:
-            first = os.path.join(path, parts[0])
-    schema = pq.read_schema(first)
+    files = data_files(path)
+    if not files:
+        return ()
+    schema = pq.read_schema(files[0])
     return tuple(
         f.name
         for f in schema

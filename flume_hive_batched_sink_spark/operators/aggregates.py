@@ -23,7 +23,15 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from .filters import DETAIL_SQL, detail
-from .registry import davg, dsum, query, sql_davg, sql_dsum, tbl
+from .registry import (
+    davg,
+    dsum,
+    local_frame,
+    query,
+    sql_davg,
+    sql_dsum,
+    tbl,
+)
 
 
 @query(
@@ -644,7 +652,8 @@ def agg_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = []
     for t, u, est, true, n_rows in count_min_probe_rows(spark, sf_dir):
         out.append((t, u, true, n_rows, true <= est <= true + cms_margin(n_rows)))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         out,
         "event_type string, user_id bigint, true_count bigint,"
         " group_rows bigint, cms_ok boolean",

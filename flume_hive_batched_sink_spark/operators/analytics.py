@@ -28,6 +28,7 @@ from pyspark.sql.window import Window as W
 from .registry import (
     davg,
     dsum,
+    local_frame,
     persist_evicting,
     query,
     sql_dsum,
@@ -194,7 +195,7 @@ def agg_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
         # empty table → zero rows; groups present but every value
         # NULL → one row per group with NULL percentiles (both match
         # the builtin and the oracle)
-        return spark.createDataFrame(null_rows, out_schema)
+        return local_frame(spark, null_rows, out_schema)
     li = src.filter(F.col("l_orderkey").isNotNull())
     width = max(1, (hi - lo) // _PCT_BUCKETS + 1)
     bucket = ((F.col("l_orderkey") - lo) / width).cast("bigint")
@@ -268,7 +269,7 @@ def agg_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
         # groups whose values are all NULL (known from the collect
         # above) surface as literal rows with NULL percentiles
         result = result.unionByName(
-            spark.createDataFrame(null_rows, out_schema)
+            local_frame(spark, null_rows, out_schema)
         )
     return result
 

@@ -32,11 +32,13 @@ Scale shape: the corpus collapses to the WORD FREQUENCY table in one
 hash aggregate (Zipf: |distinct words| ≪ corpus tokens — this is why
 BPE trainers run on word counts, not raw text), and every round after
 that touches only the word table: an explode + keyed count
-(map-side combined) for the pair statistics, one TakeOrdered-1 for
-the winner, a row-local literal replace for the merge. The two
-1-row/1-scalar collects per round are the Lloyd-loop pattern
-(bounded driver coordination, never data). At 30k production merges,
-localCheckpoint the word table every ~100 rounds to cap lineage.
+(map-side combined) for the pair statistics, ONE global aggregate
+over it for the winner and the pair-type count, a row-local literal
+replace for the merge, and the symbol-count aggregate. Those are the
+round's two driver actions, each a 1-row collect — the Lloyd-loop
+pattern (bounded driver coordination, never data); the pair table is
+never persisted. At 30k production merges, localCheckpoint the word
+table every ~100 rounds to cap lineage.
 """
 
 from __future__ import annotations
@@ -44,7 +46,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .registry import query, tbl
+from .registry import local_frame, query, tbl
 
 _BPE_ROUNDS = 2  # fixed oracle geometry; production loops to ~30k
 
@@ -101,10 +103,15 @@ def bpe_train(
     tokenizer state ns_bpe_encode applies) and `stats` is one tuple
     per round: (round, merge_left, merge_right, pair_count,
     n_pair_types, n_symbols_after). Driver coordination is bounded:
-    per round one 1-row top-pair collect and one 2-scalar metrics
-    aggregate — the kmeans Lloyd-loop shape. Stops cleanly when no
-    adjacent pairs remain (merge exhaustion — reachable long before a
-    production 30k-merge target on small vocabularies).
+    per round exactly two actions, each a 1-row collect — one
+    aggregate over the pair counts (count(*) for n_pair_types,
+    min(struct(-c, l, r)) for the winner: the first row of the
+    `c DESC, l, r` order) and the symbol-count aggregate after the
+    merge — the kmeans Lloyd-loop shape. The pair-count table is never
+    persisted: that aggregate is its one consumer. Stops cleanly when
+    no adjacent pairs remain (merge exhaustion, n_pair_types == 0 —
+    reachable long before a production 30k-merge target on small
+    vocabularies).
 
     `checkpoint_every`: localCheckpoint the sequence table every N
     merge rounds (0 disables). Each round stacks one replace()
@@ -130,10 +137,9 @@ def bpe_train(
     from .registry import persist_evicting
 
     # Persist the INITIAL vocabulary within the invocation (guide
-    # §5): every round issues 3 actions (top-pair collect, pair-type
-    # count, symbol metric) and each one re-ran the word-frequency
-    # scan+explode+aggregate from parquet — ~7 re-derivations for the
-    # registered 2-round operators. The per-round replace() chain
+    # §5): every round issues 2 actions (pair statistics, symbol
+    # metric) and each one would re-run the word-frequency
+    # scan+explode+aggregate from parquet. The per-round replace() chain
     # stays lazy on top of the cached base (row-local, trivially
     # recomputed); deep runs additionally re-materialize via the
     # localCheckpoint cadence below.
@@ -148,14 +154,20 @@ def bpe_train(
     out = []
     for rnd in range(1, rounds + 1):
         _t0 = _time.perf_counter()
-        pc = _pair_counts(seqs).persist()
-        tops = pc.orderBy(F.desc("c"), "l", "r").limit(1).collect()
-        if not tops:  # merge exhaustion: every word is one symbol
-            pc.unpersist()
+        # ONE aggregate for the round's pair statistics: the number of
+        # pair types and the winner — struct order is field by field,
+        # so min(struct(-c, l, r)) is the first row of ORDER BY c
+        # DESC, l, r
+        n_types, top = (
+            _pair_counts(seqs)
+            .agg(
+                F.count("*"),
+                F.min(F.struct((-F.col("c")).alias("nc"), "l", "r")),
+            )
+            .collect()[0]
+        )
+        if n_types == 0:  # merge exhaustion: every word is one symbol
             break
-        top = tops[0]
-        n_types = pc.count()
-        pc.unpersist()
         seqs = seqs.select(
             "word",
             "cnt",
@@ -170,7 +182,7 @@ def bpe_train(
                 F.col("cnt") * F.size(F.split(F.trim(F.col("seq")), " +"))
             ).cast("bigint")
         ).collect()[0][0]
-        out.append((rnd, top.l, top.r, int(top.c), int(n_types), int(n_sym)))
+        out.append((rnd, top.l, top.r, -top.nc, n_types, n_sym))
         if checkpoint_every and rnd % checkpoint_every == 0:
             seqs = seqs.localCheckpoint(eager=True)
         if on_round is not None:
@@ -202,7 +214,8 @@ def bpe_merge_rounds(
     """Per-round merge statistics as a DataFrame (see bpe_train)."""
     _seqs, out = bpe_train(spark, sf_dir, rounds)
     _require_rounds(out, rounds)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         out,
         "round bigint, merge_left string, merge_right string, "
         "pair_count bigint, n_pair_types bigint, n_symbols_after bigint",

@@ -33,7 +33,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .dedup import min_label_components
-from .registry import dsum, query, sql_dsum, tbl
+from .registry import dsum, local_frame, query, sql_dsum, tbl
 from .similarity import _dot_dbl, unrolled_left_chain
 
 _KM_K = 8  # clusters (fixed oracle geometry; production scales with n)
@@ -344,11 +344,13 @@ def _assign_hier(
     k = len(cents)
     s = max(2, math.isqrt(k))
     sup, c2s = _cluster_centroids(cents, s)
-    supdf = spark.createDataFrame(
+    supdf = local_frame(
+        spark,
         [(int(i), [float(v) for v in sup[i]]) for i in range(s)],
         "sc int, c array<double>",
     )
-    cdf = spark.createDataFrame(
+    cdf = local_frame(
+        spark,
         [
             (int(c2s[idx]), int(j), [float(v) for v in c])
             for idx, (j, c) in enumerate(cents)
@@ -838,10 +840,19 @@ _KC_K = 4
 
 def kcenter_select(
     em: DataFrame, k: int, checkpoint_every: int = 32
-) -> list[tuple[int, list[float]]]:
+) -> tuple[list[tuple[int, list[float]]], DataFrame]:
     """Gonzalez farthest-point selection: k (vec_id, embedding)
-    centers. The running-min frame is localCheckpointed every
-    `checkpoint_every` rounds — without it the lazy least() chain
+    centers, plus the frame (vec_id, embedding, dmin, rank) that
+    holds every row's nearest center after the last fold — `rank` is
+    the center's index in the returned list, `dmin` its squared
+    distance. The assignment is the selection's running argmin: each
+    round computes its distance `d` once and folds
+    `rank = when(d < dmin, t)`, `dmin = least(dmin, d)`. The strict
+    `<` keeps the smaller rank on ties, and a NaN distance never
+    beats a number (Spark orders NaN after every number) — the
+    oracle's `ORDER BY d2, rnk`; a row whose distance is NULL keeps
+    rank 0 with dmin NULL. The running-min frame is localCheckpointed
+    every `checkpoint_every` rounds — without it the lazy fold chain
     re-executes every prior fold per round (k²·n/2 total; measured in
     SCALING.md's k-center cadence row), with it total fold work is
     ~n·k·cadence/2 = O(n·k) and plan depth stays bounded. Pass 0 to
@@ -854,23 +865,30 @@ def kcenter_select(
         "vec_id",
         "embedding",
         _sqdiff_chain(F.col("embedding"), centers[0][1]).alias("dmin"),
+        F.lit(0).alias("rank"),
     )
-    for rnd in range(k - 1):
+    for rnd in range(1, k):
         win = cur.orderBy(F.desc("dmin"), "vec_id").limit(1).collect()[0]
         centers.append(
             (int(win.vec_id), [float(x) for x in win.embedding])
         )
-        cur = cur.select(
+        # `d` is its own projection: referenced twice below, it is not
+        # inlined (CollapseProject keeps a non-trivial expression that
+        # has two consumers), so each round's fold runs once per row
+        d = cur.select(
+            "*", _sqdiff_chain(F.col("embedding"), centers[-1][1]).alias("d")
+        )
+        cur = d.select(
             "vec_id",
             "embedding",
-            F.least(
-                F.col("dmin"),
-                _sqdiff_chain(F.col("embedding"), centers[-1][1]),
-            ).alias("dmin"),
+            F.least(F.col("dmin"), F.col("d")).alias("dmin"),
+            F.when(F.col("d") < F.col("dmin"), rnd)
+            .otherwise(F.col("rank"))
+            .alias("rank"),
         )
-        if checkpoint_every and (rnd + 1) % checkpoint_every == 0:
+        if checkpoint_every and rnd % checkpoint_every == 0:
             cur = cur.localCheckpoint(eager=True)
-    return centers
+    return centers, cur
 
 
 def _kc_sql() -> str:
@@ -954,12 +972,13 @@ def ns_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     squared distance (the per-point cover radius), and the is_center
     flag.
 
-    Determinism: distances are the shared left-fold double chains
-    (_sqdiff_chain in the selection loop, the _assign kernel for the
-    final assignment — both bit-identical to the oracle's
-    list_reduce); the running min folds through the SAME least()
-    nesting on both engines; winner selection is a (dmin DESC,
-    vec_id) total order.
+    Determinism: distances are the shared left-fold double chain
+    (_sqdiff_chain, bit-identical to the oracle's list_reduce); the
+    running min folds through the SAME least() nesting on both
+    engines; winner selection is a (dmin DESC, vec_id) total order.
+    The assignment is the selection's running argmin (kcenter_select:
+    strict `<`, so ties keep the smaller rank — the oracle's
+    ORDER BY d2, rnk), not a second pass over the corpus.
 
     Iterative shape on Spark (the Lloyd/BPE loop pattern): each round
     is ONE corpus pass plus a bounded TakeOrdered(1) driver collect
@@ -970,22 +989,20 @@ def ns_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     `checkpoint_every` rounds (default 32, bpe_train's measured
     cadence), capping total fold work at ~n·k·cadence/2 = O(n·k) and
     plan depth at the cadence. Zero shuffle in the selection loop
-    (the orderBy-limit-1 is TakeOrderedAndProject); the final
-    assignment is the row-local _assign kernel with the centers
-    passed in rank order (its smallest-id tie-break is the oracle's
-    ORDER BY d2, rnk), center_id looked up from the rank. At 100 TB
-    the per-round collect stays 1 row regardless of corpus size."""
+    (the orderBy-limit-1 is TakeOrderedAndProject); the output is a
+    projection of the frame after the last center's fold, center_id
+    looked up from the rank. At 100 TB the per-round collect stays 1
+    row regardless of corpus size."""
     em = tbl(spark, sf_dir, "embeddings", parallel=True)
-    centers = kcenter_select(em, _KC_K)
+    centers, cur = kcenter_select(em, _KC_K)
     center_ids = [cid for cid, _ in centers]
-    a = _assign(em, [(r, c) for r, (_, c) in enumerate(centers)])
-    return a.select(
+    return cur.select(
         "vec_id",
-        F.get(F.array(*map(F.lit, center_ids)), F.col("cl"))
+        F.get(F.array(*map(F.lit, center_ids)), F.col("rank"))
         .cast("bigint")
         .alias("center_id"),
-        F.col("cl").alias("center_rank"),
-        F.col("d2").alias("d2_nearest"),
+        F.col("rank").alias("center_rank"),
+        F.col("dmin").alias("d2_nearest"),
         F.when(F.col("vec_id").isin(center_ids), 1)
         .otherwise(0)
         .alias("is_center"),
@@ -1798,7 +1815,8 @@ def _ivfpq_score_join(
         for p in probes
         for cell in cells_by_probe[int(p.vec_id)]
     ]
-    ptab = spark.createDataFrame(
+    ptab = local_frame(
+        spark,
         prows,
         "probe_id long, cell_id long, tabs array<array<double>>",
     )
@@ -2993,7 +3011,8 @@ def ns_linear_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .collect()[0]["m"]
     )  # bounded 1-value collect (the hybrid_prf precedent)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(d, w[d - 1], mse) for d in range(1, _LP_DIM + 1)],
         "dim bigint, weight double, train_mse double",
     )

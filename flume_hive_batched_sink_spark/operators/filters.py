@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .registry import query, tbl
+from .registry import local_frame, query, tbl
 
 # Synthesized bookkeeping table (FIXTURES.md "Harness notes"):
 # the reference's hive_sink_detail (name, logdate, hostname, counts,
@@ -98,7 +98,8 @@ def exists_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A19: 3-key existence lookup (HiveSinkDetailDao.scala:73-82) as
     a broadcast left-semi join — the batched form of N point lookups."""
     d = detail(spark, sf_dir).select("name", "logdate", "hostname").distinct()
-    keys = spark.createDataFrame(
+    keys = local_frame(
+        spark,
         [
             ("sink", "20240101", "h0"),
             ("sink", "20240102", "h1"),

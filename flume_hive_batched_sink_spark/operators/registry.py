@@ -171,6 +171,30 @@ def sql_det_ln_ctes(name: str, src: str, cols: dict[str, str]) -> str:
     """
 
 
+# --- driver-built frames ---
+
+
+def local_frame(spark: SparkSession, rows: list, ddl: str) -> DataFrame:
+    """A small driver-built frame (`rows`: tuples in `ddl` column
+    order) that stays in the JVM: the rows travel as ONE Arrow table,
+    which Spark plans as a LocalRelation whatever the session's Arrow
+    setting. `createDataFrame(<list>)` plans a LogicalRDD instead
+    (`Scan ExistingRDD`), and executing it starts Python workers. The
+    package's one createDataFrame call (tests/test_local_frame.py)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    schema = _parse_datatype_string(ddl)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema)
+
+
 # --- bounded persist (per-site cache eviction) ---
 
 _PERSIST_SITES: dict[str, list] = {}
@@ -215,7 +239,7 @@ def persist_evicting(df: DataFrame, site: str) -> DataFrame:
 # PLAN METADATA only — a lazy relation handle (file listing + schema,
 # the same things Spark's own FileStatusCache memoizes per session)
 # and one int. NO data, NO results, NO intermediates are cached, and
-# the entry carries the parquet mtime+size fingerprint so in-place
+# the entry carries the data files' mtime+size fingerprint so in-place
 # regeneration REPLACES it (r14 advice #1: fingerprint-in-key
 # accumulated one dead entry per regeneration, pinning stale plan
 # handles for the session lifetime). Why (r14 optimization round,
@@ -241,15 +265,9 @@ def _scan_split_estimate(spark: SparkSession, path: str) -> int:
     execution; the RDD probe counted those byte-ranges too (it sees
     the same FilePartition packing, not row groups), so estimate ==
     probe there as well."""
-    if os.path.isdir(path):
-        sizes = [
-            os.path.getsize(os.path.join(root, f))
-            for root, _dirs, files in os.walk(path)
-            for f in files
-            if not f.startswith((".", "_"))
-        ]
-    else:
-        sizes = [os.path.getsize(path)]
+    from ..catalog import data_files
+
+    sizes = [os.path.getsize(f) for f in data_files(path)]
     if not sizes:
         return 0
     # the JVM's own byte-string parser: every form Spark accepts
@@ -311,18 +329,21 @@ def tbl(
     do not (join_multiway 1.79 with vs 1.52 without → no repartition).
 
     The lazy scan handle and its split count are cached per (session,
-    path) with a parquet mtime+size fingerprint — see _TBL_META: plan
-    metadata, never data. The split count comes from the file listing
+    path) with an mtime+size fingerprint of every data file (a landed
+    table gains files inside existing partition directories, which
+    the top directory's own mtime does not show) — see _TBL_META:
+    plan metadata, never data. The split count comes from the file listing
     (_scan_split_estimate), not an RDD-conversion probe."""
-    import os
-
-    from ..catalog import load_table
+    from ..catalog import data_files, load_table
 
     per = _TBL_META.setdefault(spark, {})
     path = os.path.join(sf_dir, f"{name}.parquet")
     try:
-        st = os.stat(path)
-        fp = (st.st_mtime_ns, st.st_size)
+        fp = tuple(
+            (f, st.st_mtime_ns, st.st_size)
+            for f in data_files(path)
+            for st in [os.stat(f)]
+        )
     except OSError:
         fp = None
     key = (os.path.abspath(sf_dir), name)

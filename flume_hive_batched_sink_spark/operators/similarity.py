@@ -24,7 +24,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from .registry import persist_evicting, query, tbl
+from .registry import local_frame, persist_evicting, query, tbl
 
 # precision 25 keeps decimal addition below Spark's 38-digit cap, so
 # the fold never rescales (stays exact); |values| here are ≪ 10^13.
@@ -261,7 +261,7 @@ def _planes_by_pos(spark: SparkSession, n_planes: int = _N_PLANES) -> DataFrame:
         (j, [float(_PLANE_POOL[i][j]) for i in range(n_planes)])
         for j in range(64)
     ]
-    return spark.createDataFrame(rows, "pos int, p array<double>")
+    return local_frame(spark, rows, "pos int, p array<double>")
 
 
 # Sign-trust tolerance for the double fast path (see
@@ -2257,7 +2257,8 @@ def ns_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
             _key, n, score = best
             selected.append(n)
             out.append((qid, n, score, t))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         out,
         "query_id long, neighbor_id long, mmr_score double, "
         "mmr_rank long",

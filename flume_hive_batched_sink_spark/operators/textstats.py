@@ -25,6 +25,7 @@ from .registry import (
     ORACLE,
     det_ln_int,
     dsum,
+    local_frame,
     persist_evicting,
     query,
     sql_det_ln_ctes,
@@ -3626,7 +3627,8 @@ def bm25_ranked(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
         .agg(F.count("*").cast("bigint").alias("tf"))
     )
     dfs = tf.groupBy("term").agg(F.count("*").cast("bigint").alias("df"))
-    qmap = spark.createDataFrame(
+    qmap = local_frame(
+        spark,
         [
             (qid, t)
             for qid, ts in sorted(_BM25_QUERIES.items())
@@ -3780,7 +3782,8 @@ def ns_hybrid_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # accumulate cached partitions across repeated invocations in a
     # long-running sweep/bench process (r12 advice).
     lex_rows = bm25_ranked(spark, sf_dir, _BM25_TOPK).collect()
-    lex = spark.createDataFrame(
+    lex = local_frame(
+        spark,
         [(int(r.query_id), int(r.doc_id), int(r.rank)) for r in lex_rows],
         "query_id long, doc_id long, rank int",
     )

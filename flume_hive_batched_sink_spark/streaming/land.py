@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from ..config import SinkConfig
 from ..functions.partition import derive_logdate
+from ..operators.registry import local_frame
 from ..sources.parse import parse_column
 from .stage import SCRATCH, capture_batch_plan
 
@@ -185,19 +186,10 @@ def _book(cfg: SinkConfig) -> _Book:
 def _append(
     spark: SparkSession, cfg: SinkConfig, rows: list[_Row], ts_type: str
 ) -> None:
-    """One bookkeeping append, JVM-local: a pandas frame under the
-    session's Arrow setting plans a LocalRelation (a Python list
-    would plan a LogicalRDD and start Python workers)."""
-    import pandas as pd
-
-    pdf = pd.DataFrame(
+    """One bookkeeping append, JVM-local (registry.local_frame)."""
+    df = local_frame(
+        spark,
         [r[:5] for r in rows],
-        columns=[cfg.partition_col, "sinkcount", "updatetime", "batch_id",
-                 "state"],
-    ).astype({"sinkcount": "int64", "updatetime": "Int64",
-              "batch_id": "int32"})
-    df = spark.createDataFrame(
-        pdf,
         f"`{cfg.partition_col}` string, sinkcount bigint, "
         "updatetime bigint, batch_id int, state string",
     ).withColumn(

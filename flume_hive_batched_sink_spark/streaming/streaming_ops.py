@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..config import SinkConfig
 from ..operators.pipeline import sql_logdate
-from ..operators.registry import query
+from ..operators.registry import local_frame, query
 from .stage import (
     SCRATCH,
     capture_stream_plan,
@@ -334,7 +334,8 @@ def stream_observe_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
             for k in totals:
                 totals[k] += metrics[k] or 0
     uninstall(spark, reporter)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [tuple(totals[k] for k in ("n_events", "sum_uid", "n_purchase"))],
         "n_events bigint, sum_uid bigint, n_purchase bigint",
     )

@@ -691,12 +691,12 @@ def plan_checks(spark, sf_dir: str) -> list[dict]:
         f"reused={n_reused}, schemas={sorted(schemas)}, "
         f"identity-broadcast={'IdentityBroadcastMode' in p}")
 
-    # ns_kcenter_coreset (r11): the FINAL assignment plan is a pure
-    # row-local pass — the _assign kernel over the k centers — so
-    # the returned frame must contain no join, no
-    # window, no sort, and no keyed/range exchange (the selection
-    # loop's own 1-row TakeOrdered collects happen before this plan
-    # is built and never appear in it).
+    # ns_kcenter_coreset (r11): the assignment is the selection loop's
+    # running argmin, so the returned frame is the last center's fold
+    # projected — row-local over the scan: no join, no window, no
+    # sort, and no keyed/range exchange (the selection loop's own
+    # 1-row TakeOrdered collects happen before this plan is built and
+    # never appear in it).
     p = _executed(ops.QUERIES["ns_kcenter_coreset"](spark, sf_dir))
     bad_nodes = [
         ln.strip() for ln in p.splitlines()
@@ -705,8 +705,8 @@ def plan_checks(spark, sf_dir: str) -> list[dict]:
         or "Join" in _node(ln)
     ]
     add("ns_kcenter_coreset",
-        "final assignment is row-local (no join/sort/window/keyed "
-        "exchange — the row-local _assign kernel)",
+        "assignment is the selection's running argmin, row-local "
+        "(no join/sort/window/keyed exchange, no second corpus pass)",
         not bad_nodes,
         bad_nodes[0] if bad_nodes
         else "project-over-scan only")

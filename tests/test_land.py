@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import datetime
 import os
+import shutil
 
 import pytest
 
@@ -156,3 +157,72 @@ def test_concurrent_reconciles_notify_once(spark, tmp_path):
         for r in read_bookkeeping(spark, cfg).collect()
     }
     assert states[DAY1] == "NOTIFIED"
+
+
+def test_flagship_reads_landed_table(spark, tmp_path):
+    """A landed table is a partitioned directory: `catalog.load_table`
+    reads it (the timestamp-unit probe looks at its first data file,
+    not at the directory), so the flagship aggregate runs on it and
+    equals the oracle over the source events. A batch landed into an
+    existing partition directory changes the table's fingerprint, so
+    a re-read sees it."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from flume_hive_batched_sink_spark.operators.pipeline import (
+        FLAGSHIP_ORACLE,
+        flagship,
+    )
+
+    from .oracle_harness import compare
+
+    cfg = SinkConfig(table="events.parquet", output_path=str(tmp_path / "wh"))
+    t0 = datetime.datetime(2024, 1, 1, 10, 0, tzinfo=datetime.timezone.utc)
+    sources: list[str] = []
+
+    def batch(i: int, n: int):
+        path = str(tmp_path / f"in{i}.parquet")
+        pq.write_table(
+            pa.table(
+                {
+                    "ts": pa.array(
+                        [t0 + datetime.timedelta(seconds=7 * j + i)
+                         for j in range(n)],
+                        pa.timestamp("us", tz="UTC"),
+                    ),
+                    "event_type": [("click", "view", "buy")[j % 3]
+                                   for j in range(n)],
+                    "props": [f'{{"k": {i * 100 + j}}}' for j in range(n)],
+                }
+            ),
+            path,
+        )
+        sources.append(path)
+        return spark.read.parquet(path)
+
+    def oracle_problems():
+        con = duckdb.connect()
+        con.execute("SET TimeZone = 'UTC'")
+        con.execute(
+            f"CREATE VIEW events AS SELECT * FROM read_parquet({sources})"
+        )
+        return compare(flagship(spark, cfg.output_path), con, FLAGSHIP_ORACLE)
+
+    land_batch(batch(0, 30), 0, cfg)
+    land_batch(batch(1, 12), 1, cfg)
+    assert oracle_problems() == []
+    part = os.path.join(cfg.output_path, cfg.table, "logdate=202401011000")
+    before = set(os.listdir(part))
+    land_batch(batch(2, 9), 2, cfg)  # same 5-minute logdate
+    assert oracle_problems() == []
+    # another writer commits a file into the existing partition
+    # directory only: the table directory itself does not change
+    (new,) = [
+        f for f in set(os.listdir(part)) - before if f.startswith("part-")
+    ]
+    shutil.copy(
+        os.path.join(part, new), os.path.join(part, "part-copy.parquet")
+    )
+    sources.append(sources[-1])
+    assert oracle_problems() == []
