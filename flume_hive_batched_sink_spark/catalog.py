@@ -44,7 +44,8 @@ def data_files(path: str) -> list[str]:
     e.g. a landed one) every file of a sorted walk that skips what
     Spark's file index skips — names starting with `.` (checksum
     siblings) or `_` (`_SUCCESS`, `_temporary`), unless a `_` name
-    holds `=` (a partition directory)."""
+    holds `=` (a partition directory), and zero-length files
+    (PartitioningAwareFileIndex.isNonEmptyFile)."""
     if not os.path.isdir(path):
         return [path]
 
@@ -54,9 +55,10 @@ def data_files(path: str) -> list[str]:
     out = []
     for root, dirs, files in os.walk(path):
         dirs[:] = sorted(d for d in dirs if not hidden(d))
-        out.extend(
-            os.path.join(root, f) for f in sorted(files) if not hidden(f)
-        )
+        for f in sorted(files):
+            p = os.path.join(root, f)
+            if not hidden(f) and os.path.getsize(p):
+                out.append(p)
     return out
 
 

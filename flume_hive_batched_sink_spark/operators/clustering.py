@@ -26,15 +26,13 @@ cells grow linearly.
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .dedup import min_label_components
-from .registry import dsum, local_frame, query, sql_dsum, tbl
-from .similarity import _dot_dbl, unrolled_left_chain
+from .registry import dlit_sql, dsum, local_frame, query, sql_dsum, tbl
+from .similarity import _dot_dbl
 
 _KM_K = 8  # clusters (fixed oracle geometry; production scales with n)
 _KM_DIM = 64
@@ -129,60 +127,27 @@ _AUTO_K_SQL = (
 )
 
 
-def _sqdiff_chain(x: Column, cvals: list[float]) -> Column:
-    """Left-fold squared euclidean distance of an array column against
-    64 literal centroid coordinates: a zip_with/aggregate HOF —
-    left-associated double adds, bit-identical to the oracle's
-    list_reduce fold (the 0.0 seed is exact: squared diffs are never
-    -0.0, so 0.0 + t1 == t1 bitwise). HOF over an unrolled chain is the
-    measured _dot_dec tradeoff: k=8 unrolled 64-term projections blew
-    Janino compile to ~15 s PER PLAN at any corpus size, while the
-    interpreted fold costs ~nothing to plan and its per-row penalty is
-    bounded by k*dim. Degenerate inputs: an x SHORTER than the
-    centroid width poisons to NULL (NULL-padded zip element); LONGER
-    x is out of schema contract (FIXTURES.md pins 64)."""
-    carr = F.array(*[F.lit(float(v)) for v in cvals])
-    prods = F.zip_with(
-        x,
-        carr,
-        lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
-    )
-    return F.aggregate(prods, F.lit(0.0), lambda acc, p: acc + p)
-
-
-def _sqdiff_cols(a: Column, b: Column, dim: int = _KM_DIM) -> Column:
-    """Unrolled left-associated squared-euclidean chain over two
-    array COLUMNS. One small all-double method (the _dot_dbl
-    precedent: tiny codegen, no Janino blowup — unlike unrolling k
-    copies of it into one projection, which is exactly what
-    _sqdiff_chain's docstring measured at ~15 s compile). Term order
-    and associativity match list_reduce's left fold, and the adds are
-    IEEE doubles, so the value is bit-identical to the oracle's."""
-    return unrolled_left_chain(
-        lambda i: (F.get(a, i).cast("double") - F.get(b, i).cast("double"))
-        * (F.get(a, i).cast("double") - F.get(b, i).cast("double")),
-        dim,
-    )
-
-
-def _dlit_sql(v: float) -> str:
-    """Exact double literal for generated SQL — registry.dlit_sql
-    (shared with similarity's row-local IVF assignment since r15)."""
-    from .registry import dlit_sql
-
-    return dlit_sql(v)
-
-
 def _sqdiff_chain_sql(x_sql: str, cvals: list[float]) -> str:
-    """SQL text of _sqdiff_chain — the SAME zip_with/aggregate
-    expression tree, but parsed by the JVM in ONE expr() call instead
-    of being assembled Column-by-Column over py4j. Profiling (guide
-    §1.1) showed DataFrame CONSTRUCTION, not execution, dominating the
-    PQ/kmeans family at sf0.1 (e.g. ns_similarity_ivfpq: 8.0 s build
-    vs 1.4 s exec; pq_train's argmin projection alone cost 1.6 s of
-    py4j chatter per call). Values are bit-identical: the parsed
-    expressions are the ones the Column API built."""
-    lits = ", ".join(_dlit_sql(v) for v in cvals)
+    """SQL text of the left-fold squared euclidean distance of an
+    array column against literal centroid coordinates: a
+    zip_with/aggregate HOF — left-associated double adds,
+    bit-identical to the oracle's list_reduce fold (the 0.0 seed is
+    exact: squared diffs are never -0.0, so 0.0 + t1 == t1 bitwise).
+    HOF over an unrolled chain is the measured _dot_dec tradeoff: k=8
+    unrolled 64-term projections blew Janino compile to ~15 s PER PLAN
+    at any corpus size, while the interpreted fold costs ~nothing to
+    plan and its per-row penalty is bounded by k*dim. Degenerate
+    inputs: an x SHORTER than the centroid width poisons to NULL
+    (NULL-padded zip element); LONGER x is out of schema contract
+    (FIXTURES.md pins 64).
+
+    Callers parse it with ONE expr() call instead of assembling the
+    tree Column-by-Column over py4j. Profiling showed DataFrame
+    CONSTRUCTION, not execution, dominating the PQ/kmeans family at
+    sf0.1 (e.g. ns_similarity_ivfpq: 8.0 s build vs 1.4 s exec;
+    pq_train's argmin projection alone cost 1.6 s of py4j chatter
+    per call)."""
+    lits = ", ".join(dlit_sql(v) for v in cvals)
     return (
         f"aggregate(zip_with({x_sql}, array({lits}), "
         f"(a, b) -> (cast(a as double) - b) * (cast(a as double) - b)), "
@@ -287,107 +252,6 @@ def _assign(em: DataFrame, cents: list[tuple[int, list[float]]]) -> DataFrame:
     )
 
 
-# 2-level hierarchical assignment kicks in (on the auto path) above
-# this k: the flat forms do n·k distance evals per pass, the 2-level
-# tree does n·(√k + cell) ≈ n·2√k — SemDeDup's own n²/cell assignment
-# asymptotic under n-proportional k drops to n^1.5/√cell. The gate
-# sits far above every test-SF k (sf0.1 cell-32 k=156) so the
-# hash-gated operators never route through the APPROXIMATE tree; at
-# the 100x decade (k≈1.9k at production 256) it engages by itself.
-_HIER_ASSIGN_MIN_K = 512
-_HIER_CENTROID_ITERS = 5
-
-
-def _cluster_centroids(
-    cents: list[tuple[int, list[float]]], s: int
-) -> tuple[np.ndarray, np.ndarray]:
-    """Driver-local Lloyd over the k centroid VECTORS (k rows — tiny
-    by construction: centroids already live on the driver as the
-    bounded k x 64 collect kmeans_assign makes). Deterministic: init
-    = first s centroids in list order, fixed iteration count, argmin
-    ties to the lowest super-cell index, empty super-cells keep their
-    previous position. Returns (s x dim super-centroids, per-centroid
-    super-cell assignment by list position)."""
-    arr = np.array([c for _, c in cents], dtype="float64")
-    sup = arr[:s].copy()
-    for _ in range(_HIER_CENTROID_ITERS):
-        d = ((arr[:, None, :] - sup[None, :, :]) ** 2).sum(axis=2)
-        a = d.argmin(axis=1)
-        for i in range(s):
-            members = arr[a == i]
-            if len(members):
-                sup[i] = members.mean(axis=0)
-    d = ((arr[:, None, :] - sup[None, :, :]) ** 2).sum(axis=2)
-    return sup, d.argmin(axis=1)
-
-
-def _assign_hier(
-    em: DataFrame, cents: list[tuple[int, list[float]]]
-) -> DataFrame:
-    """2-level hierarchical nearest-centroid assignment for LARGE k
-    (the SCALING.md continuation of the flat form): cluster the k
-    centroids into s = ⌈√k⌉ super-cells ON THE DRIVER (k rows), then
-    route each corpus vector through the tree — nearest super-centroid
-    first (n x s expansion), then nearest centroid WITHIN that
-    super-cell (n x cell expansion, cell ≈ √k). Total distance rows
-    n·(√k + cell) instead of the flat form's n·k; both levels are a
-    broadcast join + min(struct(d, j)) over _sqdiff_cols distances
-    (ties to the smallest index at each level).
-
-    APPROXIMATE by design: a vector whose true nearest centroid sits
-    just across a super-cell boundary gets its best in-cell centroid
-    instead — the standard IVF/2-level-tree recall trade (SemDeDup
-    itself is approximate). Bounded-inertia parity vs the flat form
-    is property-tested; the hash-gated operators never take this path
-    (_HIER_ASSIGN_MIN_K is far above every test-SF k)."""
-    spark = em.sparkSession
-    k = len(cents)
-    s = max(2, math.isqrt(k))
-    sup, c2s = _cluster_centroids(cents, s)
-    supdf = local_frame(
-        spark,
-        [(int(i), [float(v) for v in sup[i]]) for i in range(s)],
-        "sc int, c array<double>",
-    )
-    cdf = local_frame(
-        spark,
-        [
-            (int(c2s[idx]), int(j), [float(v) for v in c])
-            for idx, (j, c) in enumerate(cents)
-        ],
-        "sc int, j int, c array<double>",
-    )
-    d2 = _sqdiff_cols(F.col("embedding"), F.col("c"))
-    lvl1 = (
-        em.select("vec_id", "embedding")
-        .join(F.broadcast(supdf))
-        .select(
-            "vec_id",
-            F.struct(d2.alias("d"), F.col("sc").alias("sc")).alias("ds"),
-        )
-        .groupBy("vec_id")
-        .agg(F.min("ds").alias("m"))
-        .select("vec_id", F.col("m.sc").alias("sc"))
-    )
-    lvl2 = (
-        em.select("vec_id", "embedding")
-        .join(lvl1, ["vec_id"])
-        .join(F.broadcast(cdf), ["sc"])
-        .select(
-            "vec_id",
-            F.struct(d2.alias("d"), F.col("j").alias("j")).alias("dj"),
-        )
-        .groupBy("vec_id")
-        .agg(F.min("dj").alias("m"))
-    )
-    return em.join(lvl2, ["vec_id"]).select(
-        "vec_id",
-        "embedding",
-        F.col("m.j").alias("cl"),
-        F.col("m.d").alias("d2"),
-    )
-
-
 def auto_k(n: int, target_cell: int = 256) -> int:
     """Corpus-sized cluster count for the at-scale path (the
     auto_planes_per_band treatment): k grows with n so cells stay
@@ -402,26 +266,20 @@ def kmeans_assign(
     spark: SparkSession,
     sf_dir: str,
     k: int = _KM_K,
-    hierarchical: bool | None = None,
 ) -> DataFrame:
     """Shared 2-iteration Lloyd assignment (vec_id, embedding, cl,
     d2) used by ns_cluster_kmeans and ns_semdedup. Two bounded driver
     collects: the k init rows and the k x 64 iteration-1 means (the
     classic driver-coordinated Lloyd loop — MLlib's shape; each
-    iteration is one corpus scan through the _assign kernel).
-    `hierarchical` forces the 2-level tree on (True) or off (False);
-    None auto-enables it at k >= _HIER_ASSIGN_MIN_K (the approximate
-    n·√k path — never reached by the hash-gated test-SF geometries)."""
+    iteration is one corpus scan through the _assign kernel, exact at
+    every k)."""
     em = tbl(spark, sf_dir, "embeddings", parallel=True)
-    if hierarchical is None:
-        hierarchical = k >= _HIER_ASSIGN_MIN_K
-    assign = _assign_hier if hierarchical else _assign
     init = em.orderBy("vec_id").limit(k).collect()
     cents0 = [
         (j, [float(v) for v in row.embedding])
         for j, row in enumerate(init)
     ]
-    a1 = assign(em, cents0)
+    a1 = _assign(em, cents0)
     # Iteration-1 means via posexplode + ONE (cl, dim)-keyed decimal
     # sum instead of a 64-column wide aggregate: measured 2× faster
     # (0.92 s vs 1.88 s at sf0.1 — the wide HashAggregate's 65 agg
@@ -448,7 +306,7 @@ def kmeans_assign(
             r.n
         )
     cents1 = [(cl, vals) for cl, vals in sorted(by_cl.items())]
-    return assign(em, cents1)
+    return _assign(em, cents1)
 
 
 @query(
@@ -606,7 +464,6 @@ def _sem_near(
     spark: SparkSession,
     sf_dir: str,
     k: int = _KM_K,
-    hierarchical: bool | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """(assignment, near): the shared SemDeDup front — 2-iteration
     Lloyd assignment plus the within-cluster cosine >= tau pair graph
@@ -617,7 +474,7 @@ def _sem_near(
     twin of _sem_near_sql."""
     from .registry import persist_evicting
 
-    a2 = kmeans_assign(spark, sf_dir, k, hierarchical=hierarchical)
+    a2 = kmeans_assign(spark, sf_dir, k)
     nrm = F.sqrt(_dot_dbl(F.col("embedding"), F.col("embedding")))
     # The assignment pass is the expensive part of this frame (k
     # distance folds per row) and the plan consumed it THREE times:
@@ -658,12 +515,11 @@ def semdedup_frame(
     spark: SparkSession,
     sf_dir: str,
     k: int = _KM_K,
-    hierarchical: bool | None = None,
 ) -> DataFrame:
     """k-parameterized SemDeDup body — the registered operator pins
     k=_KM_K (the fixed oracle geometry); scale runs pass k=auto_k(n)
     so cells stay ~256 and pair work stays linear in the corpus."""
-    a2, near = _sem_near(spark, sf_dir, k, hierarchical=hierarchical)
+    a2, near = _sem_near(spark, sf_dir, k)
     # both orientations of each edge via one row-local explode — the
     # unionAll form this replaces duplicated the whole `near` subtree
     # (pair join + n²/k cosine folds) into BOTH branches, computing
@@ -864,7 +720,7 @@ def kcenter_select(
     cur = em.select(
         "vec_id",
         "embedding",
-        _sqdiff_chain(F.col("embedding"), centers[0][1]).alias("dmin"),
+        F.expr(_sqdiff_chain_sql("embedding", centers[0][1])).alias("dmin"),
         F.lit(0).alias("rank"),
     )
     for rnd in range(1, k):
@@ -876,7 +732,8 @@ def kcenter_select(
         # inlined (CollapseProject keeps a non-trivial expression that
         # has two consumers), so each round's fold runs once per row
         d = cur.select(
-            "*", _sqdiff_chain(F.col("embedding"), centers[-1][1]).alias("d")
+            "*",
+            F.expr(_sqdiff_chain_sql("embedding", centers[-1][1])).alias("d"),
         )
         cur = d.select(
             "vec_id",
@@ -973,7 +830,7 @@ def ns_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     flag.
 
     Determinism: distances are the shared left-fold double chain
-    (_sqdiff_chain, bit-identical to the oracle's list_reduce); the
+    (_sqdiff_chain_sql, bit-identical to the oracle's list_reduce); the
     running min folds through the SAME least() nesting on both
     engines; winner selection is a (dmin DESC, vec_id) total order.
     The assignment is the selection's running argmin (kcenter_select:
@@ -1058,7 +915,7 @@ def ns_sample_cluster_balanced(
     precedent) with vec_id itself as tiebreak.
 
     Scale: assignment is the kmeans_assign path (the row-local
-    _assign kernel; the 2-level tree at very large k); the quota rank
+    _assign kernel, exact at every k); the quota rank
     is a cl-partitioned window whose rank<=Q filter Spark pushes into
     WindowGroupLimit (top-Q per partition, never a full per-cell sort
     materialization); the sizes join is a k-row broadcast."""
@@ -1146,7 +1003,6 @@ def _outlier_frame(em: DataFrame) -> DataFrame:
     """(vec_id, d2, z, is_outlier) — the Spark-side shared screen
     (one bounded 1-row mean collect, row-local fold, 1-row moments
     broadcast)."""
-    x = F.col("embedding")
     # corpus mean via posexplode + ONE dim-keyed decimal sum instead
     # of a 64-column wide aggregate (the kmeans_assign means fix —
     # measured 2× on the same shape; bit-identical sums/divisions)
@@ -1163,7 +1019,9 @@ def _outlier_frame(em: DataFrame) -> DataFrame:
     )
     mu_by_dim = {int(r.dim): float(r.s) / float(r.n) for r in mrows}
     mu = [mu_by_dim[i] for i in range(_KM_DIM)]
-    d = em.select("vec_id", _sqdiff_chain(x, mu).alias("d2"))
+    d = em.select(
+        "vec_id", F.expr(_sqdiff_chain_sql("embedding", mu)).alias("d2")
+    )
     stats = d.agg(
         F.count("*").alias("n"),
         dsum(F.col("d2"), "sd"),
@@ -1214,7 +1072,7 @@ def ns_embedding_outlier(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: the mean vector is the VARCHAR-routed exact-decimal
     per-dim mean (the kmeans means1 / km1 convention — one bounded
     1-row collect, the Lloyd pattern), replayed against literals with
-    the shared _sqdiff_chain left fold; distance moments ride dsum;
+    the shared _sqdiff_chain_sql left fold; distance moments ride dsum;
     z's (d2 - mean)/sqrt(var) is the same IEEE tree both engines
     (sqrt is correctly rounded), behind a var > 0 gate that cannot
     diverge.
@@ -1340,9 +1198,9 @@ def _pq_train(em: DataFrame) -> dict:
     """Train the PQ codebook (one Lloyd update per subspace) and
     return {(m, j): [D_SUB floats]}. Two bounded collects: the K init
     rows and the ≤ M·K·D_SUB = 256 mean values; empty codeword cells
-    keep their init position (the _cluster_centroids rule, mirrored
-    by the oracle's COALESCE). Shared by ns_embedding_pq and
-    ns_similarity_pq_adc so both encode against the SAME codebook."""
+    keep their init position (mirrored by the oracle's COALESCE).
+    Shared by ns_embedding_pq and ns_similarity_pq_adc so both encode
+    against the SAME codebook."""
     init = em.orderBy("vec_id").limit(_PQ_K).collect()
     cb0 = {
         (m, j): [
@@ -1443,12 +1301,12 @@ def ns_embedding_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     2 bytes that asymmetric-distance search scans.
 
     Determinism: init codewords are the first K vectors' subvectors
-    (the c0 convention); assignments are the _sqdiff_chain left fold
+    (the c0 convention); assignments are the _sqdiff_chain_sql left fold
     against literals with (d2, j) argmin tie-break (array_min struct
     == ORDER BY d2, j); per-(subspace, codeword, dim) means ride the
     VARCHAR-routed exact decimal (km1); EMPTY codeword cells keep
     their init position on BOTH engines (COALESCE in the oracle, the
-    dict-copy in Spark — the _cluster_centroids rule); qerr is the
+    dict-copy in Spark); qerr is the
     explicit left-associated 8-term chain, never an order-free SUM.
 
     Scale: both assignment passes are row-local folds against M·K
@@ -1592,11 +1450,11 @@ def _probe_meta_expr(cells_by_probe: dict[int, list[int]]) -> Column:
 def _adc_chain_sql(tabs: list[list[float]]) -> str:
     """`element_at(array(t..), c0+1) + ... + element_at(..., c7+1)`
     — one probe's M-term ADC lookup chain as SQL text. Left-to-left
-    associativity and _dlit_sql's cast-parse keep the doubles
+    associativity and dlit_sql's cast-parse keep the doubles
     bit-identical to the F.lit chain this replaces."""
     return " + ".join(
         f"element_at(array("
-        f"{', '.join(_dlit_sql(t) for t in tab)}), c{m} + 1)"
+        f"{', '.join(dlit_sql(t) for t in tab)}), c{m} + 1)"
         for m, tab in enumerate(tabs)
     )
 

@@ -281,7 +281,11 @@ def _scan_split_estimate(spark: SparkSession, path: str) -> int:
     open_cost = _bytes(
         conf.get("spark.sql.files.openCostInBytes", "4194304")
     )
-    min_pn = conf.get("spark.sql.files.minPartitionNum", None)
+    # FilePartition.maxSplitBytes: minPartitionNum, else the session's
+    # leafNodeDefaultParallelism, else the context's defaultParallelism
+    min_pn = conf.get("spark.sql.files.minPartitionNum", None) or conf.get(
+        "spark.sql.leafNodeDefaultParallelism", None
+    )
     cores = (
         int(min_pn)
         if min_pn
@@ -295,8 +299,6 @@ def _scan_split_estimate(spark: SparkSession, path: str) -> int:
         while off < s:
             chunks.append(min(max_split, s - off))
             off += max_split
-        if s == 0:
-            chunks.append(0)
     chunks.sort(reverse=True)
     nparts, cur, curfiles = 0, 0, 0
     for c in chunks:

@@ -65,7 +65,7 @@ def unrolled_left_chain(term, dim: int) -> Column:
     a flat expression chain. The association is load-bearing: double
     adds are order-sensitive, and every oracle twin replays a LEFT
     fold (list_reduce), so all unrolled double chains in the repo
-    (_dot_dbl here, clustering's _sqdiff_cols) MUST route through this
+    (today only _dot_dbl) MUST route through this
     one helper — a balanced or reordered copy would silently break
     hash parity for just the operators using that copy (r10 code
     review: three hand-rolled twins collapsed into this)."""

@@ -1924,52 +1924,44 @@ def test_assign_kernel_matches_duckdb(spark):
         assert kernel(em, cents) == duck(con, k), k
 
 
-def test_assign_hier_bounded_vs_flat(spark):
-    """The 2-level hierarchical assignment (_assign_hier, the
-    auto-path strategy at k >= _HIER_ASSIGN_MIN_K) is APPROXIMATE by
-    design — each vector only sees the centroids of its nearest
-    super-cell. Pin the approximation contract vs the flat optimum on
-    the same centroids: (a) total membership preserved, (b) every
-    assigned cl is a real centroid id, (c) no row BEATS the flat
-    minimum (subset property — where the tree picks the same centroid
-    the d2 is bit-equal, since both levels use _sqdiff_cols), and
-    (d) total inertia within 1.25x of flat (measured 1.06x at k=64 on
-    the near-orthogonal sf0.01 corpus — a worst-case-ish input for a
-    2-level tree, since super-cells barely separate)."""
-    from .conftest import SF_ORACLE
-    from flume_hive_batched_sink_spark.operators.clustering import (
-        _assign,
-        _assign_hier,
-    )
-    from flume_hive_batched_sink_spark.operators.registry import tbl
+def test_kmeans_assign_exact_at_large_k(spark):
+    """kmeans_assign is the exact Lloyd assignment at every k: at
+    k = 512 over a 600-row corpus, both iterations run through the
+    flat _assign kernel and reproduce the oracle's ka2 (cl and d2
+    bit-equal)."""
+    import os
+    import tempfile
 
-    k = 64
-    em = tbl(spark, SF_ORACLE, "embeddings", parallel=True)
-    cents = [
-        (j, [float(v) for v in row.embedding])
-        for j, row in enumerate(em.orderBy("vec_id").limit(k).collect())
-    ]
-    flat = {
-        r.vec_id: (r.cl, r.d2)
-        for r in _assign(em, cents).select("vec_id", "cl", "d2").collect()
-    }
-    hier = {
-        r.vec_id: (r.cl, r.d2)
-        for r in _assign_hier(em, cents)
-        .select("vec_id", "cl", "d2")
-        .collect()
-    }
-    assert set(hier) == set(flat)  # (a) every vector assigned once
-    valid = {j for j, _ in cents}
-    for vid, (cl, d2) in hier.items():
-        assert cl in valid  # (b)
-        fcl, fd2 = flat[vid]
-        assert d2 >= fd2  # (c) never better than the true optimum
-        if cl == fcl:
-            assert d2 == fd2  # same centroid ⇒ bit-equal distance
-    inertia_flat = sum(d for _, d in flat.values())
-    inertia_hier = sum(d for _, d in hier.values())
-    assert inertia_hier <= 1.25 * inertia_flat  # (d)
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from flume_hive_batched_sink_spark.operators.clustering import (
+        _km_sql_prefix,
+        kmeans_assign,
+    )
+
+    from .oracle_harness import duck_connection
+
+    k = 512
+    src = pq.read_table("/root/testdata/sf0.1/embeddings.parquet")
+    corpus = src.take(pc.sort_indices(src, [("vec_id", "ascending")])[:600])
+    with tempfile.TemporaryDirectory() as sf_dir:
+        pq.write_table(corpus, os.path.join(sf_dir, "embeddings.parquet"))
+        got = {
+            (r.vec_id, r.cl, r.d2.hex())
+            for r in kmeans_assign(spark, sf_dir, k=k)
+            .select("vec_id", "cl", "d2")
+            .collect()
+        }
+        con = duck_connection(sf_dir)
+        want = {
+            (v, cl, d2.hex())
+            for v, cl, d2 in con.execute(
+                f"WITH {_km_sql_prefix(str(k))} SELECT vec_id, cl, d2 FROM ka2"
+            ).fetchall()
+        }
+    assert len(got) == 600
+    assert got == want
 
 
 def test_contamination_prescreen_planted_recall(spark):
@@ -5558,29 +5550,6 @@ def test_decimal_fold_25_12_equals_sum_38_12(spark):
     assert j == 0
 
 
-def test_sqdiff_chain_sql_equals_column_form(spark):
-    """r14 optimization guard: the generated-SQL form of the
-    assignment distance (_sqdiff_chain_sql, parsed in one expr call)
-    must be bit-identical to the Column-API HOF fold it replaced."""
-    from flume_hive_batched_sink_spark.operators.clustering import (
-        _sqdiff_chain,
-        _sqdiff_chain_sql,
-    )
-    from flume_hive_batched_sink_spark.operators.registry import tbl
-
-    em = tbl(spark, SF_SMALL, "embeddings")
-    c = [0.01 * ((i % 11) - 5) for i in range(64)]
-    n_diff = (
-        em.select(
-            _sqdiff_chain(F.col("embedding"), c).alias("a"),
-            F.expr(_sqdiff_chain_sql("embedding", c)).alias("b"),
-        )
-        .filter("a != b")
-        .count()
-    )
-    assert n_diff == 0
-
-
 def test_tbl_metadata_cache_identity_and_invalidation(spark):
     """r14 optimization guard: tbl() caches the lazy scan handle +
     split count per (session, path, mtime+size) — same data returns
@@ -5611,28 +5580,50 @@ def test_tbl_accepts_every_spark_byte_string(spark):
     """Byte confs the engine does not set itself parse the way Spark
     parses them: a session with `spark.sql.files.maxPartitionBytes=1t`
     (or openCostInBytes in `tb` form) must not crash tbl(), and the
-    split estimate must still match the RDD probe under it."""
+    split estimate must still match the RDD probe under it. The
+    multi-file directory holds two zero-length files, which Spark's
+    file index skips (no split, no open cost). The last case sets
+    `spark.sql.leafNodeDefaultParallelism=1` with a small open cost
+    there, so total/cores sets the split size: Spark takes its core
+    count from that conf before the context's defaultParallelism."""
     import os
+    import tempfile
 
+    from flume_hive_batched_sink_spark.catalog import load_table
     from flume_hive_batched_sink_spark.operators.registry import (
         _scan_split_estimate,
         tbl,
     )
 
-    for max_pb, open_cost in (("1t", "4mb"), ("128m", "1tb")):
-        scoped = spark.newSession()  # fresh tbl() cache, own conf
-        scoped.conf.set("spark.sql.files.maxPartitionBytes", max_pb)
-        scoped.conf.set("spark.sql.files.openCostInBytes", open_cost)
-        for sf_dir in (SF_SMALL, "/root/testdata/sf0.01"):
-            df = tbl(scoped, sf_dir, "events", parallel=True)
-            assert df.count() > 0
-            path = os.path.join(sf_dir, "events.parquet")
-            probe = scoped.read.parquet(path).rdd.getNumPartitions()
-            assert _scan_split_estimate(scoped, path) == probe, (
-                max_pb,
-                open_cost,
-                sf_dir,
-            )
+    with tempfile.TemporaryDirectory() as multi:
+        out = os.path.join(multi, "events.parquet")
+        load_table(spark, SF_SMALL, "events").repartition(7).write.parquet(out)
+        # zero-length files sorted last: Spark's schema inference
+        # reads the first file's footer, but its scans list none
+        for i in range(2):
+            open(os.path.join(out, f"part-{99990 + i}-empty.parquet"), "w").close()
+        for max_pb, open_cost, leaf, sf_dirs in (
+            ("1t", "4mb", None, (SF_SMALL, "/root/testdata/sf0.01")),
+            ("128m", "1tb", None, (SF_SMALL, "/root/testdata/sf0.01")),
+            ("128m", "4mb", None, (multi,)),
+            ("128m", "1k", "1", (multi,)),
+        ):
+            scoped = spark.newSession()  # fresh tbl() cache, own conf
+            scoped.conf.set("spark.sql.files.maxPartitionBytes", max_pb)
+            scoped.conf.set("spark.sql.files.openCostInBytes", open_cost)
+            if leaf:
+                scoped.conf.set("spark.sql.leafNodeDefaultParallelism", leaf)
+            for sf_dir in sf_dirs:
+                df = tbl(scoped, sf_dir, "events", parallel=True)
+                assert df.count() > 0
+                path = os.path.join(sf_dir, "events.parquet")
+                probe = scoped.read.parquet(path).rdd.getNumPartitions()
+                assert _scan_split_estimate(scoped, path) == probe, (
+                    max_pb,
+                    open_cost,
+                    leaf,
+                    sf_dir,
+                )
 
 
 def test_scan_split_estimate_matches_rdd_probe(spark):
