@@ -86,7 +86,15 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ns_cols = _nanos_ts_columns(path)
     if ns_cols:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+    # Spark infers a directory's schema from the footer of its first-
+    # sorted file, zero-length ones included, and fails on those: take
+    # the data schema from the first non-empty file instead (partition
+    # columns are still inferred from the directory names).
+    files = data_files(path)
+    reader = spark.read
+    if files and files[0] != path:
+        reader = reader.schema(spark.read.parquet(files[0]).schema)
+    df = reader.parquet(path)
     for field in df.schema.fields:
         # ns_cols comes from the pyarrow footer, which also reports
         # legacy INT96 timestamps as ns — those decode to TIMESTAMP in

@@ -1409,68 +1409,28 @@ def _adc_sql() -> str:
     """
 
 
-def _adc_tables(probes: list, cb: dict) -> dict[tuple[int, int], list[float]]:
-    """Driver-computed per-(probe, subspace) distance tables
-    {(probe_id, m): [K squared distances]} — bounded (|probes|·M·K =
-    160 values at the registered geometry). Left-associated Python
-    float adds ≡ the oracle's list_reduce fold over identical doubles.
-    Shared by ns_similarity_pq_adc and ns_similarity_ivfpq."""
-    tables: dict[tuple[int, int], list[float]] = {}
-    for p in probes:
+def _adc_tables(queries: dict, cb: dict) -> dict:
+    """Driver-computed ADC distance tables {key: [M rows of K squared
+    distances]}, one per query vector of `queries` {key: vector} —
+    bounded (|queries|·M·K values). The one table builder of the ADC
+    family: ns_similarity_pq_adc and ivfpq_topk pass the raw probe
+    vectors, ivfpq_topk_residual the residual query q − centroid(cell)
+    per (probe, probed cell). Left-associated Python float adds ≡ the
+    oracle's list_reduce fold over identical doubles."""
+    tables: dict = {}
+    for key, q in queries.items():
+        tabs = []
         for m in range(_PQ_M):
-            qsub = [
-                float(v)
-                for v in p.embedding[m * _PQ_DSUB:(m + 1) * _PQ_DSUB]
-            ]
+            qsub = [float(v) for v in q[m * _PQ_DSUB:(m + 1) * _PQ_DSUB]]
             row = []
             for j in range(_PQ_K):
                 acc = 0.0
                 for a, b in zip(qsub, cb[(m, j)]):
                     acc = acc + (a - b) * (a - b)
                 row.append(acc)
-            tables[(p.vec_id, m)] = row
+            tabs.append(row)
+        tables[key] = tabs
     return tables
-
-
-def _probe_meta_expr(cells_by_probe: dict[int, list[int]]) -> Column:
-    """`array(struct(pid as probe_id, array(cells) as cells), ...)`
-    as ONE generated-SQL expr() — the probe→cells dispatch array the
-    CASE paths explode. Same _sqdiff_chain_sql rationale (guide
-    §1.1): the Column-API form cost ~6 py4j round-trips per probe of
-    pure plan CONSTRUCTION; the parsed literals are identical
-    ints."""
-    items = ", ".join(
-        f"struct({int(pid)} as probe_id, "
-        f"array({', '.join(str(int(c)) for c in cells)}) as cells)"
-        for pid, cells in cells_by_probe.items()
-    )
-    return F.expr(f"array({items})")
-
-
-def _adc_chain_sql(tabs: list[list[float]]) -> str:
-    """`element_at(array(t..), c0+1) + ... + element_at(..., c7+1)`
-    — one probe's M-term ADC lookup chain as SQL text. Left-to-left
-    associativity and dlit_sql's cast-parse keep the doubles
-    bit-identical to the F.lit chain this replaces."""
-    return " + ".join(
-        f"element_at(array("
-        f"{', '.join(dlit_sql(t) for t in tab)}), c{m} + 1)"
-        for m, tab in enumerate(tabs)
-    )
-
-
-def _adc_case_expr(arms: list[tuple[str, list[list[float]]]]) -> Column:
-    """The per-probe ADC dispatch `CASE WHEN <cond> THEN <chain> ...
-    END` as ONE generated-SQL expr. The Column-API when()-chain it
-    replaces cost |arms|·M·(K+3) py4j round-trips (~600 for the
-    residual path's 10 arms) of plan construction per invocation —
-    the dominant serial driver cost the r14 PQ-family profiling
-    identified (guide §1.1); the parsed CaseWhen tree is the same
-    expression the when()-chain built (no ELSE → NULL on both)."""
-    whens = " ".join(
-        f"WHEN {cond} THEN {_adc_chain_sql(tabs)}" for cond, tabs in arms
-    )
-    return F.expr(f"CASE {whens} END")
 
 
 @query("ns_similarity_pq_adc", _adc_sql())
@@ -1508,7 +1468,7 @@ def ns_similarity_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("vec_id")
         .collect()
     )
-    tables = _adc_tables(probes, cb1)
+    tables = _adc_tables({p.vec_id: p.embedding for p in probes}, cb1)
     codes = [
         _pq_argmin(m, cb1).getField("j").alias(f"c{m}")
         for m in range(_PQ_M)
@@ -1518,7 +1478,7 @@ def ns_similarity_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     for p in probes:
         adc = None
         for m in range(_PQ_M):
-            lut = F.array(*[F.lit(t) for t in tables[(p.vec_id, m)]])
+            lut = F.array(*[F.lit(t) for t in tables[p.vec_id][m]])
             term = F.element_at(lut, F.col(f"c{m}") + 1)
             adc = term if adc is None else adc + term
         per_probe.append(
@@ -1607,8 +1567,8 @@ def ivfpq_build_index(em: DataFrame, cent: DataFrame, cb: dict) -> DataFrame:
     `(vec_id, cell_id, c0..c{M-1})`: coarse cell via broadcast-join
     argmax dot, PQ codes via row-local argmin in the same projection.
     In production this frame is materialized ONCE partitioned/bucketed
-    by cell_id (scripts/ivfpq_decade.py measures that amortized query
-    path); ivfpq_topk builds it inline when no index is passed. The
+    by cell_id (ns_ann_index_serve serves that amortized query path);
+    ivfpq_topk builds it inline when no index is passed. The
     coarse assignment is similarity._ivf_assigned — the ONE shared
     implementation every IVF consumer prunes through — with the PQ
     encode fused into the same projection."""
@@ -1639,45 +1599,36 @@ def _probe_top_cells(q_emb, cents: list, nprobe: int) -> list[int]:
     return [cid for _neg, cid in scoredc[:nprobe]]
 
 
-# Above this many probes per batch, the per-probe CASE-chain dispatch
-# (|probes| arms × M·K literals) is swapped for a broadcast
-# probe-table join — the analyzed plan stops growing with the batch.
-# 64 keeps the CASE plan ≤ ~64·8·4 = 2048 literals (well under any
-# codegen limit) while every registered geometry (≤15 probes) stays
-# on the zero-join fast path.
-_IVFPQ_CASE_MAX_PROBES = 64
-
-
 def _ivfpq_score_join(
     enc: DataFrame,
-    probes: list,
-    cells_by_probe: dict[int, list[int]],
-    tables: dict[tuple[int, int], list[float]],
-    probed_union: list[int],
+    tables: dict[tuple[int, int], list[list[float]]],
+    k: int,
 ) -> DataFrame:
-    """ADC scoring for LARGE probe batches: broadcast a driver-built
-    probe table — one row per (probe, probed cell) carrying that
-    probe's M×K distance tables — EQUI-JOINED on cell_id against the
-    cell-prefiltered codes, each lookup resolved with element_at.
-    Numerically identical to the CASE chain (same doubles, same
-    left-associated t0+…+t7 sum), but the plan is one broadcast HASH
-    join whose size does not grow with |probes| (and never a nested-
-    loop: the cell_id key makes it a plain BroadcastHashJoin)."""
-    spark = enc.sparkSession
-    prows = [
-        (
-            int(p.vec_id),
-            int(cell),
-            [tables[(int(p.vec_id), m)] for m in range(_PQ_M)],
-        )
-        for p in probes
-        for cell in cells_by_probe[int(p.vec_id)]
-    ]
+    """The one IVFADC scorer and top-k tail, behind ivfpq_topk and
+    ivfpq_topk_residual at every probe count. `tables` maps each
+    (probe_id, probed cell_id) to that pair's M×K distance tables (the
+    raw path repeats a probe's tables per cell; the residual path's
+    differ per cell). They ride a broadcast probe table — one row per
+    key — EQUI-JOINED on cell_id against the codes, each lookup
+    resolved with element_at and summed left-associated t0+…+t7. The
+    tables are data, not code: the plan is one broadcast HASH join
+    (never a nested loop) whose size does not grow with |probes|, so
+    no batch size reaches the 64 KB generated-method limit. The
+    union-of-probed-cells prefilter is a SIMPLE predicate on cell_id,
+    so when `enc` is materialized partitioned/bucketed by cell it
+    pushes to the scan and prunes whole files (the inverted-list
+    read); the join only resolves WHICH probes a surviving row
+    belongs to. Top-k is a probe_id window whose rank gate Spark
+    pushes into WindowGroupLimit (partial top-k per input partition
+    before the |probes|-key exchange)."""
+    from pyspark.sql.window import Window as W
+
     ptab = local_frame(
-        spark,
-        prows,
+        enc.sparkSession,
+        [(pid, cell, tabs) for (pid, cell), tabs in tables.items()],
         "probe_id long, cell_id long, tabs array<array<double>>",
     )
+    probed_union = sorted({cell for _pid, cell in tables})
     cand = (
         enc.filter(F.col("cell_id").isin(probed_union))
         .join(F.broadcast(ptab), "cell_id")
@@ -1689,10 +1640,17 @@ def _ivfpq_score_join(
             F.element_at(F.col("tabs"), m + 1), F.col(f"c{m}") + 1
         )
         adc = term if adc is None else adc + term
-    return cand.select(
-        F.col("probe_id").cast("bigint").alias("probe_id"),
-        "vec_id",
-        adc.alias("adc_d2"),
+    w = W.partitionBy("probe_id").orderBy("adc_d2", "vec_id")
+    return (
+        cand.select("probe_id", "vec_id", adc.alias("adc_d2"))
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(
+            "probe_id",
+            F.col("vec_id").alias("neighbor_id"),
+            "adc_d2",
+            F.col("rank").cast("bigint").alias("rank"),
+        )
     )
 
 
@@ -1719,25 +1677,20 @@ def ivfpq_topk(
     row-local PQ encode (the ns_similarity_ann_ivf and
     ns_embedding_pq passes FUSED into a single projection — one scan,
     zero extra shuffle); probe→cell selection and distance tables are
-    bounded driver work (|probes|·C dots + |probes|·M·K literals);
-    the ADC scan is gated by a row-local array_contains(cell) filter
-    BEFORE the per-probe CASE dispatch computes any lookup, so
+    bounded driver work (|probes|·C dots + |probes|·M·K doubles);
+    the ADC scan is _ivfpq_score_join at every probe count: a
+    cell_id IN-set prefilter, then the broadcast probe-table join, so
     non-probed cells are never scored — at 100 TB with the corpus
     bucketed/partitioned by cell_id the same filter prunes whole
     files, which is exactly the inverted-list read a FAISS IVF index
-    does. Top-k is a probe_id window whose rank gate Spark pushes
-    into WindowGroupLimit (partial top-k per input partition before
-    the |probes|-key exchange).
+    does.
 
     Pass `enc` (a materialized ivfpq_build_index frame, ideally
     partitioned by cell_id) to run the AMORTIZED query path — the
     build happens once, queries pay only the pruned scan; the
     cell_id isin-prefilter is a simple scan predicate there, so
     partition pruning skips non-probed files entirely
-    (scripts/ivfpq_decade.py measures this against the full-scan
-    ADC)."""
-    from pyspark.sql.window import Window as W
-
+    (ns_ann_index_serve is that path, registered)."""
     if cb is None:
         cb = _pq_train_timed(em)
     if enc is None:
@@ -1754,68 +1707,13 @@ def ivfpq_topk(
     probes = sorted(probe_rows, key=lambda r: int(r.vec_id))
     if cents is None:
         cents = cent.orderBy("cent_id").collect()
-    tables = _adc_tables(probes, cb)
-
-    cells_by_probe = {
-        int(p.vec_id): _probe_top_cells(p.embedding, cents, nprobe)
+    raw = _adc_tables({int(p.vec_id): p.embedding for p in probes}, cb)
+    tables = {
+        (int(p.vec_id), cell): raw[int(p.vec_id)]
         for p in probes
+        for cell in _probe_top_cells(p.embedding, cents, nprobe)
     }
-    # the union-of-probed-cells prefilter is a SIMPLE predicate on
-    # cell_id, so when `enc` is materialized partitioned/bucketed by
-    # cell it pushes to the scan and prunes whole files (the
-    # inverted-list read) — the per-probe array_contains below only
-    # resolves WHICH probe a surviving row belongs to
-    probed_union = sorted({c for cs in cells_by_probe.values() for c in cs})
-    if len(probes) > _IVFPQ_CASE_MAX_PROBES:
-        # Large probe batches: a |probes|-arm CASE chain of M·K
-        # literals grows the analyzed plan linearly with the batch
-        # (r12 verdict #6). Ship the probe metadata + distance tables
-        # as a BROADCAST probe table instead — same cell prefilter,
-        # same lookups via element_at, constant-size plan.
-        scored = _ivfpq_score_join(
-            enc, probes, cells_by_probe, tables, probed_union
-        )
-    else:
-        meta = _probe_meta_expr(cells_by_probe)
-        cand = (
-            enc.filter(F.col("cell_id").isin(probed_union))
-            .select("*", F.explode(meta).alias("s"))
-            .filter(
-                F.array_contains(F.col("s.cells"), F.col("cell_id"))
-                & (F.col("vec_id") != F.col("s.probe_id"))
-            )
-        )
-        # per-probe ADC as a lazy CASE chain: only the matched
-        # probe's lookup chain evaluates, and only on rows that
-        # survived the cell filter above (the full-scan ADC never
-        # happens). Built as ONE generated-SQL expr — the when()-
-        # chain this replaces was ~300 py4j calls of construction
-        # per invocation (guide §1.1, the r14 PQ-family finding).
-        adc = _adc_case_expr(
-            [
-                (
-                    f"s.probe_id = {int(p.vec_id)}",
-                    [tables[(int(p.vec_id), m)] for m in range(_PQ_M)],
-                )
-                for p in probes
-            ]
-        )
-        scored = cand.select(
-            F.col("s.probe_id").cast("bigint").alias("probe_id"),
-            "vec_id",
-            adc.alias("adc_d2"),
-        )
-    w = W.partitionBy("probe_id").orderBy("adc_d2", "vec_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "probe_id",
-            F.col("vec_id").alias("neighbor_id"),
-            "adc_d2",
-            F.col("rank").cast("bigint").alias("rank"),
-        )
-    )
+    return _ivfpq_score_join(enc, tables, k)
 
 
 @query("ns_similarity_ivfpq", _ivfpq_sql())
@@ -1841,7 +1739,9 @@ def ns_similarity_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     NOT done here so the codes stay bit-shared with ns_embedding_pq).
 
     Scale: see ivfpq_topk — one fused corpus scan (assign + encode),
-    bounded driver state, cell-gated ADC, WindowGroupLimit top-k."""
+    bounded driver state, cell-gated ADC through the one broadcast
+    probe-table join (_ivfpq_score_join, at every probe count),
+    WindowGroupLimit top-k."""
     from .similarity import ivf_centroids
 
     em = tbl(spark, sf_dir, "embeddings", parallel=True)
@@ -1951,36 +1851,6 @@ def _ivfpq_residual_sql(probe_pred: str | None = None) -> str:
     """
 
 
-def residual_tables(
-    probes: list,
-    cells_by_probe: dict[int, list[int]],
-    cent_by_id: dict[int, list[float]],
-    cb: dict,
-) -> dict[tuple[int, int, int], list[float]]:
-    """Per-(probe, probed cell, subspace) residual distance tables
-    {(probe_id, cell_id, m): [K squared distances]} — the residual
-    query q − centroid(cell) differs per probed cell, so the table
-    count is |probes|·nprobe·M (still bounded driver work: 320 values
-    at the registered geometry). Same left-associated double folds as
-    _adc_tables."""
-    tables: dict[tuple[int, int, int], list[float]] = {}
-    for p in probes:
-        pid = int(p.vec_id)
-        for cell in cells_by_probe[pid]:
-            cent = cent_by_id[cell]
-            rq = [float(a) - b for a, b in zip(p.embedding, cent)]
-            for m in range(_PQ_M):
-                sub = rq[m * _PQ_DSUB:(m + 1) * _PQ_DSUB]
-                row = []
-                for j in range(_PQ_K):
-                    acc = 0.0
-                    for a, b in zip(sub, cb[(m, j)]):
-                        acc = acc + (a - b) * (a - b)
-                    row.append(acc)
-                tables[(pid, cell, m)] = row
-    return tables
-
-
 def ivfpq_topk_residual(
     em: DataFrame,
     cent: DataFrame,
@@ -1999,12 +1869,14 @@ def ivfpq_topk_residual(
     because the residual query differs per probed cell — table count
     |probes|·nprobe·M, still bounded driver work.
 
-    Scale shape: identical to ivfpq_topk (one fused corpus pass —
-    the residual subtract is row-local on the assignment projection —
-    bounded driver state, cell-gated ADC scan, WindowGroupLimit
-    top-k); only the constant driver table work grows by ×nprobe."""
-    from pyspark.sql.window import Window as W
-
+    Only the residual frame, its codebook and the per-(probe, cell)
+    tables are this path's own; scoring and top-k are ivfpq_topk's
+    _ivfpq_score_join, whose probe-table rows are keyed per (probe,
+    cell) already. Scale shape: identical to ivfpq_topk (one fused
+    corpus pass — the residual subtract is row-local on the
+    assignment projection — bounded driver state, cell-gated ADC
+    scan, WindowGroupLimit top-k); only the constant driver table
+    work grows by ×nprobe."""
     from .registry import persist_evicting
 
     # the residual frame feeds THREE actions (pq_train's init collect
@@ -2033,53 +1905,17 @@ def ivfpq_topk_residual(
     cent_by_id = {
         int(c.cent_id): [float(v) for v in c.cent_emb] for c in cents
     }
-    cells_by_probe = {
-        int(p.vec_id): _probe_top_cells(p.embedding, cents, nprobe)
-        for p in probes
-    }
-    tables = residual_tables(probes, cells_by_probe, cent_by_id, cb)
-    probed_union = sorted({c for cs in cells_by_probe.values() for c in cs})
-    meta = _probe_meta_expr(cells_by_probe)
-    cand = (
-        enc.filter(F.col("cell_id").isin(probed_union))
-        .select("*", F.explode(meta).alias("s"))
-        .filter(
-            F.array_contains(F.col("s.cells"), F.col("cell_id"))
-            & (F.col("vec_id") != F.col("s.probe_id"))
-        )
+    tables = _adc_tables(
+        {
+            (int(p.vec_id), cell): [
+                float(a) - b for a, b in zip(p.embedding, cent_by_id[cell])
+            ]
+            for p in probes
+            for cell in _probe_top_cells(p.embedding, cents, nprobe)
+        },
+        cb,
     )
-    # per-(probe, cell) ADC dispatch — |probes|·nprobe arms (10 at
-    # the registered geometry; a large-batch serve path would explode
-    # a broadcast (probe_id, cell_id, tabs) table exactly like
-    # _ivfpq_score_join). Built as ONE generated-SQL expr — the
-    # when()-chain this replaces was ~600 py4j calls of plan
-    # construction per invocation (guide §1.1).
-    adc = _adc_case_expr(
-        [
-            (
-                f"(s.probe_id = {pid}) AND (cell_id = {cell})",
-                [tables[(pid, cell, m)] for m in range(_PQ_M)],
-            )
-            for pid in (int(p.vec_id) for p in probes)
-            for cell in cells_by_probe[pid]
-        ]
-    )
-    scored = cand.select(
-        F.col("s.probe_id").cast("bigint").alias("probe_id"),
-        "vec_id",
-        adc.alias("adc_d2"),
-    )
-    w = W.partitionBy("probe_id").orderBy("adc_d2", "vec_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "probe_id",
-            F.col("vec_id").alias("neighbor_id"),
-            "adc_d2",
-            F.col("rank").cast("bigint").alias("rank"),
-        )
-    )
+    return _ivfpq_score_join(enc, tables, k)
 
 
 @query("ns_similarity_ivfpq_residual", _ivfpq_residual_sql())
@@ -2114,8 +1950,8 @@ def ns_similarity_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Build-once cache per (process, sf_dir, data fingerprint):
 # {(abspath, fp): (index_path, cb)}. The serving operator's STEADY
 # STATE is answering probes against an index that already exists —
-# scripts/ivfpq_decade.py measured this path for two rounds;
-# registering it makes the partition-pruned inverted-list read a
+# SCALING.md records this path's amortized-query decade; registering
+# it makes the partition-pruned inverted-list read a
 # driver-gated, plan-asserted operator (r12 verdict #3). An index
 # refresh in production is a new directory + cache drop (blue/green),
 # not a rebuild per query. The fingerprint (embeddings parquet

@@ -1220,7 +1220,7 @@ def _ann_serve_sql() -> str:
 def stream_ann_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Online ANN serving: probe vectors arrive as micro-batches and
     are answered against the PREBUILT IVFPQ index — the production
-    read path scripts/ivfpq_decade.py measures, driven from a stream.
+    read path ns_ann_index_serve registers, driven from a stream.
     The index (codebook + cell-partitioned codes) is built ONCE
     before the stream starts and materialized as parquet partitioned
     by cell_id (the on-disk inverted lists); each micro-batch

@@ -1089,7 +1089,12 @@ def plan_checks(spark, sf_dir: str) -> list[dict]:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark(app_name="dump-plans")
+    # pinned to the setting PLANS.md is committed at, so a regeneration
+    # on a machine with another core count diffs only real plan changes
+    # (hashpartitioning widths and broadcast sizes follow the cores)
+    spark = get_spark(
+        app_name="dump-plans", master="local[32]", shuffle_partitions=32
+    )
     out_path = os.path.join(os.path.dirname(os.path.dirname(
         os.path.abspath(__file__))), "PLANS.md")
     lines = [

@@ -4068,14 +4068,15 @@ def test_ivfpq_residual_planted_twin_recall(spark):
     assert r_res >= 0.9, f"residual ivfpq recall@10 {r_res}"
 
 
-def test_ivfpq_large_probe_batch_join_path(spark, monkeypatch):
-    """r12 verdict #6: above _IVFPQ_CASE_MAX_PROBES the per-probe
-    CASE-chain dispatch (plan size linear in |probes|) must switch to
-    the broadcast probe-table equi-join. Drive 100 probes through the
-    serve path and assert (a) the plan carries NO per-probe CASE
-    dispatch and stays bounded, (b) the join path's rows are
-    BIT-IDENTICAL to the CASE path's (same doubles, same fold), and
-    (c) the join is a BroadcastHashJoin, never a nested loop."""
+def test_ivfpq_large_probe_batch_join_path(spark):
+    """One ADC scorer at large batches: ivfpq_topk and
+    ivfpq_topk_residual at 100 probes both score through the broadcast
+    probe-table join and match the DuckDB oracle row for row. Their
+    plans carry a BroadcastHashJoin, no per-probe `WHEN (s#..probe_id
+    = ..)` dispatch arm and no nested loop. The residual case runs
+    with codegen fallback off, so generated code that outgrows the
+    64 KB method limit fails the test instead of running
+    interpreted."""
     import re
 
     from flume_hive_batched_sink_spark.operators import clustering as cl
@@ -4084,40 +4085,36 @@ def test_ivfpq_large_probe_batch_join_path(spark, monkeypatch):
         ivf_centroids,
     )
 
+    from .oracle_harness import compare, duck_connection
+
     em = tbl(spark, SF_SMALL, "embeddings")
     cent = ivf_centroids(em)
     probe_ids = list(range(100))
-    assert len(probe_ids) > cl._IVFPQ_CASE_MAX_PROBES
+    pred = "vec_id < 100"
+    arm = re.compile(r"WHEN \(s#\d+\.probe_id = \d+\)")
+    con = duck_connection(SF_SMALL)
 
-    big = cl.ivfpq_topk(em, cent, probe_ids)
-    plan_join = big._jdf.queryExecution().executedPlan().toString()
-    # the probe-table lookup is a broadcast HASH join on cell_id
-    # (the assignment pass's bounded-broadcast BNLJ is allowlisted
-    # and present on BOTH paths — it is not what's under test here)
-    assert "BroadcastHashJoin" in plan_join
-    # no 100-arm dispatch: the CASE chain would carry one branch per
-    # probe; the join plan must not scale with |probes|
-    assert plan_join.count("CASE WHEN") < 10
-    rows_join = sorted(
-        (r.probe_id, r.neighbor_id, r.adc_d2, r.rank)
-        for r in big.collect()
-    )
+    def check(df, sql):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastHashJoin" in plan
+        assert not arm.search(plan)
+        assert "NestedLoopJoin" not in plan
+        assert "CartesianProduct" not in plan
+        assert compare(df, con, sql) == []
 
-    monkeypatch.setattr(cl, "_IVFPQ_CASE_MAX_PROBES", 10_000)
-    case = cl.ivfpq_topk(em, cent, probe_ids)
-    plan_case = case._jdf.queryExecution().executedPlan().toString()
-    # the CASE dispatch node is one CaseWhen with one `s.probe_id =
-    # <id>` arm (and its M·K literals) per probe: the literal plan
-    # carries exactly one arm per probe, the join plan none at all
-    # (its tables ride the broadcast probe table instead)
-    arm = re.compile(r"WHEN \(s#\d+\.probe_id = (\d+)\) THEN")
-    assert sorted(int(p) for p in arm.findall(plan_case)) == probe_ids
-    assert not arm.search(plan_join)
-    rows_case = sorted(
-        (r.probe_id, r.neighbor_id, r.adc_d2, r.rank)
-        for r in case.collect()
+    check(
+        cl.ivfpq_topk(em, cent, probe_ids), cl._ivfpq_sql(probe_pred=pred)
     )
-    assert rows_join == rows_case  # exact, including the doubles
+    key = "spark.sql.codegen.fallback"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        check(
+            cl.ivfpq_topk_residual(em, cent, probe_ids),
+            cl._ivfpq_residual_sql(probe_pred=pred),
+        )
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_ann_index_serve_partition_pruned(spark):
@@ -5581,11 +5578,14 @@ def test_tbl_accepts_every_spark_byte_string(spark):
     parses them: a session with `spark.sql.files.maxPartitionBytes=1t`
     (or openCostInBytes in `tb` form) must not crash tbl(), and the
     split estimate must still match the RDD probe under it. The
-    multi-file directory holds two zero-length files, which Spark's
-    file index skips (no split, no open cost). The last case sets
-    `spark.sql.leafNodeDefaultParallelism=1` with a small open cost
-    there, so total/cores sets the split size: Spark takes its core
-    count from that conf before the context's defaultParallelism."""
+    multi-file directory holds two zero-length files that sort first,
+    and the partitioned one a zero-length file first in a partition
+    directory: Spark's file index skips them (no split, no open cost),
+    and load_table must read both with the partition column kept. The
+    last case sets `spark.sql.leafNodeDefaultParallelism=1` with a
+    small open cost there, so total/cores sets the split size: Spark
+    takes its core count from that conf before the context's
+    defaultParallelism."""
     import os
     import tempfile
 
@@ -5596,17 +5596,23 @@ def test_tbl_accepts_every_spark_byte_string(spark):
     )
 
     with tempfile.TemporaryDirectory() as multi:
+        events = load_table(spark, SF_SMALL, "events")
         out = os.path.join(multi, "events.parquet")
-        load_table(spark, SF_SMALL, "events").repartition(7).write.parquet(out)
-        # zero-length files sorted last: Spark's schema inference
-        # reads the first file's footer, but its scans list none
+        events.repartition(7).write.parquet(out)
         for i in range(2):
-            open(os.path.join(out, f"part-{99990 + i}-empty.parquet"), "w").close()
+            open(os.path.join(out, f"a-{i}-empty.parquet"), "w").close()
+        parted = os.path.join(multi, "parted")
+        pout = os.path.join(parted, "events.parquet")
+        events.selectExpr("*", "user_id % 3 AS day").write.partitionBy(
+            "day"
+        ).parquet(pout)
+        open(os.path.join(pout, "day=0", "a-empty.parquet"), "w").close()
+        assert load_table(spark, parted, "events").columns[-1] == "day"
         for max_pb, open_cost, leaf, sf_dirs in (
             ("1t", "4mb", None, (SF_SMALL, "/root/testdata/sf0.01")),
             ("128m", "1tb", None, (SF_SMALL, "/root/testdata/sf0.01")),
-            ("128m", "4mb", None, (multi,)),
-            ("128m", "1k", "1", (multi,)),
+            ("128m", "4mb", None, (multi, parted)),
+            ("128m", "1k", "1", (multi, parted)),
         ):
             scoped = spark.newSession()  # fresh tbl() cache, own conf
             scoped.conf.set("spark.sql.files.maxPartitionBytes", max_pb)
@@ -5617,7 +5623,7 @@ def test_tbl_accepts_every_spark_byte_string(spark):
                 df = tbl(scoped, sf_dir, "events", parallel=True)
                 assert df.count() > 0
                 path = os.path.join(sf_dir, "events.parquet")
-                probe = scoped.read.parquet(path).rdd.getNumPartitions()
+                probe = load_table(scoped, sf_dir, "events").rdd.getNumPartitions()
                 assert _scan_split_estimate(scoped, path) == probe, (
                     max_pb,
                     open_cost,
