@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 from typing import Any
 
 from pyspark.sql import SparkSession
@@ -37,6 +38,9 @@ class CounterReporter(StreamingQueryListener):
             SCRATCH, "counters", "sink_counters.json"
         )
         self.totals: dict[str, dict[str, Any]] = {}
+        # run ids of the queries whose termination this listener saw
+        self._terminated: set[str] = set()
+        self._cv = threading.Condition()
 
     # -- listener callbacks -------------------------------------------------
     def onQueryStarted(self, event) -> None:  # noqa: N802 (Spark API)
@@ -61,6 +65,21 @@ class CounterReporter(StreamingQueryListener):
 
     def onQueryTerminated(self, event) -> None:  # noqa: N802
         self._flush()
+        with self._cv:
+            self._terminated.add(str(event.runId))
+            self._cv.notify_all()
+
+    def wait_terminated(self, run_id, timeout: float = 60.0) -> bool:
+        """Block until this listener has seen the termination of the
+        query run `run_id` (a StreamingQuery's `runId`). The listener
+        bus delivers a query's events in order, so by then every
+        progress event of that run has reached the totals — a query's
+        awaitTermination returns while they may still be queued.
+        False if `timeout` seconds pass first."""
+        with self._cv:
+            return self._cv.wait_for(
+                lambda: str(run_id) in self._terminated, timeout
+            )
 
     # -- report -------------------------------------------------------------
     def counters_json(self) -> str:

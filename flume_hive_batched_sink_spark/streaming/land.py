@@ -12,14 +12,19 @@ is a last-write-wins merge of appends; the completeness check is the
 driver-side epilogue (the driver is always "leader" — ZK election
 collapses, SURVEY.md §3.4), so the bookkeeping view the epilogue
 decides on lives on the driver too (one `_Book` per bookkeeping path)
-and is read back from disk only on restart and reconcile ticks.
+and is read back from disk only on restart. The bookkeeping rows are
+already on the driver, so the driver writes each append itself: one
+parquet file, published by rename (the Structured Streaming paper's
+offset/commit logs are driver-written files the same way). A
+micro-batch therefore runs 4 Spark jobs: the partitioned data write
+and the collect of its per-logdate counts, two jobs each.
 
 Guarantee: the micro-batch is checkpoint-bounded, so a batch is never
 skipped (this structurally fixes the data-loss FIXME at
 HiveBatchedSink.scala:335, commit-before-flush). The data write and
 the bookkeeping appends are NOT idempotent under replay: a batch_id
 replayed after a crash before its checkpoint commit lands its rows
-and adds its count a second time (ROADMAP item 2).
+and adds its count a second time (ROADMAP item 1).
 """
 
 from __future__ import annotations
@@ -27,6 +32,7 @@ from __future__ import annotations
 import os
 import shutil
 import threading
+import uuid
 from collections.abc import Callable
 from typing import NamedTuple
 
@@ -35,7 +41,6 @@ from pyspark.sql import functions as F
 
 from ..config import SinkConfig
 from ..functions.partition import derive_logdate
-from ..operators.registry import local_frame
 from ..sources.parse import parse_column
 from .stage import SCRATCH, capture_batch_plan
 
@@ -141,8 +146,9 @@ class _Book:
         self.ts_type = "timestamp"
 
     def load(self, spark: SparkSession, cfg: SinkConfig) -> None:
-        """Rebuild from the durable appends (restart / reconcile
-        ticks). No bookkeeping on disk → empty, with no Spark job."""
+        """Rebuild from the durable appends (restart, or the first
+        tick over an unloaded view). No bookkeeping on disk → empty,
+        with no Spark job."""
         from pyspark.errors import AnalysisException
 
         self.rows = None  # stays unloaded if a read below raises
@@ -186,17 +192,42 @@ def _book(cfg: SinkConfig) -> _Book:
 def _append(
     spark: SparkSession, cfg: SinkConfig, rows: list[_Row], ts_type: str
 ) -> None:
-    """One bookkeeping append, JVM-local (registry.local_frame)."""
-    df = local_frame(
-        spark,
-        [r[:5] for r in rows],
-        f"`{cfg.partition_col}` string, sinkcount bigint, "
-        "updatetime bigint, batch_id int, state string",
-    ).withColumn(
-        "updatetime", F.timestamp_micros("updatetime").cast(ts_type)
+    """One bookkeeping append: one parquet file the driver writes with
+    pyarrow (no Spark job), in the schema Spark itself writes —
+    `logdate string, sinkcount bigint, updatetime, batch_id int, state
+    string`, updatetime of the stream's event-time type `ts_type`. It
+    is written under a hidden name (readers skip `.`-files) and
+    renamed into place, so a reader never sees a partial append."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    logdate, sinkcount, updatetime, batch_id, state = zip(
+        *(r[:5] for r in rows)
     )
-    capture_batch_plan(df, f"land_batch:{cfg.table}")
-    df.write.mode("append").parquet(_book_path(cfg))
+    updatetime = pa.array(updatetime, pa.timestamp("us", tz="UTC"))
+    if ts_type == "timestamp_ntz":
+        # the instant's wall clock in the session time zone, as Spark's
+        # cast to timestamp_ntz gives it (`_micros` reads it back)
+        tz = spark.conf.get("spark.sql.session.timeZone")
+        updatetime = pc.local_timestamp(
+            updatetime.cast(pa.timestamp("us", tz))
+        )
+    table = pa.table(
+        {
+            cfg.partition_col: pa.array(logdate, pa.string()),
+            "sinkcount": pa.array(sinkcount, pa.int64()),
+            "updatetime": updatetime,
+            "batch_id": pa.array(batch_id, pa.int32()),
+            "state": pa.array(state, pa.string()),
+        }
+    )
+    path = _book_path(cfg)
+    os.makedirs(path, exist_ok=True)
+    name = f"part-{uuid.uuid4()}.parquet"
+    tmp = os.path.join(path, f".{name}")
+    pq.write_table(table, tmp)
+    os.replace(tmp, os.path.join(path, name))
 
 
 def land_batch(
@@ -216,37 +247,40 @@ def land_batch(
     time are 'CHECKED' and reported via the `on_complete` callback
     (the reference's REST POST, DTEUtils.scala:23-33).
 
+    Steps 2 and 3 are the batch's only Spark jobs (4 in all: each is
+    a shuffle stage plus a result stage). The batch is not persisted
+    between them: the counts read only `ts` and the logdate, so
+    column pruning drops the parse from their re-read of the source.
+    The bookkeeping appends are driver-written files (`_append`).
+
     A logdate's `sinkcount` is cumulative: the count the bookkeeping
     already holds plus this batch's rows (the reference's counter
     map, SURVEY.md §3.3). Replaying a batch_id adds its rows again —
     idempotence under replay is not provided (module docstring)."""
     spark = batch_df.sparkSession
-    routed = route_and_parse(batch_df, cfg).persist()
-    try:
-        # plan audit (scripts/plan_sweep.py): foreachBatch pipelines
-        # are invisible to explainInternal, so record the batch plans
-        capture_batch_plan(routed, f"land_batch:{cfg.table}")
-        data_path = os.path.join(cfg.output_path, cfg.table)
-        (
-            routed.repartition(cfg.partition_col)
-            .write.mode("append")
-            .option("maxRecordsPerFile", cfg.max_records_per_file)
-            .partitionBy(cfg.partition_col)
-            .format(cfg.file_format)
-            .save(data_path)
+    routed = route_and_parse(batch_df, cfg)
+    # plan audit (scripts/plan_sweep.py): foreachBatch pipelines are
+    # invisible to explainInternal, so record the batch plans
+    capture_batch_plan(routed, f"land_batch:{cfg.table}")
+    data_path = os.path.join(cfg.output_path, cfg.table)
+    (
+        routed.repartition(cfg.partition_col)
+        .write.mode("append")
+        .option("maxRecordsPerFile", cfg.max_records_per_file)
+        .partitionBy(cfg.partition_col)
+        .format(cfg.file_format)
+        .save(data_path)
+    )
+    counts = (
+        routed.groupBy(cfg.partition_col)
+        .agg(
+            F.count("*").alias("n"),
+            _micros(F.max("ts")).alias("updatetime"),
         )
-        counts = (
-            routed.groupBy(cfg.partition_col)
-            .agg(
-                F.count("*").alias("n"),
-                _micros(F.max("ts")).alias("updatetime"),
-            )
-            .withColumn("window_end", _window_end(cfg))
-        )
-        capture_batch_plan(counts, f"land_batch:{cfg.table}")
-        counts = counts.collect()
-    finally:
-        routed.unpersist()
+        .withColumn("window_end", _window_end(cfg))
+    )
+    capture_batch_plan(counts, f"land_batch:{cfg.table}")
+    counts = counts.collect()
     _apply_file_naming(spark, data_path, cfg, [r[0] for r in counts])
 
     book = _book(cfg)
@@ -281,8 +315,10 @@ def _epilogue(
     not-yet-NOTIFIED logdate whose window end has passed the raw
     high-water event time, mark it CHECKED, notify, mark NOTIFIED.
     The per-batch path (land_batch) and the startup / timer reconcile
-    (reconcile_notifications, `new=[]`) share it, so the paths cannot
-    drift. Returns the notified logdates.
+    (`_reconcile`, `new=[]`) share it, so the paths cannot drift.
+    Returns the notified logdates. A tick decides on the driver view
+    and each of its (at most two) appends is one driver-written file,
+    so it runs no Spark job.
 
     The loop re-checks ALL open logdates every tick, not just the
     current batch's: batch-local checking would never finalize a
@@ -369,11 +405,25 @@ def reconcile_notifications(
     to deliver it immediately, independent of new data.
 
     Reloads the driver view from disk first, then runs one epilogue
-    tick whose marks carry the current max batch_id. No bookkeeping
-    on disk → nothing to reconcile → []."""
+    tick (`_reconcile`). No bookkeeping on disk → nothing to
+    reconcile → []."""
+    return _reconcile(spark, cfg, on_complete, reload=True)
+
+
+def _reconcile(
+    spark: SparkSession,
+    cfg: SinkConfig,
+    on_complete: Callable[[list[str]], None],
+    reload: bool,
+) -> list[str]:
+    """One epilogue tick with no new rows, its marks carrying the
+    view's max batch_id. The view is read from disk first on `reload`
+    or while it is unloaded; otherwise the tick runs on the driver
+    view alone."""
     book = _book(cfg)
     with book.lock:
-        book.load(spark, cfg)
+        if reload or book.rows is None:
+            book.load(spark, cfg)
         if not book.rows:
             return []
         max_bid = max(r.batch_id for r in book.rows.values())
@@ -420,12 +470,14 @@ def reconcile_timer(
     per-batch epilogue nor the startup reconcile can deliver a
     notification whose window closes while the stream idles (e.g. a
     logdate finalized by wall-clock long after its last row). This
-    daemon thread re-runs reconcile_notifications every `interval_s`
-    — the Spark analog of the reference's leader-side timer loop
+    daemon thread runs one epilogue tick every `interval_s` — the
+    Spark analog of the reference's leader-side timer loop
     (HiveBatchedSink.scala:205-227 runs getFinishedLogdateList on a
-    schedule, not per event). Each tick reloads the driver view from
-    disk under the view's lock; delivery stays at-least-once and
-    once-per-logdate via the same durable CHECKED/NOTIFIED marks.
+    schedule, not per event). A tick decides on the driver view under
+    its lock and reads disk only while the view is unloaded: the
+    driver is the view's only writer, so the view already holds every
+    append. Delivery stays at-least-once and once-per-logdate via the
+    same durable CHECKED/NOTIFIED marks.
     Returns a zero-arg stopper; the availableNow one-shot paths don't
     need it (they reconcile at startup and tick per batch)."""
     stop = threading.Event()
@@ -433,7 +485,7 @@ def reconcile_timer(
     def loop() -> None:
         while not stop.wait(interval_s):
             try:
-                reconcile_notifications(spark, cfg, on_complete)
+                _reconcile(spark, cfg, on_complete, reload=False)
             except Exception:
                 # never kill the stream over a reconcile hiccup; the
                 # next tick (or restart reconcile) retries

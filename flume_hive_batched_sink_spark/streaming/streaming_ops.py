@@ -333,6 +333,9 @@ def stream_observe_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
         if metrics:
             for k in totals:
                 totals[k] += metrics[k] or 0
+    # progress events may still be queued on the listener bus:
+    # removing the reporter now would drop them from its report
+    reporter.wait_terminated(q.runId)
     uninstall(spark, reporter)
     return local_frame(
         spark,

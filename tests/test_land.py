@@ -1,6 +1,8 @@
 """land.py bookkeeping: the cumulative per-logdate `sinkcount`, the
-per-batch Spark-job floor of a landing micro-batch, and once-only
-notification under concurrent reconciles of the shared driver view."""
+per-batch Spark-job floor of a landing micro-batch, once-only
+notification under concurrent reconciles of the shared driver view,
+and the driver-written bookkeeping appends (one file each, in the
+schema Spark wrote, readable next to Spark-written appends)."""
 
 from __future__ import annotations
 
@@ -11,7 +13,7 @@ import shutil
 import pytest
 
 from flume_hive_batched_sink_spark.config import SinkConfig
-from flume_hive_batched_sink_spark.streaming import stage
+from flume_hive_batched_sink_spark.streaming import land, stage
 from flume_hive_batched_sink_spark.streaming.land import (
     land_batch,
     read_bookkeeping,
@@ -20,13 +22,40 @@ from flume_hive_batched_sink_spark.streaming.land import (
 DAY1 = "202401010000"
 
 
-def _staged_batch(spark, path: str, *ts: str):
+def _staged_batch(spark, path: str, *ts: str, ts_type: str = "timestamp"):
     """A micro-batch as the file source hands it over: a parquet scan."""
     spark.createDataFrame(
         [(datetime.datetime.fromisoformat(t), 1) for t in ts],
-        "ts timestamp, v int",
+        f"ts {ts_type}, v int",
     ).write.parquet(path)
     return spark.read.parquet(path)
+
+
+def _disk_view(spark, cfg) -> dict:
+    """read_bookkeeping as logdate → the driver view's first five
+    fields (updatetime as epoch µs, read as _Book.load reads it)."""
+    from pyspark.sql import functions as F
+
+    return {
+        r[0]: tuple(r[1:])
+        for r in read_bookkeeping(spark, cfg)
+        .select(
+            cfg.partition_col,
+            "sinkcount",
+            F.unix_micros(F.col("updatetime").cast("timestamp")),
+            "batch_id",
+            "state",
+        )
+        .collect()
+    }
+
+
+def _fresh_view(spark, cfg) -> dict:
+    """A restart's view: a new _Book loaded from disk, as logdate →
+    its first five fields."""
+    book = land._Book()
+    book.load(spark, cfg)
+    return {ld: tuple(r[1:5]) for ld, r in book.rows.items()}
 
 
 def test_sinkcount_cumulative_across_batches(spark, tmp_path):
@@ -59,9 +88,9 @@ def test_sinkcount_cumulative_across_batches(spark, tmp_path):
 
 def test_closing_batch_job_floor(spark, tmp_path):
     """The landing floor: a micro-batch that closes a logdate runs the
-    data write, one small collect of its counts and two tiny
-    bookkeeping appends — at most 7 Spark jobs — and no plan it
-    executes scans an RDD built from Python objects (`Scan
+    data write and one small collect of its counts — at most 4 Spark
+    jobs; its two bookkeeping appends are driver-written files — and
+    no plan it executes scans an RDD built from Python objects (`Scan
     ExistingRDD`, which starts Python workers)."""
     cfg = SinkConfig(
         table="events_floor",
@@ -90,10 +119,10 @@ def test_closing_batch_job_floor(spark, tmp_path):
         sc.setLocalProperty("spark.job.description", None)
     assert got == [DAY1]  # the batch did close a logdate
     jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert 0 < len(jobs) <= 7, sorted(jobs)
+    assert 0 < len(jobs) <= 4, sorted(jobs)
     pushed = stage.PLAN_PUSH_COUNTS[key] - pushed_before
-    # routed, the counts collect and both appends
-    assert pushed == 4
+    # routed and the counts collect
+    assert pushed == 2
     plans = stage.LAST_PLANS[key][-pushed:]
     assert not any("Scan ExistingRDD" in p for p in plans), plans
 
@@ -226,3 +255,168 @@ def test_flagship_reads_landed_table(spark, tmp_path):
     )
     sources.append(sources[-1])
     assert oracle_problems() == []
+
+
+@pytest.mark.parametrize("session_tz", ["UTC", "America/New_York"])
+def test_ntz_event_time_lands_ntz_updatetime(spark, tmp_path, session_tz):
+    """A stream whose event time is TIMESTAMP_NTZ keeps that type in
+    its bookkeeping: `updatetime` reads back as timestamp_ntz, equal to
+    the max `ts` of the batch that last wrote the logdate, in any
+    session time zone. The CHECKED/NOTIFIED marks carry the value the
+    driver view holds, so a reload from disk gives the view back."""
+    from pyspark.sql import functions as F
+
+    cfg = SinkConfig(
+        table="events_ntz",
+        output_path=str(tmp_path),
+        round_unit="day",
+        round_value=1,
+    )
+    prior = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", session_tz)
+    try:
+        batches = [
+            _staged_batch(
+                spark,
+                str(tmp_path / "in0"),
+                "2024-01-01 10:00:00.123456",
+                "2024-01-01 23:59:59.999999",
+                ts_type="timestamp_ntz",
+            ),
+            _staged_batch(
+                spark,
+                str(tmp_path / "in1"),
+                "2024-01-02 12:00:00.5",
+                ts_type="timestamp_ntz",
+            ),
+        ]
+        got: list[str] = []
+        want = {}
+        for bid, b in enumerate(batches):
+            land_batch(b, bid, cfg, on_complete=got.extend)
+            want.update(
+                (r[0], r[1])
+                for r in land.route_and_parse(b, cfg)
+                .groupBy(cfg.partition_col)
+                .agg(F.max("ts"))
+                .collect()
+            )
+        book = read_bookkeeping(spark, cfg)
+        assert book.schema["updatetime"].dataType.simpleString() == (
+            "timestamp_ntz"
+        )
+        assert {
+            r[cfg.partition_col]: r["updatetime"] for r in book.collect()
+        } == want
+        assert got  # a logdate closed, so the marks were written too
+        assert _fresh_view(spark, cfg) == _disk_view(spark, cfg)
+        live = land._book(cfg).rows
+        assert {ld: tuple(r[1:5]) for ld, r in live.items()} == (
+            _disk_view(spark, cfg)
+        )
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prior)
+
+
+@pytest.mark.parametrize("ts_type", ["timestamp", "timestamp_ntz"])
+def test_restart_over_spark_written_append(spark, tmp_path, ts_type):
+    """Bookkeeping written before appends were driver-written holds
+    Spark-written append files. A restart over such a directory reads
+    them together with the driver-written appends that follow: the
+    reloaded view and read_bookkeeping agree, and `sinkcount` keeps
+    accumulating across both kinds of file."""
+    from pyspark.sql import functions as F
+
+    from flume_hive_batched_sink_spark.operators.registry import local_frame
+
+    cfg = SinkConfig(
+        table="events_mixed_book",
+        output_path=str(tmp_path),
+        round_unit="day",
+        round_value=1,
+    )
+    t0 = datetime.datetime(2024, 1, 1, 10, tzinfo=datetime.timezone.utc)
+    # batch 0's NEW append for 100 rows of DAY1, as Spark wrote it
+    local_frame(
+        spark,
+        [(DAY1, 100, int(t0.timestamp()) * 1_000_000, 0, "NEW")],
+        f"`{cfg.partition_col}` string, sinkcount bigint, "
+        "updatetime bigint, batch_id int, state string",
+    ).withColumn(
+        "updatetime", F.timestamp_micros("updatetime").cast(ts_type)
+    ).write.mode("append").parquet(
+        os.path.join(cfg.output_path, f"{cfg.table}__bookkeeping")
+    )
+    got: list[str] = []
+    land_batch(
+        _staged_batch(
+            spark,
+            str(tmp_path / "in1"),
+            *["2024-01-01 11:00:00"] * 50,
+            ts_type=ts_type,
+        ),
+        1,
+        cfg,
+        on_complete=got.extend,
+    )
+    land_batch(
+        _staged_batch(
+            spark,
+            str(tmp_path / "in2"),
+            "2024-01-02 12:00:00",
+            ts_type=ts_type,
+        ),
+        2,
+        cfg,
+        on_complete=got.extend,
+    )
+    assert got == [DAY1]
+    disk = _disk_view(spark, cfg)
+    assert _fresh_view(spark, cfg) == disk
+    t1 = datetime.datetime(2024, 1, 1, 11, tzinfo=datetime.timezone.utc)
+    t2 = datetime.datetime(2024, 1, 2, 12, tzinfo=datetime.timezone.utc)
+    assert disk == {
+        DAY1: (150, int(t1.timestamp()) * 1_000_000, 2, "NOTIFIED"),
+        "202401020000": (1, int(t2.timestamp()) * 1_000_000, 2, "NEW"),
+    }
+    book = read_bookkeeping(spark, cfg)
+    assert book.schema["updatetime"].dataType.simpleString() == ts_type
+
+
+def test_one_file_per_bookkeeping_append(spark, tmp_path):
+    """Each bookkeeping append is one file and nothing else: after
+    every batch the directory holds exactly one `part-` file per
+    append made so far (the NEW/CHECKED append, plus a NOTIFIED one
+    when the batch closes a logdate), with no checksum, marker or
+    temporary file beside them."""
+    cfg = SinkConfig(
+        table="events_book_files",
+        output_path=str(tmp_path),
+        round_unit="day",
+        round_value=1,
+    )
+    book_dir = os.path.join(cfg.output_path, f"{cfg.table}__bookkeeping")
+    batches = [
+        # three logdates; the first two close → 2 appends
+        ("2024-01-01 10:00:00", "2024-01-02 10:00:00", "2024-01-03 10:00:00"),
+        # one open logdate → 1 append
+        ("2024-01-03 11:00:00", "2024-01-03 12:00:00"),
+        # closes 2024-01-03 → 2 appends
+        ("2024-01-04 00:00:01",),
+    ]
+    appends, closed = [2, 3, 5], [2, 2, 3]
+    got: list[str] = []
+    for bid, ts in enumerate(batches):
+        land_batch(
+            _staged_batch(spark, str(tmp_path / f"in{bid}"), *ts),
+            bid,
+            cfg,
+            on_complete=got.extend,
+        )
+        files = os.listdir(book_dir)
+        assert len(files) == appends[bid], sorted(files)
+        assert all(
+            f.startswith("part-") and f.endswith(".parquet") for f in files
+        ), sorted(files)
+        assert len(got) == closed[bid]
+    assert _fresh_view(spark, cfg) == _disk_view(spark, cfg)

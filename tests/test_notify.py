@@ -375,9 +375,9 @@ def test_idle_stream_restart_delivers_pending_post(spark, tmp_path):
 def test_reconcile_timer_delivers_while_idle(spark, tmp_path):
     """The long-idle window the startup reconcile can't close: the
     stream is already up (no restarts, no data), and a CHECKED-
-    unnotified row appears (crash of a sibling run / window closing
-    by wall clock). reconcile_timer's periodic pass must deliver it
-    without any micro-batch, exactly once."""
+    unnotified row is left by a POST that crashed. reconcile_timer's
+    periodic pass must deliver it without any micro-batch, exactly
+    once."""
     import datetime
     import time
 
@@ -419,3 +419,68 @@ def test_reconcile_timer_delivers_while_idle(spark, tmp_path):
     finally:
         stop()
     assert got == [day1]
+
+
+def test_reconcile_timer_tick_runs_no_spark_job(spark, tmp_path):
+    """A timer tick over a loaded driver view decides on that view and
+    writes its NOTIFIED mark from the driver: it runs no Spark job (it
+    reads no bookkeeping from disk), and still delivers a CHECKED-but-
+    unnotified logdate exactly once."""
+    import datetime
+    import os
+    import time
+
+    from flume_hive_batched_sink_spark.config import SinkConfig
+    from flume_hive_batched_sink_spark.streaming.land import (
+        land_batch,
+        read_bookkeeping,
+        reconcile_timer,
+    )
+
+    cfg = SinkConfig(
+        table="events_timer_nojobs",
+        output_path=str(tmp_path),
+        round_unit="day",
+        round_value=1,
+    )
+    day1 = "202401010000"
+
+    def crash(logdates):
+        raise RuntimeError("simulated crash before POST")
+
+    sc = spark.sparkContext
+    # the landing's own jobs run in a job group of their own, so every
+    # job outside any group below is one the timer thread ran
+    sc.setJobGroup(f"timer-setup-{os.getpid()}", "the crashed landing")
+    try:
+        df = spark.createDataFrame(
+            [
+                (datetime.datetime.fromisoformat(t), 1)
+                for t in ("2024-01-01 10:00:00", "2024-01-02 12:00:00")
+            ],
+            "ts timestamp, v int",
+        )
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            land_batch(df, 0, cfg, on_complete=crash)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    ungrouped = set(sc.statusTracker().getJobIdsForGroup(None))
+
+    got: list[str] = []
+    stop = reconcile_timer(spark, cfg, got.extend, interval_s=0.2)
+    try:
+        deadline = time.time() + 30
+        while not got and time.time() < deadline:
+            time.sleep(0.1)
+        time.sleep(1.0)  # more ticks: once per logdate
+    finally:
+        stop()
+    assert got == [day1]
+    ran = set(sc.statusTracker().getJobIdsForGroup(None)) - ungrouped
+    assert not ran, sorted(ran)
+    states = {
+        r[cfg.partition_col]: r["state"]
+        for r in read_bookkeeping(spark, cfg).collect()
+    }
+    assert states[day1] == "NOTIFIED"

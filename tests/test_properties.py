@@ -360,77 +360,64 @@ def test_landing_file_naming(spark, tmp_path):
     assert spark.read.parquet(table_dir).count() == 300
 
 
-def test_counters_json_report(spark):
-    """A16 / TimedSinkCounterMBean.getCountersJson parity: running the
-    observe query leaves a JSON counter report whose accumulated
-    totals match the query's own observed sums."""
+def _counters_report_total(spark) -> tuple[int, int]:
+    """Run the observe query with its JSON counter report cleared first
+    and read the report as soon as the query returns: (n_events the
+    report holds, n_events the query observed). Checks the invariants
+    that hold for any subset of batches the report may hold."""
     import json
     import os
-    import time
 
     from flume_hive_batched_sink_spark.scratch import SCRATCH
 
     path = os.path.join(SCRATCH, "counters", "sink_counters.json")
+    # a stale report from a previous run is complete too — clear it so
+    # only THIS run's counters can be read
+    if os.path.exists(path):
+        os.remove(path)
+    row = QUERIES["stream_observe_counters"](spark, SF_SMALL).collect()[0]
+    with open(path) as f:
+        data = json.load(f)
+    # this query observes exactly one n_events per input row, so the
+    # two per-batch counters the reporter accumulates must agree, and
+    # the file can never overcount the query's own totals
+    for q in data.values():
+        assert q["observed"].get("n_events", 0) == q["input_rows"], q
+        assert q["batches"] >= 1
+    total = sum(q["observed"].get("n_events", 0) for q in data.values())
+    assert total <= row.n_events, (total, row.n_events)
+    return total, row.n_events
 
-    def drain_listener_bus():
-        # the progress events ride the JVM listener bus before the
-        # Python forwarding listener sees them — drain it so a loaded
-        # box's backlog isn't mistaken for a lost event (r13 verdict
-        # #3: the old sleep-poll raced this queue)
-        try:
-            bus = spark.sparkContext._jsc.sc().listenerBus()
-            try:
-                bus.waitUntilEmpty(30_000)
-            except TypeError:
-                bus.waitUntilEmpty()
-        except Exception:
-            pass  # bus drain is best-effort; the stable-poll follows
 
-    def read_report():
-        if not os.path.exists(path):
-            return None
-        with open(path) as f:
-            return json.load(f)
+def test_counters_json_report(spark):
+    """A16 / TimedSinkCounterMBean.getCountersJson parity: running the
+    observe query leaves a JSON counter report whose accumulated
+    totals match the query's own observed sums — complete by the time
+    the query returns."""
+    total, want = _counters_report_total(spark)
+    assert total == want, (total, want)
 
-    def run_and_wait():
-        # a stale report from a previous run/attempt is stable too —
-        # clear it so the poll can only ever see THIS run's counters
-        if os.path.exists(path):
-            os.remove(path)
-        row = QUERIES["stream_observe_counters"](spark, SF_SMALL).collect()[0]
-        drain_listener_bus()
-        # poll until the report is STABLE (two identical consecutive
-        # reads), not merely present — the python-side listener thread
-        # flushes per event with no completion signal
-        prev = None
-        for _ in range(150):
-            data = read_report()
-            if data is not None and data == prev:
-                break
-            prev = data
-            time.sleep(0.2)
-        data = read_report() or {}
-        total = sum(
-            q["observed"].get("n_events", 0) for q in data.values()
-        )
-        # consistency invariants hold for every DELIVERED subset of
-        # batches, drops or not: this query observes exactly one
-        # n_events per input row, so the two per-batch counters the
-        # reporter accumulates must agree, and the file can never
-        # overcount the query's own totals
-        for q in data.values():
-            assert q["observed"].get("n_events", 0) == q["input_rows"], q
-            assert q["batches"] >= 1
-        assert total <= row.n_events, (total, row.n_events)
-        return total, row.n_events
 
-    # completeness (total == want) can still lose to a bounded-queue
-    # event DROP under a fully loaded suite; three independent runs
-    # make a persistent miss a real accounting bug, not noise
-    for attempt in range(3):
-        total, want = run_and_wait()
-        if total == want:
-            break
+def test_counters_report_waits_for_queued_progress(spark, monkeypatch):
+    """The report stays complete when the reporter lags the query:
+    progress events still queued on the listener bus when
+    awaitTermination returns must reach the reporter before it is
+    uninstalled. A reporter slowed to 0.5 s per progress event leaves
+    them queued."""
+    import time
+
+    from flume_hive_batched_sink_spark.streaming.counters import (
+        CounterReporter,
+    )
+
+    on_progress = CounterReporter.onQueryProgress
+
+    def slowed(self, event):
+        time.sleep(0.5)
+        on_progress(self, event)
+
+    monkeypatch.setattr(CounterReporter, "onQueryProgress", slowed)
+    total, want = _counters_report_total(spark)
     assert total == want, (total, want)
 
 
@@ -3581,7 +3568,7 @@ def test_plan_buffer_survives_repeat_invocations(spark):
     p2, c2 = run_once()
     assert p1 == p2  # same replay → same capture count
     assert c2 == c1 + p2  # counter is monotonic across invocations
-    # the scenario must actually wrap the buffer (12+12 > 16 today) —
+    # the scenario must actually wrap the buffer (6+6 > 8 today) —
     # a pre-call-length diff would have dropped the earliest captures
     assert c2 > stage._PLAN_BUF
     # the buffer itself is bounded — the counter is what preserved
