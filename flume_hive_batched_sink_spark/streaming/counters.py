@@ -69,17 +69,22 @@ class CounterReporter(StreamingQueryListener):
             self._terminated.add(str(event.runId))
             self._cv.notify_all()
 
-    def wait_terminated(self, run_id, timeout: float = 60.0) -> bool:
+    def wait_terminated(self, run_id) -> None:
         """Block until this listener has seen the termination of the
         query run `run_id` (a StreamingQuery's `runId`). The listener
         bus delivers a query's events in order, so by then every
         progress event of that run has reached the totals — a query's
         awaitTermination returns while they may still be queued.
-        False if `timeout` seconds pass first."""
+        Raises TimeoutError after 60 s rather than leave an incomplete
+        report unflagged."""
         with self._cv:
-            return self._cv.wait_for(
-                lambda: str(run_id) in self._terminated, timeout
-            )
+            if not self._cv.wait_for(
+                lambda: str(run_id) in self._terminated, 60.0
+            ):
+                raise TimeoutError(
+                    f"query run {run_id}: no termination event within "
+                    "60 s; the counter report may be incomplete"
+                )
 
     # -- report -------------------------------------------------------------
     def counters_json(self) -> str:

@@ -199,20 +199,31 @@ def _append(
     is written under a hidden name (readers skip `.`-files) and
     renamed into place, so a reader never sees a partial append."""
     import pyarrow as pa
-    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
     logdate, sinkcount, updatetime, batch_id, state = zip(
         *(r[:5] for r in rows)
     )
-    updatetime = pa.array(updatetime, pa.timestamp("us", tz="UTC"))
     if ts_type == "timestamp_ntz":
         # the instant's wall clock in the session time zone, as Spark's
-        # cast to timestamp_ntz gives it (`_micros` reads it back)
-        tz = spark.conf.get("spark.sql.session.timeZone")
-        updatetime = pc.local_timestamp(
-            updatetime.cast(pa.timestamp("us", tz))
+        # cast to timestamp_ntz gives it (`_micros` reads it back). The
+        # offsets come from Spark's own zone rules: Arrow's time zone
+        # database rejects ids Spark accepts, such as "+08:00".
+        jvm = spark._jvm
+        rules = jvm.org.apache.spark.sql.catalyst.util.DateTimeUtils.getZoneId(
+            spark.conf.get("spark.sql.session.timeZone")
+        ).getRules()
+
+        def wall(t: int) -> int:
+            instant = jvm.java.time.Instant.ofEpochSecond(t // 1_000_000)
+            return t + 1_000_000 * rules.getOffset(instant).getTotalSeconds()
+
+        updatetime = pa.array(
+            [None if t is None else wall(t) for t in updatetime],
+            pa.timestamp("us"),
         )
+    else:
+        updatetime = pa.array(updatetime, pa.timestamp("us", tz="UTC"))
     table = pa.table(
         {
             cfg.partition_col: pa.array(logdate, pa.string()),
@@ -226,8 +237,14 @@ def _append(
     os.makedirs(path, exist_ok=True)
     name = f"part-{uuid.uuid4()}.parquet"
     tmp = os.path.join(path, f".{name}")
-    pq.write_table(table, tmp)
-    os.replace(tmp, os.path.join(path, name))
+    try:
+        pq.write_table(table, tmp)
+        os.replace(tmp, os.path.join(path, name))
+    except BaseException:
+        # a hidden temp file is never read, so nothing else removes it
+        if os.path.exists(tmp):
+            os.remove(tmp)
+        raise
 
 
 def land_batch(

@@ -335,8 +335,10 @@ def stream_observe_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
                 totals[k] += metrics[k] or 0
     # progress events may still be queued on the listener bus:
     # removing the reporter now would drop them from its report
-    reporter.wait_terminated(q.runId)
-    uninstall(spark, reporter)
+    try:
+        reporter.wait_terminated(q.runId)
+    finally:
+        uninstall(spark, reporter)
     return local_frame(
         spark,
         [tuple(totals[k] for k in ("n_events", "sum_uid", "n_purchase"))],

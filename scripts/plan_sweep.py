@@ -171,9 +171,9 @@ def main() -> None:
     for name, fn in ops.QUERIES.items():
         is_stream = name.startswith("stream_")
         # diff on the MONOTONIC push counters, not list lengths — the
-        # plan buffers truncate to the last 16 entries, so lengths
-        # stop moving once a key is full and pre-call indices would
-        # drop the earliest new captures (r10 ADVICE)
+        # plan buffers truncate to the last stage._PLAN_BUF entries, so
+        # lengths stop moving once a key is full and pre-call indices
+        # would drop the earliest new captures (r10 ADVICE)
         before = dict(stage.PLAN_PUSH_COUNTS)
         try:
             df = fn(spark, SF)

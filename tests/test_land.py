@@ -257,7 +257,9 @@ def test_flagship_reads_landed_table(spark, tmp_path):
     assert oracle_problems() == []
 
 
-@pytest.mark.parametrize("session_tz", ["UTC", "America/New_York"])
+@pytest.mark.parametrize(
+    "session_tz", ["UTC", "America/New_York", "+08:00", "GMT+08:00"]
+)
 def test_ntz_event_time_lands_ntz_updatetime(spark, tmp_path, session_tz):
     """A stream whose event time is TIMESTAMP_NTZ keeps that type in
     its bookkeeping: `updatetime` reads back as timestamp_ntz, equal to
@@ -383,12 +385,13 @@ def test_restart_over_spark_written_append(spark, tmp_path, ts_type):
     assert book.schema["updatetime"].dataType.simpleString() == ts_type
 
 
-def test_one_file_per_bookkeeping_append(spark, tmp_path):
+def test_one_file_per_bookkeeping_append(spark, tmp_path, monkeypatch):
     """Each bookkeeping append is one file and nothing else: after
     every batch the directory holds exactly one `part-` file per
     append made so far (the NEW/CHECKED append, plus a NOTIFIED one
     when the batch closes a logdate), with no checksum, marker or
-    temporary file beside them."""
+    temporary file beside them — also after an append whose write
+    failed partway."""
     cfg = SinkConfig(
         table="events_book_files",
         output_path=str(tmp_path),
@@ -420,3 +423,16 @@ def test_one_file_per_bookkeeping_append(spark, tmp_path):
         ), sorted(files)
         assert len(got) == closed[bid]
     assert _fresh_view(spark, cfg) == _disk_view(spark, cfg)
+
+    import pyarrow.parquet as pq
+
+    def torn_write(table, where):
+        with open(where, "wb") as f:
+            f.write(b"PAR1")
+        raise OSError("disk full")
+
+    monkeypatch.setattr(pq, "write_table", torn_write)
+    row = land._Row("2024-01-05", 1, 0, len(batches), "NEW", None)
+    with pytest.raises(OSError, match="disk full"):
+        land._append(spark, cfg, [row], "timestamp")
+    assert len(os.listdir(book_dir)) == appends[-1]

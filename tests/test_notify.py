@@ -377,55 +377,9 @@ def test_reconcile_timer_delivers_while_idle(spark, tmp_path):
     stream is already up (no restarts, no data), and a CHECKED-
     unnotified row is left by a POST that crashed. reconcile_timer's
     periodic pass must deliver it without any micro-batch, exactly
-    once."""
-    import datetime
-    import time
-
-    from flume_hive_batched_sink_spark.config import SinkConfig
-    from flume_hive_batched_sink_spark.streaming.land import (
-        land_batch,
-        reconcile_timer,
-    )
-
-    cfg = SinkConfig(
-        table="events_idletimer",
-        output_path=str(tmp_path),
-        round_unit="day",
-        round_value=1,
-    )
-    day1 = "202401010000"
-
-    def crash(logdates):
-        raise RuntimeError("simulated crash before POST")
-
-    df = spark.createDataFrame(
-        [
-            (datetime.datetime.fromisoformat(t), 1)
-            for t in ("2024-01-01 10:00:00", "2024-01-02 12:00:00")
-        ],
-        "ts timestamp, v int",
-    )
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        land_batch(df, 0, cfg, on_complete=crash)
-
-    got: list[str] = []
-    stop = reconcile_timer(spark, cfg, got.extend, interval_s=0.5)
-    try:
-        deadline = time.time() + 30
-        while not got and time.time() < deadline:
-            time.sleep(0.2)
-        # give it one more tick to prove once-per-logdate
-        time.sleep(1.5)
-    finally:
-        stop()
-    assert got == [day1]
-
-
-def test_reconcile_timer_tick_runs_no_spark_job(spark, tmp_path):
-    """A timer tick over a loaded driver view decides on that view and
-    writes its NOTIFIED mark from the driver: it runs no Spark job (it
-    reads no bookkeeping from disk), and still delivers a CHECKED-but-
-    unnotified logdate exactly once."""
+    once, and durably mark it NOTIFIED. Its ticks decide on the loaded
+    driver view and write their marks from the driver, so they run no
+    Spark job (no bookkeeping is read from disk)."""
     import datetime
     import os
     import time
@@ -438,7 +392,7 @@ def test_reconcile_timer_tick_runs_no_spark_job(spark, tmp_path):
     )
 
     cfg = SinkConfig(
-        table="events_timer_nojobs",
+        table="events_idletimer",
         output_path=str(tmp_path),
         round_unit="day",
         round_value=1,
@@ -468,12 +422,13 @@ def test_reconcile_timer_tick_runs_no_spark_job(spark, tmp_path):
     ungrouped = set(sc.statusTracker().getJobIdsForGroup(None))
 
     got: list[str] = []
-    stop = reconcile_timer(spark, cfg, got.extend, interval_s=0.2)
+    stop = reconcile_timer(spark, cfg, got.extend, interval_s=0.5)
     try:
         deadline = time.time() + 30
         while not got and time.time() < deadline:
-            time.sleep(0.1)
-        time.sleep(1.0)  # more ticks: once per logdate
+            time.sleep(0.2)
+        # give it one more tick to prove once-per-logdate
+        time.sleep(1.5)
     finally:
         stop()
     assert got == [day1]
