@@ -23,11 +23,11 @@ class SinkConfig:
       - serde name + properties         :32-33
       - timezone / local-time escaping  :36-38
       - round / roundUnit / roundValue  :40-46
-      - batchSize (1000)                :54
+      - batchSize (1000)                :54 → one staged file per
+        trigger (stage.run_stream's maxFilesPerTrigger=1)
       - idleTimeout (5000 ms)           :55
     """
 
-    database: str = "default"
     table: str = "events_landed"
     output_path: str = "/tmp/flume_hive_batched_sink_spark/warehouse"
     # Partition routing: logdate = event time floored to round_value
@@ -43,13 +43,6 @@ class SinkConfig:
     # hive.serdeName class + hive.serdeProperties.* overrides).
     serde_name: str = "json"
     serde_properties: dict = field(default_factory=dict)
-    # micro-batching (↔ hive.batchSize=1000; in Spark this is the
-    # trigger/maxFilesPerTrigger knob, not a row loop).
-    batch_size: int = 1000
-    # watermark delay ↔ the reference's minFinishedTimestamp gate
-    # (HiveBatchedWriter.scala:60-63): a partition/window is final only
-    # after event time passes its end.
-    watermark_delay: str = "10 minutes"
     # small-file hygiene at scale: cap rows per output file
     # (↔ maxOpenFiles's real intent — bounded writer resources).
     max_records_per_file: int = 5_000_000

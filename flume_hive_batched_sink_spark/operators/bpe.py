@@ -96,7 +96,6 @@ def bpe_train(
     sf_dir: str,
     rounds: int = _BPE_ROUNDS,
     checkpoint_every: int = 25,
-    on_round=None,
 ) -> tuple[DataFrame, list]:
     """Run `rounds` BPE merges; returns (seqs, stats) where `seqs` is
     the final merged vocabulary table (word, cnt, seq — the trained
@@ -120,20 +119,15 @@ def bpe_train(
     round and every round RECOMPUTES the word-frequency aggregate
     plus all prior merges from the source scan. Deep runs (rounds >
     cadence) additionally materialize the INITIAL word table, so
-    round 1 already reads a local RDD. Measured (scripts/bpe_deep.py,
-    200 rounds, 10x-words corpus): per-round cost is FLAT at
-    ~0.4-0.5 s once past the first checkpoint vs 2.4->2.9 s and
-    GROWING without the cadence — the checkpoint is worth ~5x per
-    round, not just lineage hygiene. Values are bit-identical either
-    way (the replace chain is deterministic — property-tested), and
-    the registered 2-round operators never reach the cadence, keeping
-    their audited parquet-scan plans byte-stable.
-
-    `on_round(rnd, seconds)`: optional per-round telemetry callback
-    (progress reporting on deep production runs; scripts/bpe_deep.py
-    uses it to prove flat per-round cost under the cadence)."""
-    import time as _time
-
+    round 1 already reads a local RDD. Measured (SCALING.md, "BPE
+    deep training loop": 200 rounds, 10x-words corpus): per-round
+    cost is FLAT at ~0.4-0.5 s once past the first checkpoint vs
+    2.4->2.9 s and GROWING without the cadence — the checkpoint is
+    worth ~5x per round, not just lineage hygiene. Values are
+    bit-identical either way (the replace chain is deterministic —
+    property-tested), and the registered 2-round operators never
+    reach the cadence, keeping their audited parquet-scan plans
+    byte-stable."""
     from .registry import persist_evicting
 
     # Persist the INITIAL vocabulary within the invocation (guide
@@ -153,7 +147,6 @@ def bpe_train(
         seqs = seqs.localCheckpoint(eager=True)
     out = []
     for rnd in range(1, rounds + 1):
-        _t0 = _time.perf_counter()
         # ONE aggregate for the round's pair statistics: the number of
         # pair types and the winner — struct order is field by field,
         # so min(struct(-c, l, r)) is the first row of ORDER BY c
@@ -185,8 +178,6 @@ def bpe_train(
         out.append((rnd, top.l, top.r, -top.nc, n_types, n_sym))
         if checkpoint_every and rnd % checkpoint_every == 0:
             seqs = seqs.localCheckpoint(eager=True)
-        if on_round is not None:
-            on_round(rnd, _time.perf_counter() - _t0)
     return seqs, out
 
 

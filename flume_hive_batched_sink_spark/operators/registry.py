@@ -202,13 +202,13 @@ _PERSIST_SITES: dict[str, list] = {}
 
 def persist_evicting(df: DataFrame, site: str) -> DataFrame:
     """Persist `df` after unpersisting every frame previously
-    persisted under the same `site` key — the similarity._WIDE_CACHE
-    pattern promoted to a shared helper (r13 verdict #5 / advice #2):
+    persisted under the same `site` key (r13 verdict #5 / advice #2):
     a long-running sweep/bench process holds at most ONE invocation's
     cached partitions per call site instead of accumulating one set
     per call. Eviction is correctness-safe — an evicted frame lazily
-    recomputes; sites whose recompute is order-sensitive (double
-    folds) must keep using their own guarded caches.
+    recomputes; a site whose recompute is order-sensitive (a double
+    fold) says at its call why the different order cannot change its
+    result (similarity.embedding_features).
 
     ALWAYS evicts and re-persists: every invocation recomputes its
     intermediates from the parquet inputs. (An r14 interim build

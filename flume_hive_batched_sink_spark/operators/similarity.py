@@ -276,12 +276,6 @@ def _planes_by_pos(spark: SparkSession, n_planes: int = _N_PLANES) -> DataFrame:
 _SIGN_TOL_ABS = 1e-10
 _SIGN_TOL_REL = 1e-12
 
-# most-recent persisted wide aggregate (see embedding_features) —
-# kept to exactly one entry so repeated chain builds in a long-lived
-# session don't accumulate JVM cache
-_WIDE_CACHE: list = []
-
-
 def embedding_features(
     spark: SparkSession,
     em: DataFrame,
@@ -333,7 +327,6 @@ def embedding_features(
     aggs = [F.sum(term(i)).alias(f"pdot{i}") for i in range(n_planes)]
     aggs += [F.sum(F.abs(term(i))).alias(f"pabs{i}") for i in range(n_planes)]
     aggs.append(F.sum((F.col("x") * F.col("x")).cast(_DEC)).alias("nrm_sq"))
-    wide = j.groupBy("vec_id").agg(*aggs).persist()
     # bound the session's cache growth to ONE wide aggregate: evict
     # the previous call's entry (correctness-safe — an evicted frame
     # recomputes; by the time a new chain is built, prior consumers
@@ -347,9 +340,9 @@ def embedding_features(
     # in-band margin is ≥3× the worst-case double-summation drift
     # (bound proven at _SIGN_TOL_* above); any tolerance tweak must
     # re-check that bound or switch eviction to session close.
-    while _WIDE_CACHE:
-        _WIDE_CACHE.pop().unpersist(blocking=False)
-    _WIDE_CACHE.append(wide)
+    wide = persist_evicting(
+        j.groupBy("vec_id").agg(*aggs), "similarity.embedding_features"
+    )
 
     def in_band(i: int):
         return F.abs(F.col(f"pdot{i}")) <= (

@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 from ..config import SinkConfig
 from ..functions.partition import derive_logdate
 from ..sources.parse import parse_column
-from .stage import SCRATCH, capture_batch_plan
+from .stage import capture_batch_plan, run_stream
 
 
 def route_and_parse(df: DataFrame, cfg: SinkConfig) -> DataFrame:
@@ -284,6 +284,9 @@ def land_batch(
         routed.repartition(cfg.partition_col)
         .write.mode("append")
         .option("maxRecordsPerFile", cfg.max_records_per_file)
+        # no _SUCCESS marker: no reader of the table looks for one,
+        # and every micro-batch would rewrite it at the table root
+        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
         .partitionBy(cfg.partition_col)
         .format(cfg.file_format)
         .save(data_path)
@@ -529,7 +532,8 @@ def run_landing_stream(
     fresh: bool = True,
 ) -> None:
     """The full streaming job: file source (stand-in for the Flume
-    channel) → foreachBatch(land_batch), AvailableNow one-shot. With
+    channel) → foreachBatch(land_batch), AvailableNow one-shot, run as
+    `land_<table>` (its checkpoint directory and plan key). With
     no explicit `on_complete` and cfg.notify_url set, finalized
     logdates are POSTed to the configured REST endpoint (A23 — the
     reference's DTE notification, HiveBatchedSink.scala:205-227).
@@ -560,20 +564,12 @@ def run_landing_stream(
     else:
         with book.lock:
             book.load(spark, cfg)
-    ckpt = os.path.join(SCRATCH, "checkpoints", f"land_{cfg.table}")
-    if fresh:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged_dir)
+    run_stream(
+        spark,
+        staged_dir,
+        schema,
+        None,
+        f"land_{cfg.table}",
+        sink=lambda df, bid: land_batch(df, bid, cfg, on_complete),
+        fresh=fresh,
     )
-    q = (
-        src.writeStream.foreachBatch(
-            lambda df, bid: land_batch(df, bid, cfg, on_complete)
-        )
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

@@ -1,23 +1,32 @@
-"""Deterministic micro-batch staging for streaming tests/queries.
+"""Deterministic micro-batch staging, and the package's one stream
+runner.
 
 The reference drained a live Flume channel; our replayable stand-in
 is a file-source directory of parquet chunks consumed with
 `maxFilesPerTrigger=1` + `Trigger.AvailableNow` — each chunk becomes
-one micro-batch, in lexicographic file order, fully deterministic
-(SURVEY.md §5.3: never sleep-based).
+one micro-batch, in file order, fully deterministic (SURVEY.md §5.3:
+never sleep-based).
 
 Chunks are split on explicit event-time boundaries so watermark
 progress (and therefore late-row dropping) is reproducible and
 expressible in the DuckDB oracle.
+
+Every streaming query in the package — the landing stream and every
+`stream_*` operator — starts through `run_stream`: one replay source
+(`replay_source`), one checkpoint, one AvailableNow launch and one
+plan capture; only the sink differs (memory, noop, a parquet path or
+a foreachBatch function).
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from ..scratch import SCRATCH
 
@@ -37,18 +46,19 @@ _STAGE_CACHE: dict[str, tuple[str, object]] = {}
 # scripts/plan_sweep.py: streaming plans are micro-batch-internal
 # (building the result DataFrame EXECUTES the replay), so the sweep
 # can't explain() the returned frame the way it does batch operators.
-# Instead every completed StreamingQuery (run_stream + the manual
-# writeStream sites) and every foreachBatch body records the plan
-# text it actually ran here, and the sweep diffs this dict around
-# each operator invocation. Keys are query/stage names; values are
-# BOUNDED lists of recent plan dumps — land_batch captures 2 plans
-# per micro-batch on the PRODUCTION landing path, so an unbounded
-# buffer would grow driver memory monotonically on a long-running
-# stream (r10 code review). The cap must exceed what one sweep
-# invocation pushes: the landing replay is 3 micro-batches x 2
-# captures (routed, the counts collect; the bookkeeping appends are
-# driver-written files, no plan) = 6 under ONE key, so 8 leaves
-# headroom — the sweep's around-the-call diff never loses entries.
+# Instead every completed StreamingQuery (run_stream, the one launch)
+# and every foreachBatch body records the plan text it actually ran
+# here, and the sweep diffs this dict around each operator
+# invocation. Keys are query/stage names; values are BOUNDED lists of
+# recent plan dumps — land_batch captures 2 plans per micro-batch on
+# the PRODUCTION landing path, so an unbounded buffer would grow
+# driver memory monotonically on a long-running stream (r10 code
+# review). The cap must exceed what one sweep invocation pushes: the
+# landing replay is 3 micro-batches x 2 captures (routed, the counts
+# collect; the bookkeeping appends are driver-written files, no plan)
+# = 6 under ONE key (its stream plan goes under the run's own name),
+# so 8 leaves headroom — the sweep's around-the-call diff never loses
+# entries.
 LAST_PLANS: dict[str, list[str]] = {}
 _PLAN_BUF = 8
 
@@ -148,38 +158,56 @@ def stage_chunks(
     return flat, schema
 
 
+def replay_source(spark: SparkSession, staged_dir: str, schema) -> DataFrame:
+    """The replay source over staged chunks: one file per micro-batch,
+    oldest file first (Spark's default order)."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(staged_dir)
+    )
+
+
 def run_stream(
     spark: SparkSession,
     staged_dir: str,
     schema,
-    transform,
-    query_name: str,
+    transform: Callable[[DataFrame], DataFrame] | None,
+    name: str,
     output_mode: str = "append",
-) -> DataFrame:
-    """readStream over the staged chunks (1 file = 1 micro-batch) →
-    transform → memory sink, driven to completion with AvailableNow;
-    returns the collected result table. Deterministic: file order is
-    lexicographic, no wall-clock dependence."""
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(staged_dir)
-    )
-    out = transform(src)
-    ckpt = os.path.join(SCRATCH, "checkpoints", query_name)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    q = (
+    sink: str | Callable[[DataFrame, int], None] = "memory",
+    fresh: bool = True,
+) -> StreamingQuery:
+    """The package's one stream launch: replay source → `transform`
+    (None: the source as is) → sink, driven to completion with
+    AvailableNow; returns the finished query, its last micro-batch
+    plan recorded under `name`. The sink is "memory" (read it back
+    with `spark.table(name)`), "noop", a parquet output path (Spark's
+    file sink with its `_spark_metadata` log), or a foreachBatch
+    function. The checkpoint lives at SCRATCH/checkpoints/<name> and
+    is wiped first unless `fresh=False` (a restart from it)."""
+    out = replay_source(spark, staged_dir, schema)
+    if transform is not None:
+        out = transform(out)
+    ckpt = os.path.join(SCRATCH, "checkpoints", name)
+    if fresh:
+        shutil.rmtree(ckpt, ignore_errors=True)
+    w = (
         out.writeStream.outputMode(output_mode)
-        .format("memory")
-        .queryName(query_name)
+        .queryName(name)
         .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
-        .start()
     )
+    if callable(sink):
+        w = w.foreachBatch(sink)
+    elif sink in ("memory", "noop"):
+        w = w.format(sink)
+    else:
+        w = w.format("parquet").option("path", sink)
+    q = w.start()
     q.awaitTermination()
-    capture_stream_plan(q, query_name)
-    return spark.table(query_name)
+    capture_stream_plan(q, name)
+    return q
 
 
 def events_chunks_by_time(

@@ -29,8 +29,8 @@ from ..operators.pipeline import sql_logdate
 from ..operators.registry import local_frame, query
 from .stage import (
     SCRATCH,
-    capture_stream_plan,
     events_chunks_by_time,
+    replay_source,
     run_stream,
     stage_chunks,
 )
@@ -46,13 +46,12 @@ _SQL_BUCKET5 = (
 )
 
 
-def _staged_events(spark: SparkSession, sf_dir: str, name: str = ""):
+def _staged_events(spark: SparkSession, sf_dir: str):
     """The standard 3-chunk event replay corpus. ALL consumers share
     ONE staged directory per sf_dir (the source dir is read-only for
     every query — checkpoints/sinks are per-query elsewhere), staged
     once per process per sf_dir instead of once per operator per
-    invocation. The `name` arg is retained for call-site readability
-    but no longer selects a directory."""
+    invocation."""
     chunks = events_chunks_by_time(spark, sf_dir, _CHUNK_BOUNDS)
     return stage_chunks(
         "events_shared", chunks, cache_key=f"events_shared|{sf_dir}"
@@ -75,7 +74,7 @@ def stream_tumbling_5min(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A14/A15: per-category 5-minute tumbling counts, streaming
     append mode. Emitted set = windows finalized by the final
     watermark — exactly what the oracle states."""
-    staged, schema = _staged_events(spark, sf_dir, "tumb5")
+    staged, schema = _staged_events(spark, sf_dir)
 
     def xform(src: DataFrame) -> DataFrame:
         return (
@@ -87,7 +86,8 @@ def stream_tumbling_5min(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    return run_stream(spark, staged, schema, xform, "stream_tumbling_5min")
+    q = run_stream(spark, staged, schema, xform, "stream_tumbling_5min")
+    return spark.table(q.name)
 
 
 @query(
@@ -109,7 +109,7 @@ def stream_tumbling_5min(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """10-minute windows sliding every 5: each event lands in 2
     windows (the oracle assigns both by offset arithmetic)."""
-    staged, schema = _staged_events(spark, sf_dir, "slide10")
+    staged, schema = _staged_events(spark, sf_dir)
 
     def xform(src: DataFrame) -> DataFrame:
         return (
@@ -119,7 +119,8 @@ def stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.col("window.start").alias("win_start"), "n")
         )
 
-    return run_stream(spark, staged, schema, xform, "stream_sliding")
+    q = run_stream(spark, staged, schema, xform, "stream_sliding")
+    return spark.table(q.name)
 
 
 @query(
@@ -151,7 +152,7 @@ def stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session windows (30-min gap) per user. The oracle is the
     gap-islands formulation; emitted sessions are those closed by the
     final watermark."""
-    staged, schema = _staged_events(spark, sf_dir, "sess30")
+    staged, schema = _staged_events(spark, sf_dir)
 
     def xform(src: DataFrame) -> DataFrame:
         return (
@@ -166,7 +167,8 @@ def stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    return run_stream(spark, staged, schema, xform, "stream_session")
+    q = run_stream(spark, staged, schema, xform, "stream_session")
+    return spark.table(q.name)
 
 
 @query(
@@ -214,7 +216,8 @@ def stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.col("window.start").alias("win_start"), "n")
         )
 
-    return run_stream(spark, staged, schema, xform, "stream_watermark_late")
+    q = run_stream(spark, staged, schema, xform, "stream_watermark_late")
+    return spark.table(q.name)
 
 
 @query(
@@ -240,7 +243,8 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("event_id", "user_id", "event_type", "value")
         )
 
-    return run_stream(spark, staged, schema, xform, "stream_dedup")
+    q = run_stream(spark, staged, schema, xform, "stream_dedup")
+    return spark.table(q.name)
 
 
 @query(
@@ -301,32 +305,21 @@ def stream_observe_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .counters import install, uninstall
 
     reporter = install(spark)
-    staged, schema = _staged_events(spark, sf_dir, "obs")
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-    )
-    observed = src.observe(
-        "counters",
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum("user_id").alias("sum_uid"),
-        F.sum(
-            F.when(F.col("event_type") == "purchase", 1).otherwise(0)
-        ).alias("n_purchase"),
-    )
-    import shutil
+    staged, schema = _staged_events(spark, sf_dir)
 
-    ckpt = os.path.join(SCRATCH, "checkpoints", "observe_counters")
-    shutil.rmtree(ckpt, ignore_errors=True)
-    q = (
-        observed.writeStream.format("noop")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    def xform(src: DataFrame) -> DataFrame:
+        return src.observe(
+            "counters",
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum("user_id").alias("sum_uid"),
+            F.sum(
+                F.when(F.col("event_type") == "purchase", 1).otherwise(0)
+            ).alias("n_purchase"),
+        )
+
+    q = run_stream(
+        spark, staged, schema, xform, "stream_observe_counters", sink="noop"
     )
-    q.awaitTermination()
-    capture_stream_plan(q, "stream_observe_counters")
     totals = {"n_events": 0, "sum_uid": 0, "n_purchase": 0}
     for prog in q.recentProgress:
         metrics = (prog.observedMetrics or {}).get("counters")
@@ -379,13 +372,7 @@ def stream_stateful_counter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    staged, schema = _staged_events(spark, sf_dir, "stateful")
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(staged)
-    )
+    staged, schema = _staged_events(spark, sf_dir)
 
     def fold(key, pdfs, state):
         n, cents = state.get if state.exists else (0, 0)
@@ -401,28 +388,20 @@ def stream_stateful_counter(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    snap = src.groupBy("user_id").applyInPandasWithState(
-        fold,
-        outputStructType="user_id bigint, n_events bigint, sum_value double",
-        stateStructType="n bigint, cents bigint",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    import shutil
+    def xform(src: DataFrame) -> DataFrame:
+        return src.groupBy("user_id").applyInPandasWithState(
+            fold,
+            outputStructType="user_id bigint, n_events bigint, "
+            "sum_value double",
+            stateStructType="n bigint, cents bigint",
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
 
-    ckpt = os.path.join(SCRATCH, "checkpoints", "stateful_counter")
-    shutil.rmtree(ckpt, ignore_errors=True)
-    q = (
-        snap.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("stream_stateful_counter")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    q = run_stream(
+        spark, staged, schema, xform, "stream_stateful_counter", "update"
     )
-    q.awaitTermination()
-    capture_stream_plan(q, "stream_stateful_counter")
-    all_snaps = spark.table("stream_stateful_counter")
+    all_snaps = spark.table(q.name)
     # final snapshot per user = max running count (monotone state)
     return all_snaps.groupBy("user_id").agg(
         F.max_by(F.col("n_events"), F.col("n_events")).alias("n_events"),
@@ -454,7 +433,7 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     domains, tenant configs) while the stream side scales with
     executors. Emitted set = watermark-finalized windows, same
     append-mode contract as stream_tumbling_5min."""
-    staged, schema = _staged_events(spark, sf_dir, "sjoin")
+    staged, schema = _staged_events(spark, sf_dir)
     dim = (
         load_table(spark, sf_dir, "customer")
         .select(F.col("c_custkey").alias("user_id"), "c_mktsegment")
@@ -473,7 +452,8 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    return run_stream(spark, staged, schema, xform, "stream_static_join")
+    q = run_stream(spark, staged, schema, xform, "stream_static_join")
+    return spark.table(q.name)
 
 
 @query(
@@ -516,10 +496,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     def xform(src: DataFrame) -> DataFrame:
         v = src.withWatermark("ts", _DELAY).alias("v")
         a = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("latestFirst", "false")
-            .parquet(staged_a)
+            replay_source(spark, staged_a, schema)
             .withWatermark("ts", _DELAY)
             .alias("a")
         )
@@ -535,7 +512,8 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("v.user_id").alias("user_id"),
         )
 
-    return run_stream(spark, staged_v, schema, xform, "stream_stream_join")
+    q = run_stream(spark, staged_v, schema, xform, "stream_stream_join")
+    return spark.table(q.name)
 
 
 @query(
@@ -562,44 +540,25 @@ def stream_restart_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     visibility, never wall-clock."""
     import shutil as _sh
 
-    staged, schema = _staged_events(spark, sf_dir, "restart_all")
+    staged, schema = _staged_events(spark, sf_dir)
     files = sorted(
         f for f in os.listdir(staged) if f.endswith(".parquet")
     )
     phased = os.path.join(SCRATCH, "stream_stage", "restart_phased")
     out_dir = os.path.join(SCRATCH, "restart_landed")
-    ckpt = os.path.join(SCRATCH, "checkpoints", "restart_recovery")
-    for d in (phased, out_dir, ckpt):
+    for d in (phased, out_dir):
         _sh.rmtree(d, ignore_errors=True)
     os.makedirs(phased, exist_ok=True)
-
-    def run_to_drain() -> None:
-        src = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("latestFirst", "false")
-            .parquet(phased)
-        )
-        q = (
-            src.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        capture_stream_plan(q, "stream_restart_recovery")
-
+    name = "stream_restart_recovery"
     # phase 1: only the first staged file is visible; the query lands
     # it, commits, and terminates (AvailableNow drains what exists)
     _sh.copy2(os.path.join(staged, files[0]), os.path.join(phased, files[0]))
-    run_to_drain()
+    run_stream(spark, phased, schema, None, name, sink=out_dir)
     # phase 2: reveal the remaining files and restart from the SAME
     # checkpoint — committed offsets skip phase 1's file
     for f in files[1:]:
         _sh.copy2(os.path.join(staged, f), os.path.join(phased, f))
-    run_to_drain()
+    run_stream(spark, phased, schema, None, name, sink=out_dir, fresh=False)
 
     back = spark.read.parquet(out_dir)
     return back.groupBy("event_type").agg(F.count("*").alias("n_rows"))
@@ -679,7 +638,7 @@ def stream_anomaly_alert(spark: SparkSession, sf_dir: str) -> DataFrame:
     the post-split rows."""
     from ..operators.analytics import mad_model
 
-    staged, schema = _staged_events(spark, sf_dir, "alert")
+    staged, schema = _staged_events(spark, sf_dir)
     hist = (
         load_table(spark, sf_dir, "events")
         .filter(F.col("ts") < F.lit(_ALERT_SPLIT).cast("timestamp"))
@@ -713,7 +672,8 @@ def stream_anomaly_alert(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    return run_stream(spark, staged, schema, xform, "stream_anomaly_alert")
+    q = run_stream(spark, staged, schema, xform, "stream_anomaly_alert")
+    return spark.table(q.name)
 
 
 def topk_sort_key():
@@ -779,7 +739,7 @@ def stream_windowed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (window, shard) in applyInPandasWithState (the
     stream_stateful_counter machinery) and merges shards in the
     projection — plan shape unchanged, state O(k·shards)."""
-    staged, schema = _staged_events(spark, sf_dir, "wtopk")
+    staged, schema = _staged_events(spark, sf_dir)
 
     def xform(src: DataFrame) -> DataFrame:
         agged = (
@@ -798,7 +758,8 @@ def stream_windowed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             topk_value_back(F.col("r")).alias("value"),
         )
 
-    return run_stream(spark, staged, schema, xform, "stream_windowed_topk")
+    q = run_stream(spark, staged, schema, xform, "stream_windowed_topk")
+    return spark.table(q.name)
 
 
 _TOPK_K = 3
@@ -854,20 +815,7 @@ def stream_windowed_topk_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    staged, schema = _staged_events(spark, sf_dir, "wtopk_state")
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(staged)
-    )
-    encoded = src.select(
-        F.expr("timestamp_seconds((cast(ts as long) div 300) * 300)").alias(
-            "win_start"
-        ),
-        topk_sort_key().alias("k"),
-    ).select("win_start", "k.grp", "k.sortv", "k.event_id", "k.value")
-
+    staged, schema = _staged_events(spark, sf_dir)
     k = _TOPK_K
     out_fields = ", ".join(
         f"g{j} tinyint, i{j} bigint, v{j} double" for j in range(1, k + 1)
@@ -911,31 +859,29 @@ def stream_windowed_topk_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             row[f"v{j + 1}"] = pd.Series([v], dtype="object")
         yield pd.DataFrame(row)
 
-    snap = encoded.groupBy("win_start").applyInPandasWithState(
-        fold,
-        outputStructType=f"win_start timestamp, n_seen bigint, {out_fields}",
-        stateStructType="n bigint, " + ", ".join(
-            f"sg{j} tinyint, ss{j} double, si{j} bigint, sv{j} double"
-            for j in range(1, k + 1)
-        ),
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    import shutil
+    def xform(src: DataFrame) -> DataFrame:
+        encoded = src.select(
+            F.expr("timestamp_seconds((cast(ts as long) div 300) * 300)")
+            .alias("win_start"),
+            topk_sort_key().alias("k"),
+        ).select("win_start", "k.grp", "k.sortv", "k.event_id", "k.value")
+        return encoded.groupBy("win_start").applyInPandasWithState(
+            fold,
+            outputStructType="win_start timestamp, n_seen bigint, "
+            + out_fields,
+            stateStructType="n bigint, "
+            + ", ".join(
+                f"sg{j} tinyint, ss{j} double, si{j} bigint, sv{j} double"
+                for j in range(1, k + 1)
+            ),
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
 
-    ckpt = os.path.join(SCRATCH, "checkpoints", "wtopk_state")
-    shutil.rmtree(ckpt, ignore_errors=True)
-    q = (
-        snap.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("stream_windowed_topk_state")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    q = run_stream(
+        spark, staged, schema, xform, "stream_windowed_topk_state", "update"
     )
-    q.awaitTermination()
-    capture_stream_plan(q, "stream_windowed_topk_state")
-    snaps = spark.table("stream_windowed_topk_state")
+    snaps = spark.table(q.name)
     # final snapshot per window = the one with the largest n_seen
     # (monotone); then the oracle's watermark finalization gate.
     final = snaps.groupBy("win_start").agg(
@@ -1120,7 +1066,8 @@ def stream_dedup_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    return run_stream(spark, staged, schema, xform, "stream_dedup_bloom")
+    q = run_stream(spark, staged, schema, xform, "stream_dedup_bloom")
+    return spark.table(q.name)
 
 
 # ---- streaming curation gate ----
@@ -1206,7 +1153,8 @@ def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("n_chars") >= _GATE_MIN_CHARS)
         )
 
-    return run_stream(spark, staged, schema, xform, "stream_quality_gate")
+    q = run_stream(spark, staged, schema, xform, "stream_quality_gate")
+    return spark.table(q.name)
 
 
 # ---- streaming ANN serving over the prebuilt IVFPQ index ----
@@ -1305,20 +1253,7 @@ def stream_ann_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
             capture_batch_plan(res, "stream_ann_serve")
             res.write.mode("append").parquet(out_path)
 
-    ckpt = os.path.join(SCRATCH, "checkpoints", "ann_serve")
-    shutil.rmtree(ckpt, ignore_errors=True)
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-    )
-    q = (
-        src.writeStream.foreachBatch(serve)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_stream(spark, staged, schema, None, "ann_serve", sink=serve)
     return spark.read.parquet(out_path).select(
         "probe_id", "neighbor_id", "adc_d2", "rank"
     )
@@ -1422,21 +1357,7 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         merged.write.mode("overwrite").parquet(gen)
         last_gen.append(gen)
 
-    ckpt = os.path.join(SCRATCH, "checkpoints", "cdc_apply")
-    shutil.rmtree(ckpt, ignore_errors=True)
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(staged)
-    )
-    q = (
-        src.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_stream(spark, staged, schema, None, "cdc_apply", sink=apply_batch)
     final = spark.read.parquet(last_gen[-1])
     return final.filter(F.col("op") != "D").select(
         "custkey",

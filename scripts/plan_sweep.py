@@ -13,8 +13,11 @@ Streaming operators are swept too (r10 — the r9 verdict's
 n_skipped_streaming item): their plans are micro-batch-internal, so
 building the result DataFrame EXECUTES the replay and the sweep reads
 the plans the run actually executed from stage.LAST_PLANS — every
-completed StreamingQuery records explainInternal, and foreachBatch
-bodies (land.py) record the batch plans explainInternal can't see.
+stream starts through stage.run_stream, which records the finished
+query's explainInternal (the landing stream, stream_ann_serve and
+stream_cdc_apply included), and foreachBatch bodies (land.py,
+stream_ann_serve, stream_cdc_apply) record the batch plans
+explainInternal can't see.
 The audit text is the union of all plans captured during that
 operator's invocation (diffed around the call), so multi-phase
 operators (restart recovery's two runs) contribute every phase.
@@ -197,8 +200,8 @@ def main() -> None:
                 plan = new + _formatted(df)
                 if not new:
                     raise RuntimeError(
-                        "no micro-batch plan captured — a writeStream "
-                        "site is missing its capture_stream_plan hook"
+                        "no micro-batch plan captured — the operator "
+                        "started no stream through stage.run_stream"
                     )
             else:
                 plan = _formatted(df)

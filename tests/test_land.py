@@ -391,7 +391,8 @@ def test_one_file_per_bookkeeping_append(spark, tmp_path, monkeypatch):
     append made so far (the NEW/CHECKED append, plus a NOTIFIED one
     when the batch closes a logdate), with no checksum, marker or
     temporary file beside them — also after an append whose write
-    failed partway."""
+    failed partway. The data writes leave no `_SUCCESS` marker at the
+    table root either."""
     cfg = SinkConfig(
         table="events_book_files",
         output_path=str(tmp_path),
@@ -423,6 +424,8 @@ def test_one_file_per_bookkeeping_append(spark, tmp_path, monkeypatch):
         ), sorted(files)
         assert len(got) == closed[bid]
     assert _fresh_view(spark, cfg) == _disk_view(spark, cfg)
+    table_dir = os.path.join(cfg.output_path, cfg.table)
+    assert not [f for f in os.listdir(table_dir) if "_SUCCESS" in f]
 
     import pyarrow.parquet as pq
 

@@ -3548,17 +3548,21 @@ def test_plan_buffer_survives_repeat_invocations(spark):
     pushes past the cap silently drops captures (r10 ADVICE / r11
     verdict #6). Invoke the landing operator twice and assert the
     count-based diff sees every capture both times, even after the
-    buffer wraps."""
+    buffer wraps — and that each run also records its one stream plan
+    under the landing run's name."""
     from flume_hive_batched_sink_spark.streaming import stage
 
     key = "land_batch:events_landed_stream"
+    run = "land_events_landed_stream"
 
     def run_once():
         before = stage.PLAN_PUSH_COUNTS.get(key, 0)
+        run_before = stage.PLAN_PUSH_COUNTS.get(run, 0)
         QUERIES["stream_foreach_batch_land"](spark, SF_SMALL).collect()
         after = stage.PLAN_PUSH_COUNTS.get(key, 0)
         pushed = after - before
         assert pushed > 0
+        assert stage.PLAN_PUSH_COUNTS.get(run, 0) == run_before + 1
         # the sweep's recovery: last min(pushed, buf-cap) entries
         got = stage.LAST_PLANS[key][-min(pushed, stage._PLAN_BUF):]
         assert len(got) == min(pushed, stage._PLAN_BUF)
@@ -3574,6 +3578,42 @@ def test_plan_buffer_survives_repeat_invocations(spark):
     # the buffer itself is bounded — the counter is what preserved
     # the diff when total pushes exceed the cap
     assert len(stage.LAST_PLANS[key]) == min(c2, stage._PLAN_BUF)
+
+
+def test_streams_start_only_in_stage_run_stream():
+    """Every stream in the package starts through stage.run_stream:
+    `.readStream`, `.writeStream` and `trigger(availableNow=...)`
+    appear only in stage.py's replay_source and run_stream."""
+    import ast
+    import os
+
+    import flume_hive_batched_sink_spark as pkg
+
+    root = os.path.dirname(pkg.__file__)
+    sites = set()
+
+    def visit(node, rel, fn):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            fn = node.name
+        if (
+            isinstance(node, ast.Attribute)
+            and node.attr in ("readStream", "writeStream")
+        ) or (isinstance(node, ast.keyword) and node.arg == "availableNow"):
+            sites.add((rel, fn))
+        for child in ast.iter_child_nodes(node):
+            visit(child, rel, fn)
+
+    for d, _dirs, files in os.walk(root):
+        for f in files:
+            if f.endswith(".py"):
+                path = os.path.join(d, f)
+                with open(path, encoding="utf-8") as fh:
+                    tree = ast.parse(fh.read())
+                visit(tree, os.path.relpath(path, root), None)
+    assert sites == {
+        ("streaming/stage.py", "replay_source"),
+        ("streaming/stage.py", "run_stream"),
+    }, sorted(sites, key=str)
 
 
 def test_ivfpq_planted_twin_recall_at_10(spark):
@@ -3832,10 +3872,15 @@ def test_stream_ann_serve_agrees_with_batch_ivfpq(spark):
     be IDENTICAL rows — same neighbors, same adc_d2, same ranks (the
     static index + stateless per-batch scoring commute with
     micro-batching). The streamed run must also answer every probe
-    in its wider vec_id < 15 set."""
+    in its wider vec_id < 15 set. The serving stream records its
+    stream plan under its run name."""
+    from flume_hive_batched_sink_spark.streaming import stage
+
     from .conftest import SF_ORACLE
 
+    runs = stage.PLAN_PUSH_COUNTS.get("ann_serve", 0)
     served = QUERIES["stream_ann_serve"](spark, SF_ORACLE).collect()
+    assert stage.PLAN_PUSH_COUNTS.get("ann_serve", 0) == runs + 1
     probes_served = {r.probe_id for r in served}
     assert probes_served == set(range(15))
     batch = {
@@ -4361,13 +4406,17 @@ def test_cdc_apply_tombstones_and_lineage(spark):
     the output; every emitted (custkey, last_seq, last_val) is that
     key's max-seq NON-DELETED... no — max-seq change overall, which
     must be a non-D op for the key to appear; recomputed directly
-    from orders."""
+    from orders. The apply stream records its stream plan under its
+    run name."""
     from flume_hive_batched_sink_spark.catalog import load_table
+    from flume_hive_batched_sink_spark.streaming import stage
 
+    runs = stage.PLAN_PUSH_COUNTS.get("cdc_apply", 0)
     out = {
         r.custkey: (r.last_seq, r.last_val)
         for r in QUERIES["stream_cdc_apply"](spark, SF_SMALL).collect()
     }
+    assert stage.PLAN_PUSH_COUNTS.get("cdc_apply", 0) == runs + 1
     orders = load_table(spark, SF_SMALL, "orders").collect()
     best: dict[int, tuple] = {}
     for o in orders:
