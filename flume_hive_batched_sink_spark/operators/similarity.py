@@ -220,8 +220,8 @@ def ns_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The scale configuration is property-tested in
 # tests/test_properties.py::test_lsh_scale_band_config, and the
 # 10×-corpus geometry measurement (candidates + wall-clock, 8 vs 16
-# vs auto planes) is recorded in SCALING.md via
-# scripts/lsh_geometry10.py.
+# vs auto planes) is recorded in SCALING.md under "Geometry knob
+# isolated at 10×".
 _N_BANDS = 4
 _PLANES_PER_BAND = 8
 # auto-geometry bounds (see auto_planes_per_band): floor = the baked

@@ -10,6 +10,9 @@ Pins the settings every operator in this engine assumes:
 - Arrow on (Pandas-UDF fast path),
 - shuffle partitions sized to the local core count rather than the
   200 default (on a real cluster this is set to ~2-3× total cores).
+
+`executed_plans` reads back what a session ran — every SQL execution
+with its physical plan — from Spark's own SQL status store.
 """
 
 from __future__ import annotations
@@ -53,3 +56,29 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def executed_plans(
+    spark: SparkSession, after: int = -1
+) -> list[tuple[int, int, str, str]]:
+    """The SQL executions Spark's own status store holds (the last
+    `spark.sql.ui.retainedExecutions`, 1000 by default) with an id
+    greater than `after`, as (execution id, root execution id,
+    description, physical plan in FORMATTED mode). A streaming
+    micro-batch is an execution described `<query name> ... batch =
+    <n>`; the writes and collects its foreachBatch body runs are
+    executions rooted at it. The store is filled by the listener bus,
+    so the bus is drained first."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    as_java = spark._jvm.scala.jdk.javaapi.CollectionConverters.asJava
+    return [
+        (
+            e.executionId(),
+            e.rootExecutionId(),
+            e.description(),
+            e.physicalPlanDescription(),
+        )
+        for e in as_java(store.executionsList())
+        if e.executionId() > after
+    ]

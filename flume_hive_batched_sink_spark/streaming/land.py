@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 from ..config import SinkConfig
 from ..functions.partition import derive_logdate
 from ..sources.parse import parse_column
-from .stage import capture_batch_plan, run_stream
+from .stage import run_stream
 
 
 def route_and_parse(df: DataFrame, cfg: SinkConfig) -> DataFrame:
@@ -83,12 +83,17 @@ def _apply_file_naming(
     for logdate in logdates:
         root = os.path.join(data_path, part_dir(cfg.partition_col, logdate))
         for name in os.listdir(root):
-            if not name.startswith("part-") or name.endswith(".crc"):
+            if not name.startswith("part-"):
                 continue
             if cfg.file_name_suffix and name.endswith(cfg.file_name_suffix):
                 continue
             new = f"{cfg.file_name_prefix}{name}{cfg.file_name_suffix}"
             os.rename(os.path.join(root, name), os.path.join(root, new))
+            # the checksum sibling follows its file, as Hadoop's
+            # ChecksumFileSystem.rename does
+            crc = os.path.join(root, f".{name}.crc")
+            if os.path.exists(crc):
+                os.rename(crc, os.path.join(root, f".{new}.crc"))
 
 
 def _book_path(cfg: SinkConfig) -> str:
@@ -269,6 +274,9 @@ def land_batch(
     between them: the counts read only `ts` and the logdate, so
     column pruning drops the parse from their re-read of the source.
     The bookkeeping appends are driver-written files (`_append`).
+    The write and the collect are each one execution in Spark's SQL
+    execution store, rooted at the micro-batch that runs this body;
+    the plan sweep reads their plans there (`session.executed_plans`).
 
     A logdate's `sinkcount` is cumulative: the count the bookkeeping
     already holds plus this batch's rows (the reference's counter
@@ -276,9 +284,6 @@ def land_batch(
     idempotence under replay is not provided (module docstring)."""
     spark = batch_df.sparkSession
     routed = route_and_parse(batch_df, cfg)
-    # plan audit (scripts/plan_sweep.py): foreachBatch pipelines are
-    # invisible to explainInternal, so record the batch plans
-    capture_batch_plan(routed, f"land_batch:{cfg.table}")
     data_path = os.path.join(cfg.output_path, cfg.table)
     (
         routed.repartition(cfg.partition_col)
@@ -298,9 +303,8 @@ def land_batch(
             _micros(F.max("ts")).alias("updatetime"),
         )
         .withColumn("window_end", _window_end(cfg))
+        .collect()
     )
-    capture_batch_plan(counts, f"land_batch:{cfg.table}")
-    counts = counts.collect()
     _apply_file_naming(spark, data_path, cfg, [r[0] for r in counts])
 
     book = _book(cfg)
@@ -533,7 +537,8 @@ def run_landing_stream(
 ) -> None:
     """The full streaming job: file source (stand-in for the Flume
     channel) → foreachBatch(land_batch), AvailableNow one-shot, run as
-    `land_<table>` (its checkpoint directory and plan key). With
+    `land_<table>` (its checkpoint directory, and the name its
+    micro-batches carry in Spark's SQL execution store). With
     no explicit `on_complete` and cfg.notify_url set, finalized
     logdates are POSTed to the configured REST endpoint (A23 — the
     reference's DTE notification, HiveBatchedSink.scala:205-227).
@@ -548,9 +553,9 @@ def run_landing_stream(
     per-batch epilogue alone only reconciles on data-bearing batches
     — r12 advice)."""
     if on_complete is None and cfg.notify_url:
-        from .notify import rest_notifier
+        from .notify import RestNotifier
 
-        on_complete = rest_notifier(cfg.notify_url, cfg.notify_logid)
+        on_complete = RestNotifier(cfg.notify_url, cfg.notify_logid)
     book = _book(cfg)
     if fresh:
         shutil.rmtree(

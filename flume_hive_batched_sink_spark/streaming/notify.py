@@ -7,7 +7,7 @@ failure must never kill the sink); called per finished logdate from
 the leader epilogue (HiveBatchedSink.scala:205-227, the loop over
 `getFinishedLogdateList`).
 
-Spark form: a callable factory whose product plugs into the
+Spark form: a callable object that plugs into the
 `on_complete` seam of land.land_batch / land.run_landing_stream (the
 driver-side epilogue that replaces the reference's leader thread —
 SURVEY.md §3.4: ZK election collapses, the driver is always leader).
@@ -102,11 +102,3 @@ class RestNotifier:
     def __call__(self, logdates: list[str]) -> None:
         for logdate in logdates:
             self.notify_one(logdate)
-
-
-def rest_notifier(
-    service_url: str, logid: int, **kwargs
-) -> RestNotifier:
-    """Factory matching the reference's configuration surface
-    (serviceURL + logid from Config; per-logdate POST)."""
-    return RestNotifier(service_url, logid, **kwargs)

@@ -13,9 +13,12 @@ expressible in the DuckDB oracle.
 
 Every streaming query in the package — the landing stream and every
 `stream_*` operator — starts through `run_stream`: one replay source
-(`replay_source`), one checkpoint, one AvailableNow launch and one
-plan capture; only the sink differs (memory, noop, a parquet path or
-a foreachBatch function).
+(`replay_source`), one checkpoint and one AvailableNow launch; only
+the sink differs (memory, noop, a parquet path or a foreachBatch
+function). What a stream ran is read back from Spark's SQL execution
+store (`session.executed_plans`): every micro-batch is one execution
+described `<name> ... batch = <n>`, and the writes and collects of a
+foreachBatch body are executions rooted at it.
 """
 
 from __future__ import annotations
@@ -41,68 +44,6 @@ from ..scratch import SCRATCH
 # decade rows measure operator state work. Process-local by design:
 # no cross-run staleness is possible.
 _STAGE_CACHE: dict[str, tuple[str, object]] = {}
-
-# Executed micro-batch plans, captured per query/stage for
-# scripts/plan_sweep.py: streaming plans are micro-batch-internal
-# (building the result DataFrame EXECUTES the replay), so the sweep
-# can't explain() the returned frame the way it does batch operators.
-# Instead every completed StreamingQuery (run_stream, the one launch)
-# and every foreachBatch body records the plan text it actually ran
-# here, and the sweep diffs this dict around each operator
-# invocation. Keys are query/stage names; values are BOUNDED lists of
-# recent plan dumps — land_batch captures 2 plans per micro-batch on
-# the PRODUCTION landing path, so an unbounded buffer would grow
-# driver memory monotonically on a long-running stream (r10 code
-# review). The cap must exceed what one sweep invocation pushes: the
-# landing replay is 3 micro-batches x 2 captures (routed, the counts
-# collect; the bookkeeping appends are driver-written files, no plan)
-# = 6 under ONE key (its stream plan goes under the run's own name),
-# so 8 leaves headroom — the sweep's around-the-call diff never loses
-# entries.
-LAST_PLANS: dict[str, list[str]] = {}
-_PLAN_BUF = 8
-
-# Monotonic per-key push counter (total plans EVER pushed, never
-# truncated). The sweep's around-the-call diff must not index into
-# LAST_PLANS with pre-call list lengths: the buffer keeps only the
-# last _PLAN_BUF entries, so if a key already held entries from an
-# earlier invocation in the same process, a second invocation pushing
-# past the cap would shift indices and v[before:] would silently drop
-# the earliest NEW captures (r10 ADVICE). Diff PLAN_PUSH_COUNTS
-# instead and take the last (count_now - count_before) entries,
-# capped at the buffer size.
-PLAN_PUSH_COUNTS: dict[str, int] = {}
-
-
-def _push_plan(name: str, text: str) -> None:
-    buf = LAST_PLANS.setdefault(name, [])
-    buf.append(text)
-    del buf[:-_PLAN_BUF]
-    PLAN_PUSH_COUNTS[name] = PLAN_PUSH_COUNTS.get(name, 0) + 1
-
-
-def capture_stream_plan(q, name: str) -> None:
-    """Record a finished StreamingQuery's last micro-batch plan
-    (logical + physical — StreamExecution retains lastExecution after
-    AvailableNow drains). Capture failures are swallowed: the sweep
-    treats a missing capture as 'no plan observed', never as a crash
-    in the operator itself."""
-    try:
-        _push_plan(name, q._jsq.explainInternal(True))
-    except Exception:  # pragma: no cover - py4j edge
-        pass
-
-
-def capture_batch_plan(df, name: str) -> None:
-    """Record the physical plan of a DataFrame a foreachBatch body is
-    about to execute (write/collect) — the part of a foreachBatch
-    pipeline explainInternal can't see."""
-    try:
-        _push_plan(
-            name, df._jdf.queryExecution().executedPlan().toString()
-        )
-    except Exception:  # pragma: no cover - py4j edge
-        pass
 
 
 def stage_chunks(
@@ -180,8 +121,9 @@ def run_stream(
 ) -> StreamingQuery:
     """The package's one stream launch: replay source → `transform`
     (None: the source as is) → sink, driven to completion with
-    AvailableNow; returns the finished query, its last micro-batch
-    plan recorded under `name`. The sink is "memory" (read it back
+    AvailableNow; returns the finished query. Its micro-batches are
+    in Spark's SQL execution store, described by `name`
+    (`session.executed_plans`). The sink is "memory" (read it back
     with `spark.table(name)`), "noop", a parquet output path (Spark's
     file sink with its `_spark_metadata` log), or a foreachBatch
     function. The checkpoint lives at SCRATCH/checkpoints/<name> and
@@ -206,7 +148,6 @@ def run_stream(
         w = w.format("parquet").option("path", sink)
     q = w.start()
     q.awaitTermination()
-    capture_stream_plan(q, name)
     return q
 
 

@@ -1203,7 +1203,6 @@ def stream_ann_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from ..operators.registry import tbl
     from ..operators.similarity import ivf_centroids
-    from .stage import capture_batch_plan
 
     from .. import perf
 
@@ -1250,7 +1249,6 @@ def stream_ann_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
                 probe_rows=rows,
                 cents=cents,
             )
-            capture_batch_plan(res, "stream_ann_serve")
             res.write.mode("append").parquet(out_path)
 
     run_stream(spark, staged, schema, None, "ann_serve", sink=serve)
@@ -1317,8 +1315,6 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql.window import Window as W
 
-    from .stage import capture_batch_plan
-
     o = load_table(spark, sf_dir, "orders")
     cdc = o.select(
         F.col("o_custkey").alias("custkey"),
@@ -1352,7 +1348,6 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         else:
             merged = winners
-        capture_batch_plan(merged, "stream_cdc_apply")
         gen = os.path.join(gen_base, f"gen_{bid:03d}")
         merged.write.mode("overwrite").parquet(gen)
         last_gen.append(gen)

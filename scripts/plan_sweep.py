@@ -11,16 +11,14 @@ literal/constant frame that never scales with the corpus).
 
 Streaming operators are swept too (r10 — the r9 verdict's
 n_skipped_streaming item): their plans are micro-batch-internal, so
-building the result DataFrame EXECUTES the replay and the sweep reads
-the plans the run actually executed from stage.LAST_PLANS — every
-stream starts through stage.run_stream, which records the finished
-query's explainInternal (the landing stream, stream_ann_serve and
-stream_cdc_apply included), and foreachBatch bodies (land.py,
-stream_ann_serve, stream_cdc_apply) record the batch plans
-explainInternal can't see.
-The audit text is the union of all plans captured during that
-operator's invocation (diffed around the call), so multi-phase
-operators (restart recovery's two runs) contribute every phase.
+building the result DataFrame EXECUTES the replay, and the sweep
+reads the plans the run actually executed from Spark's SQL execution
+store (`session.executed_plans`): every execution that ran during
+the operator's invocation — each micro-batch, the writes and collects
+of each foreachBatch body (land.py, stream_ann_serve,
+stream_cdc_apply), every phase of multi-phase operators (restart
+recovery's two runs) and the operator's build-time collects — plus
+the plan of the returned frame.
 
 Usage: python scripts/plan_sweep.py [sf_dir]   (default sf0.01)
 Writes PLANSWEEP.json: {query: {bnlj: n, cartesian: n, allowed: bool,
@@ -36,7 +34,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from flume_hive_batched_sink_spark import operators as ops
-from flume_hive_batched_sink_spark.session import get_spark
+from flume_hive_batched_sink_spark.session import executed_plans, get_spark
 from scripts.dump_plans import _formatted
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
@@ -169,40 +167,21 @@ def main() -> None:
     bad: list[str] = []
     errors: list[str] = []
     hit_names: set[str] = set()
-    from flume_hive_batched_sink_spark.streaming import stage
 
     for name, fn in ops.QUERIES.items():
         is_stream = name.startswith("stream_")
-        # diff on the MONOTONIC push counters, not list lengths — the
-        # plan buffers truncate to the last stage._PLAN_BUF entries, so
-        # lengths stop moving once a key is full and pre-call indices
-        # would drop the earliest new captures (r10 ADVICE)
-        before = dict(stage.PLAN_PUSH_COUNTS)
         try:
+            if is_stream:
+                last = max((e[0] for e in executed_plans(spark)), default=-1)
             df = fn(spark, SF)
             if is_stream:
-                # micro-batch plans captured during the replay, plus
-                # the (batch) plan of the returned summary frame;
-                # LAST_PLANS holds bounded per-key LISTS of plan dumps
-                new = "".join(
-                    "".join(
-                        v[-min(
-                            stage.PLAN_PUSH_COUNTS.get(k, 0)
-                            - before.get(k, 0),
-                            len(v),
-                        ):]
-                        if stage.PLAN_PUSH_COUNTS.get(k, 0)
-                        > before.get(k, 0)
-                        else ""
-                    )
-                    for k, v in stage.LAST_PLANS.items()
-                )
-                plan = new + _formatted(df)
-                if not new:
+                new = executed_plans(spark, last)
+                if not any("batch = " in e[2] for e in new):
                     raise RuntimeError(
-                        "no micro-batch plan captured — the operator "
+                        "no micro-batch executed — the operator "
                         "started no stream through stage.run_stream"
                     )
+                plan = "".join(e[3] for e in new) + _formatted(df)
             else:
                 plan = _formatted(df)
         except Exception as exc:  # pragma: no cover - sweep robustness

@@ -1,5 +1,6 @@
 """land.py bookkeeping: the cumulative per-logdate `sinkcount`, the
-per-batch Spark-job floor of a landing micro-batch, once-only
+per-batch Spark-job floor of a landing micro-batch, the executions a
+landing stream leaves in Spark's SQL execution store, once-only
 notification under concurrent reconciles of the shared driver view,
 and the driver-written bookkeeping appends (one file each, in the
 schema Spark wrote, readable next to Spark-written appends)."""
@@ -13,11 +14,15 @@ import shutil
 import pytest
 
 from flume_hive_batched_sink_spark.config import SinkConfig
-from flume_hive_batched_sink_spark.streaming import land, stage
+from flume_hive_batched_sink_spark.operators import QUERIES
+from flume_hive_batched_sink_spark.session import executed_plans
+from flume_hive_batched_sink_spark.streaming import land
 from flume_hive_batched_sink_spark.streaming.land import (
     land_batch,
     read_bookkeeping,
 )
+
+from .conftest import SF_SMALL, last_execution_id
 
 DAY1 = "202401010000"
 
@@ -107,8 +112,7 @@ def test_closing_batch_job_floor(spark, tmp_path):
     )
     got: list[str] = []
     land_batch(b0, 0, cfg, on_complete=got.extend)
-    key = f"land_batch:{cfg.table}"
-    pushed_before = stage.PLAN_PUSH_COUNTS.get(key, 0)
+    mark = last_execution_id(spark)
     sc = spark.sparkContext
     group = f"land-floor-{os.getpid()}"
     sc.setJobGroup(group, "one closing landing micro-batch")
@@ -120,11 +124,42 @@ def test_closing_batch_job_floor(spark, tmp_path):
     assert got == [DAY1]  # the batch did close a logdate
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert 0 < len(jobs) <= 4, sorted(jobs)
-    pushed = stage.PLAN_PUSH_COUNTS[key] - pushed_before
-    # routed and the counts collect
-    assert pushed == 2
-    plans = stage.LAST_PLANS[key][-pushed:]
+    # the plans the batch executed: the data write and the counts
+    # collect, read back from Spark's SQL execution store
+    plans = [e[3] for e in executed_plans(spark, mark)]
+    assert len(plans) == 2, plans
+    assert any("InsertIntoHadoopFsRelationCommand" in p for p in plans)
     assert not any("Scan ExistingRDD" in p for p in plans), plans
+
+
+def test_landing_micro_batches_in_execution_store(spark):
+    """Each micro-batch of the landing stream is one execution in
+    Spark's SQL execution store, described by the landing run's name,
+    and the data write and counts collect its foreachBatch body runs
+    are executions rooted at that micro-batch — the plans
+    scripts/plan_sweep.py reads."""
+    from flume_hive_batched_sink_spark.streaming.streaming_ops import (
+        _staged_events,
+    )
+
+    staged, _schema = _staged_events(spark, SF_SMALL)
+    mark = last_execution_id(spark)
+    QUERIES["stream_foreach_batch_land"](spark, SF_SMALL).collect()
+    new = executed_plans(spark, mark)
+    batches = {
+        i
+        for i, root, desc, _plan in new
+        if i == root
+        and desc.startswith("land_events_landed_stream")
+        and "batch = " in desc
+    }
+    # one micro-batch per staged file
+    assert len(batches) == len(os.listdir(staged)), new
+    for b in batches:
+        body = [plan for i, root, _d, plan in new if root == b and i != b]
+        writes = [p for p in body if "InsertIntoHadoopFsRelationCommand" in p]
+        collects = [p for p in body if "partial_count(1)" in p]
+        assert len(writes) == 1 and len(collects) == 1, (b, body)
 
 
 def test_concurrent_reconciles_notify_once(spark, tmp_path):

@@ -10,7 +10,7 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 import pytest
 
-from flume_hive_batched_sink_spark.streaming.notify import rest_notifier
+from flume_hive_batched_sink_spark.streaming.notify import RestNotifier
 
 
 class _Recorder(BaseHTTPRequestHandler):
@@ -48,7 +48,7 @@ def server():
 
 def test_notifier_posts_per_logdate(server):
     url, rec = server
-    n = rest_notifier(url, 42)
+    n = RestNotifier(url, 42)
     n(["20240101", "20240102"])
     assert rec.paths == ["/42/20240101", "/42/20240102"]
     assert n.sent == ["20240101", "20240102"] and n.failed == []
@@ -57,7 +57,7 @@ def test_notifier_posts_per_logdate(server):
 def test_notifier_retries_transient_5xx(server):
     url, rec = server
     rec.fail_first_n["/7/20240103"] = 2  # two 503s, then 204
-    n = rest_notifier(url, 7, retries=3, backoff=0.01)
+    n = RestNotifier(url, 7, retries=3, backoff=0.01)
     n(["20240103"])
     assert rec.paths.count("/7/20240103") == 3
     assert n.sent == ["20240103"] and n.failed == []
@@ -66,7 +66,7 @@ def test_notifier_retries_transient_5xx(server):
 def test_notifier_swallows_exhausted_failures(server):
     url, rec = server
     rec.fail_first_n["/7/20240104"] = 99  # always 503
-    n = rest_notifier(url, 7, retries=2, backoff=0.01)
+    n = RestNotifier(url, 7, retries=2, backoff=0.01)
     n(["20240104"])  # must NOT raise (DTEUtils.scala:29-32 semantics)
     assert n.failed == ["20240104"] and n.sent == []
     assert rec.paths.count("/7/20240104") == 2
@@ -74,7 +74,7 @@ def test_notifier_swallows_exhausted_failures(server):
 
 def test_notifier_swallows_connection_refused():
     # port 1 is never listening; error must be swallowed, not raised
-    n = rest_notifier("http://127.0.0.1:1", 9, retries=2, backoff=0.01)
+    n = RestNotifier("http://127.0.0.1:1", 9, retries=2, backoff=0.01)
     n(["20240105"])
     assert n.failed == ["20240105"] and n.sent == []
 

@@ -312,8 +312,8 @@ def test_landing_file_naming(spark, tmp_path):
     """Config.scala:25-27 fileNamePrefix/fileSuffix: landed part
     files of every micro-batch carry the configured prefix/suffix
     exactly once (a later batch neither misses its own files nor
-    re-renames earlier ones), and the renamed files read back with no
-    row loss."""
+    re-renames earlier ones), each keeps its checksum sibling, and the
+    renamed files read back with no row loss."""
     import os
 
     from flume_hive_batched_sink_spark.catalog import load_table
@@ -357,6 +357,15 @@ def test_landing_file_naming(spark, tmp_path):
     # both batches' files are there: Spark names a write job's part
     # files part-<n>-<job uuid>
     assert len({f.split("-", 2)[2][:36] for f in files}) == 2, files
+    # a renamed file's `.Y.crc` sibling is renamed with it: every
+    # checksum names a landed file, and every landed file has one
+    for _root, _d, fs in os.walk(table_dir):
+        checked = [
+            f[1:-4] for f in fs if f.startswith(".") and f.endswith(".crc")
+        ]
+        assert sorted(checked) == sorted(
+            f for f in fs if not f.startswith((".", "_"))
+        ), fs
     assert spark.read.parquet(table_dir).count() == 300
 
 
@@ -3541,45 +3550,6 @@ def test_source_overlap_invariants(spark):
         assert r.est_jaccard == r.n_match / N_HASHES
 
 
-def test_plan_buffer_survives_repeat_invocations(spark):
-    """stage.py's LAST_PLANS buffer is bounded (_PLAN_BUF); the sweep
-    must diff PLAN_PUSH_COUNTS (monotonic, never truncated) instead of
-    pre-call list lengths, else a second same-process invocation that
-    pushes past the cap silently drops captures (r10 ADVICE / r11
-    verdict #6). Invoke the landing operator twice and assert the
-    count-based diff sees every capture both times, even after the
-    buffer wraps — and that each run also records its one stream plan
-    under the landing run's name."""
-    from flume_hive_batched_sink_spark.streaming import stage
-
-    key = "land_batch:events_landed_stream"
-    run = "land_events_landed_stream"
-
-    def run_once():
-        before = stage.PLAN_PUSH_COUNTS.get(key, 0)
-        run_before = stage.PLAN_PUSH_COUNTS.get(run, 0)
-        QUERIES["stream_foreach_batch_land"](spark, SF_SMALL).collect()
-        after = stage.PLAN_PUSH_COUNTS.get(key, 0)
-        pushed = after - before
-        assert pushed > 0
-        assert stage.PLAN_PUSH_COUNTS.get(run, 0) == run_before + 1
-        # the sweep's recovery: last min(pushed, buf-cap) entries
-        got = stage.LAST_PLANS[key][-min(pushed, stage._PLAN_BUF):]
-        assert len(got) == min(pushed, stage._PLAN_BUF)
-        return pushed, after
-
-    p1, c1 = run_once()
-    p2, c2 = run_once()
-    assert p1 == p2  # same replay → same capture count
-    assert c2 == c1 + p2  # counter is monotonic across invocations
-    # the scenario must actually wrap the buffer (6+6 > 8 today) —
-    # a pre-call-length diff would have dropped the earliest captures
-    assert c2 > stage._PLAN_BUF
-    # the buffer itself is bounded — the counter is what preserved
-    # the diff when total pushes exceed the cap
-    assert len(stage.LAST_PLANS[key]) == min(c2, stage._PLAN_BUF)
-
-
 def test_streams_start_only_in_stage_run_stream():
     """Every stream in the package starts through stage.run_stream:
     `.readStream`, `.writeStream` and `trigger(availableNow=...)`
@@ -3872,15 +3842,18 @@ def test_stream_ann_serve_agrees_with_batch_ivfpq(spark):
     be IDENTICAL rows — same neighbors, same adc_d2, same ranks (the
     static index + stateless per-batch scoring commute with
     micro-batching). The streamed run must also answer every probe
-    in its wider vec_id < 15 set. The serving stream records its
-    stream plan under its run name."""
-    from flume_hive_batched_sink_spark.streaming import stage
+    in its wider vec_id < 15 set. The serving stream's micro-batches
+    are in Spark's SQL execution store under its run name."""
+    from flume_hive_batched_sink_spark.session import executed_plans
 
-    from .conftest import SF_ORACLE
+    from .conftest import SF_ORACLE, last_execution_id
 
-    runs = stage.PLAN_PUSH_COUNTS.get("ann_serve", 0)
+    mark = last_execution_id(spark)
     served = QUERIES["stream_ann_serve"](spark, SF_ORACLE).collect()
-    assert stage.PLAN_PUSH_COUNTS.get("ann_serve", 0) == runs + 1
+    assert any(
+        d.startswith("ann_serve") and "batch = " in d
+        for _i, _r, d, _p in executed_plans(spark, mark)
+    )
     probes_served = {r.probe_id for r in served}
     assert probes_served == set(range(15))
     batch = {
@@ -4406,17 +4379,22 @@ def test_cdc_apply_tombstones_and_lineage(spark):
     the output; every emitted (custkey, last_seq, last_val) is that
     key's max-seq NON-DELETED... no — max-seq change overall, which
     must be a non-D op for the key to appear; recomputed directly
-    from orders. The apply stream records its stream plan under its
-    run name."""
+    from orders. The apply stream's micro-batches are in Spark's SQL
+    execution store under its run name."""
     from flume_hive_batched_sink_spark.catalog import load_table
-    from flume_hive_batched_sink_spark.streaming import stage
+    from flume_hive_batched_sink_spark.session import executed_plans
 
-    runs = stage.PLAN_PUSH_COUNTS.get("cdc_apply", 0)
+    from .conftest import last_execution_id
+
+    mark = last_execution_id(spark)
     out = {
         r.custkey: (r.last_seq, r.last_val)
         for r in QUERIES["stream_cdc_apply"](spark, SF_SMALL).collect()
     }
-    assert stage.PLAN_PUSH_COUNTS.get("cdc_apply", 0) == runs + 1
+    assert any(
+        d.startswith("cdc_apply") and "batch = " in d
+        for _i, _r, d, _p in executed_plans(spark, mark)
+    )
     orders = load_table(spark, SF_SMALL, "orders").collect()
     best: dict[int, tuple] = {}
     for o in orders:
