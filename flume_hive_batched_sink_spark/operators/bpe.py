@@ -80,10 +80,8 @@ def _pair_counts(seqs: DataFrame) -> DataFrame:
 
 
 def initial_seqs(wf: DataFrame) -> DataFrame:
-    """Space-wrapped char sequences for a word-frequency table — THE
-    seq format every consumer must share (bpe_train and the
-    dump_plans plan pin build through here, so a format change cannot
-    silently desynchronize them)."""
+    """Space-wrapped char sequences for a word-frequency table — the
+    seq format of the trained tokenizer state."""
     return wf.select(
         "word",
         "cnt",

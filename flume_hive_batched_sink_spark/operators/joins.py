@@ -488,9 +488,7 @@ def join_bloom_runtime(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def bloom_scoped_session(spark: SparkSession) -> SparkSession:
     """The child session join_bloom_runtime plans under: the shared
-    registry.scoped_session cache with `_BLOOM_CONFS` applied.
-    dump_plans.py uses the SAME helper, so PLANCHECK.json certifies
-    the exact configuration the operator runs."""
+    registry.scoped_session cache with `_BLOOM_CONFS` applied."""
     return scoped_session(spark, _BLOOM_CONFS)
 
 

@@ -377,9 +377,7 @@ def scoped_session(
     invocations don't accumulate SessionStates. `newSession` inherits
     SparkConf-time settings but NOT runtime `conf.set` ones — the two
     that affect semantics/shape are carried over explicitly. Shared
-    by join_bloom_runtime and scan_agg_pushdown (and dump_plans.py
-    asserts plans under the SAME helper, so PLANCHECK certifies the
-    configuration the operators actually run)."""
+    by join_bloom_runtime and scan_agg_pushdown."""
     per = _SCOPED_SESSIONS.setdefault(spark, {})
     key = tuple(sorted(confs.items()))
     if key not in per:

@@ -948,9 +948,7 @@ _V2_CONFS = {
 
 def v2_scan_session(spark: SparkSession) -> SparkSession:
     """Child session for DSv2 footer-aggregate scans: the shared
-    registry.scoped_session cache with `_V2_CONFS` applied.
-    dump_plans.py asserts PushedAggregation under this SAME helper,
-    so PLANCHECK certifies the configuration the operator runs."""
+    registry.scoped_session cache with `_V2_CONFS` applied."""
     return scoped_session(spark, _V2_CONFS)
 
 

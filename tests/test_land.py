@@ -137,7 +137,7 @@ def test_landing_micro_batches_in_execution_store(spark):
     Spark's SQL execution store, described by the landing run's name,
     and the data write and counts collect its foreachBatch body runs
     are executions rooted at that micro-batch — the plans
-    scripts/plan_sweep.py reads."""
+    scripts/plan_gate.py reads."""
     from flume_hive_batched_sink_spark.streaming.streaming_ops import (
         _staged_events,
     )
