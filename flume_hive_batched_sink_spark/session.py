@@ -12,7 +12,8 @@ Pins the settings every operator in this engine assumes:
   200 default (on a real cluster this is set to ~2-3× total cores).
 
 `executed_plans` reads back what a session ran — every SQL execution
-with its physical plan — from Spark's own SQL status store.
+with its physical plan — from Spark's own SQL status store;
+`last_execution_id` reads only the newest id there.
 """
 
 from __future__ import annotations
@@ -58,6 +59,13 @@ def get_spark(
     return spark
 
 
+def _status_store(spark: SparkSession):
+    """Spark's SQL status store, once the listener bus that fills it
+    is drained."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return spark._jsparkSession.sharedState().statusStore()
+
+
 def executed_plans(
     spark: SparkSession, after: int = -1
 ) -> list[tuple[int, int, str, str]]:
@@ -67,10 +75,8 @@ def executed_plans(
     description, physical plan in FORMATTED mode). A streaming
     micro-batch is an execution described `<query name> ... batch =
     <n>`; the writes and collects its foreachBatch body runs are
-    executions rooted at it. The store is filled by the listener bus,
-    so the bus is drained first."""
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-    store = spark._jsparkSession.sharedState().statusStore()
+    executions rooted at it."""
+    store = _status_store(spark)
     as_java = spark._jvm.scala.jdk.javaapi.CollectionConverters.asJava
     return [
         (
@@ -82,3 +88,15 @@ def executed_plans(
         for e in as_java(store.executionsList())
         if e.executionId() > after
     ]
+
+
+def last_execution_id(spark: SparkSession) -> int:
+    """The newest execution id in the status store (-1: none), the
+    mark to read one call's executions after. The store lists its
+    executions by id, so only the last one is read, not every plan."""
+    store = _status_store(spark)
+    n = store.executionsCount()
+    if n == 0:
+        return -1
+    newest = store.executionsList(n - 1, 1)
+    return newest.head().executionId()

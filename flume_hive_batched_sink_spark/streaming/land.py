@@ -14,8 +14,9 @@ collapses, SURVEY.md §3.4), so the bookkeeping view the epilogue
 decides on lives on the driver too (one `_Book` per bookkeeping path)
 and is read back from disk only on restart. The bookkeeping rows are
 already on the driver, so the driver writes each append itself: one
-parquet file, published by rename (the Structured Streaming paper's
-offset/commit logs are driver-written files the same way). A
+parquet file, published by rename, and a restart reads them back
+with pyarrow, with no Spark job (the Structured Streaming paper's
+offset/commit logs are driver-written and -read files the same way). A
 micro-batch therefore runs 4 Spark jobs: the partitioned data write
 and the collect of its per-logdate counts, two jobs each.
 
@@ -29,6 +30,7 @@ and adds its count a second time (ROADMAP item 1).
 
 from __future__ import annotations
 
+import logging
 import os
 import shutil
 import threading
@@ -132,10 +134,44 @@ class _Row(NamedTuple):
     window_end: int | None
 
 
+def _read_appends(cfg: SinkConfig) -> tuple[list[tuple], str]:
+    """Every append row as a tuple in the on-disk column order, with
+    updatetime in epoch µs, and updatetime's type. The driver reads
+    the files with pyarrow, which skips `_`/`.` names (`_SUCCESS`,
+    `.crc`, `_append`'s temp files) as Spark's file index does."""
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+
+    path = _book_path(cfg)
+    appends = ds.dataset(path) if os.path.isdir(path) else None
+    if not (appends and appends.files):
+        return [], "timestamp"
+    names = [cfg.partition_col, "sinkcount", "updatetime", "batch_id", "state"]
+    cols = appends.to_table(columns=names).columns
+    t = cols[2].type  # Spark's INT96 timestamps read as zone-less ns
+    ts_type = "timestamp" if t.tz or t.unit == "ns" else "timestamp_ntz"
+    cols[2] = cols[2].cast(pa.timestamp("us", t.tz)).cast(pa.int64())
+    return list(zip(*(c.to_pylist() for c in cols))), ts_type
+
+
+# the appends' schema, as Spark writes it: partition column, ts_type
+_DDL = "`{}` string, sinkcount bigint, updatetime {}, batch_id int, state string"
+
+
+def _lww(rows) -> dict:
+    """Last-write-wins over append rows (on-disk column order): per
+    logdate the highest batch_id wins, then within a batch NOTIFIED >
+    CHECKED > NEW, the order a tick advances a logdate in. A LATER
+    batch's NEW row outranks any old mark: late data reopens it."""
+    rank = ("NEW", "CHECKED", "NOTIFIED")
+    ordered = sorted(rows, key=lambda r: (r[3], rank.index(r[4])))
+    return {r[0]: r for r in ordered}
+
+
 class _Book:
     """Driver-resident bookkeeping of one table: the last-write-wins
-    view of its appends (logdate → _Row, what `lww_bookkeeping` reads
-    back) and the high-water event time `wm` — the max updatetime over
+    view of its appends (logdate → _Row, as `_lww` picks it from
+    disk) and the high-water event time `wm` — the max updatetime over
     the RAW appends, which is monotone by construction (the lww view
     is not: a late row for the logdate holding the max replaces that
     logdate's updatetime with a smaller value). `rows is None` until
@@ -152,18 +188,16 @@ class _Book:
 
     def load(self, spark: SparkSession, cfg: SinkConfig) -> None:
         """Rebuild from the durable appends (restart, or the first
-        tick over an unloaded view). No bookkeeping on disk → empty,
-        with no Spark job."""
-        from pyspark.errors import AnalysisException
+        tick over an unloaded view) with no Spark job: a projection
+        over a local_frame is evaluated on the driver."""
+        from ..operators.registry import local_frame
 
         self.rows = None  # stays unloaded if a read below raises
-        if not os.path.isdir(_book_path(cfg)):
+        raw, ts_type = _read_appends(cfg)
+        if not raw:
             return self.reset()
-        try:
-            raw = spark.read.parquet(_book_path(cfg))
-        except AnalysisException:  # directory without appends
-            return self.reset()
-        view = lww_bookkeeping(raw, cfg).select(
+        ddl = _DDL.format(cfg.partition_col, ts_type)
+        view = local_frame(spark, raw, ddl).select(
             cfg.partition_col,
             "sinkcount",
             _micros(F.col("updatetime")),
@@ -171,10 +205,10 @@ class _Book:
             "state",
             _window_end(cfg),
         )
-        rows = {r[0]: _Row(*r) for r in view.collect()}
-        self.wm = raw.agg(_micros(F.max("updatetime"))).first()[0]
-        self.ts_type = raw.schema["updatetime"].dataType.simpleString()
-        self.rows = rows
+        rows = [_Row(*r) for r in view.collect()]
+        times = [r.updatetime for r in rows if r.updatetime is not None]
+        self.wm, self.ts_type = max(times, default=None), ts_type
+        self.rows = _lww(rows)
 
     def reset(self) -> None:
         """A fresh stream: its appends start from nothing."""
@@ -312,15 +346,10 @@ def land_batch(
         if book.rows is None:
             book.load(spark, cfg)
         book.ts_type = batch_df.schema["ts"].dataType.simpleString()
+        held = book.rows
         new = [
-            _Row(
-                ld,
-                (book.rows[ld].sinkcount if ld in book.rows else 0) + n,
-                ut,
-                batch_id,
-                "NEW",
-                we,
-            )
+            _Row(ld, n + (held[ld].sinkcount if ld in held else 0), ut,
+                 batch_id, "NEW", we)
             for ld, n, ut, we in counts
         ]
         _epilogue(spark, cfg, book, batch_id, new, on_complete)
@@ -347,12 +376,11 @@ def _epilogue(
     The loop re-checks ALL open logdates every tick, not just the
     current batch's: batch-local checking would never finalize a
     logdate whose window closes during a batch carrying none of its
-    rows (caught by the r10 notifier integration test). This is the
-    reference's leader loop (getFinishedLogdateList →
+    rows. This is the reference's leader loop (getFinishedLogdateList →
     updateCheckedState → REST, HiveBatchedSink.scala:205-227) plus a
     durable notified state the reference lacks.
 
-    Crash-safety (r11 verdict #5): states advance NEW → CHECKED →
+    Crash-safety: states advance NEW → CHECKED →
     NOTIFIED as durable appends. NEW and CHECKED rows go in ONE
     append BEFORE on_complete fires (updateCheckedState-then-POST,
     the reference's own order, HiveBatchedSink.scala:216-227);
@@ -367,8 +395,8 @@ def _epilogue(
     AT-LEAST-ONCE. Within one uncrashed run NOTIFIED filters a
     logdate out, so notification stays once-per-logdate; a LATE row
     flips it back to NEW (higher batch_id wins) and it re-notifies
-    when it re-finalizes. Marks carry the tick's batch_id, so
-    lww_bookkeeping's same-batch ranking (NOTIFIED > CHECKED > NEW)
+    when it re-finalizes. Marks carry the tick's batch_id, so the
+    reader's same-batch ranking (`_lww`: NOTIFIED > CHECKED > NEW)
     advances the logdate without outranking later batches.
     RestNotifier swallows HTTP-level failures (recorded in .failed,
     DTEUtils.scala:29-32 semantics), so an unreachable endpoint still
@@ -420,17 +448,12 @@ def reconcile_notifications(
     cfg: SinkConfig,
     on_complete: Callable[[list[str]], None],
 ) -> list[str]:
-    """Startup reconcile (r12 advice): a crash between the durable
-    CHECKED append and the POST leaves a logdate CHECKED-but-
-    unnotified, and the per-batch epilogue only re-delivers it when a
-    subsequent micro-batch carries NEW DATA — a restarted-but-idle
-    stream would hold the lost notification forever. Run this ONCE at
-    stream startup (run_landing_stream does, on its restart path)
-    to deliver it immediately, independent of new data.
-
-    Reloads the driver view from disk first, then runs one epilogue
-    tick (`_reconcile`). No bookkeeping on disk → nothing to
-    reconcile → []."""
+    """Startup reconcile: a crash between the durable CHECKED append
+    and the POST leaves a logdate CHECKED-but-unnotified, which the
+    per-batch epilogue re-delivers only with a micro-batch of new
+    data. run_landing_stream runs this once on its restart path: it
+    reloads the driver view from disk, then runs one epilogue tick
+    (`_reconcile`). No bookkeeping on disk → []."""
     return _reconcile(spark, cfg, on_complete, reload=True)
 
 
@@ -454,32 +477,14 @@ def _reconcile(
         return _epilogue(spark, cfg, book, max_bid, [], on_complete)
 
 
-def lww_bookkeeping(raw: DataFrame, cfg: SinkConfig) -> DataFrame:
-    """Last-write-wins view over raw bookkeeping appends (A20's upsert
-    semantics reconstructed relationally). Within one batch_id the
-    state ranks NOTIFIED > CHECKED > NEW (the epilogue advances a
-    logdate through all three in the batch that finalized it); a
-    LATER batch's NEW row outranks any old mark (late data reopens
-    the logdate and it re-checks + re-notifies on re-finalize)."""
-    from pyspark.sql.window import Window as W
-
-    w = W.partitionBy(cfg.partition_col).orderBy(
-        F.col("batch_id").desc(),
-        F.when(F.col("state") == "NOTIFIED", 2)
-        .when(F.col("state") == "CHECKED", 1)
-        .otherwise(0)
-        .desc(),
-    )
-    return (
-        raw.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
-
-
 def read_bookkeeping(spark: SparkSession, cfg: SinkConfig) -> DataFrame:
-    """Current bookkeeping state from disk (see lww_bookkeeping)."""
-    return lww_bookkeeping(spark.read.parquet(_book_path(cfg)), cfg)
+    """The last-write-wins bookkeeping on disk, in the appends' schema;
+    a local_frame, so collecting it runs no Spark job."""
+    from ..operators.registry import local_frame
+
+    raw, ts_type = _read_appends(cfg)
+    ddl = _DDL.format(cfg.partition_col, ts_type)
+    return local_frame(spark, list(_lww(raw).values()), ddl)
 
 
 def reconcile_timer(
@@ -488,22 +493,16 @@ def reconcile_timer(
     on_complete: Callable[[list[str]], None],
     interval_s: float = 300.0,
 ):
-    """Periodic reconcile for LONG-LIVED continuous deployments (r13
-    verdict #8's 'timer' option): a ProcessingTime-trigger stream
-    with no incoming data runs no micro-batches, so neither the
-    per-batch epilogue nor the startup reconcile can deliver a
-    notification whose window closes while the stream idles (e.g. a
-    logdate finalized by wall-clock long after its last row). This
-    daemon thread runs one epilogue tick every `interval_s` — the
-    Spark analog of the reference's leader-side timer loop
-    (HiveBatchedSink.scala:205-227 runs getFinishedLogdateList on a
-    schedule, not per event). A tick decides on the driver view under
-    its lock and reads disk only while the view is unloaded: the
-    driver is the view's only writer, so the view already holds every
-    append. Delivery stays at-least-once and once-per-logdate via the
-    same durable CHECKED/NOTIFIED marks.
-    Returns a zero-arg stopper; the availableNow one-shot paths don't
-    need it (they reconcile at startup and tick per batch)."""
+    """Periodic reconcile for long-lived continuous deployments: a
+    ProcessingTime-trigger stream with no incoming data runs no
+    micro-batches, so neither the per-batch epilogue nor the startup
+    reconcile delivers a notification whose window closes while the
+    stream idles. This daemon thread runs one epilogue tick every
+    `interval_s`, the reference's leader-side timer loop
+    (HiveBatchedSink.scala:205-227). A tick decides on the driver view
+    under its lock (the driver is the view's only writer) and reads
+    disk only while the view is unloaded; a tick that raises is logged
+    and the next one retries. Returns a zero-arg stopper."""
     stop = threading.Event()
 
     def loop() -> None:
@@ -513,11 +512,11 @@ def reconcile_timer(
             except Exception:
                 # never kill the stream over a reconcile hiccup; the
                 # next tick (or restart reconcile) retries
-                pass
+                logging.getLogger(__name__).exception(
+                    "reconcile tick failed for table %s", cfg.table
+                )
 
-    t = threading.Thread(
-        target=loop, daemon=True, name=f"reconcile-{cfg.table}"
-    )
+    t = threading.Thread(target=loop, daemon=True, name=f"reconcile-{cfg.table}")
     t.start()
 
     def stopper() -> None:
@@ -550,8 +549,8 @@ def run_landing_stream(
     one reconcile pass runs BEFORE the stream starts so a
     notification lost to a crash between the CHECKED append and the
     POST is re-delivered even if no new data ever arrives (the
-    per-batch epilogue alone only reconciles on data-bearing batches
-    — r12 advice)."""
+    per-batch epilogue alone only reconciles on data-bearing
+    batches)."""
     if on_complete is None and cfg.notify_url:
         from .notify import RestNotifier
 

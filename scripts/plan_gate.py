@@ -49,6 +49,7 @@ from flume_hive_batched_sink_spark.scratch import SCRATCH  # noqa: E402
 from flume_hive_batched_sink_spark.session import (  # noqa: E402
     executed_plans,
     get_spark,
+    last_execution_id,
 )
 
 # the gated scales, beside the deployment's default test data
@@ -57,10 +58,18 @@ SWEEP_SF = os.path.join(DATA, "sf0.01")
 # some broadcast choices depend on input size; the plan checks are
 # pinned at the scale PLANS.md is committed at
 CHECK_SF = os.path.join(DATA, "sf0.1")
-# pinned so hashpartitioning widths and broadcast sizes do not follow
-# the machine's core count
-MASTER, SHUFFLE_PARTITIONS = "local[32]", 32
-CONF = {"spark.sql.codegen.fallback": "false"}
+# what the plans depend on is pinned by conf, not by slot count, so
+# hashpartitioning widths, scan splits and broadcast sizes do not
+# follow the machine's core count while its Python workers do; the
+# page size (by default heap / slots / 16, less G1's 16-byte array
+# header) sizes broadcast hash relations, pinned at its 32-slot value
+# for an 8 GB driver
+MASTER, PARALLELISM = f"local[{len(os.sched_getaffinity(0))}]", 32
+CONF = {
+    "spark.sql.codegen.fallback": "false",
+    "spark.default.parallelism": str(PARALLELISM),
+    "spark.buffer.pageSize": str(8 * 2**20 - 16),
+}
 
 
 # --------------------------------------------------------------------
@@ -1157,8 +1166,8 @@ def main(names: list[str]) -> int:
         print(f"unknown query name(s): {unknown}", file=sys.stderr)
         return 2
     spark = get_spark(app_name="plan-gate", master=MASTER,
-                      shuffle_partitions=SHUFFLE_PARTITIONS, extra_conf=CONF)
-    mark = max((e[0] for e in executed_plans(spark)), default=-1)
+                      shuffle_partitions=PARALLELISM, extra_conf=CONF)
+    mark = last_execution_id(spark)
 
     def attempt(name: str, sf_dir: str, judge: Callable[[Run], object]):
         """judge(run) for one run of `name`, or the error text."""
@@ -1168,7 +1177,7 @@ def main(names: list[str]) -> int:
             out = judge(run)
         except Exception as exc:  # one failing operator fails the gate
             # executions the failed run started belong to no later one
-            mark = max((e[0] for e in executed_plans(spark, mark)), default=mark)
+            mark = last_execution_id(spark)
             print(f"{name:32s} ERROR {str(exc)[:200]}", flush=True)
             return str(exc)[:200]
         for k, (_i, _d, p) in enumerate(run.executions if names else [], 1):
@@ -1242,7 +1251,7 @@ def main(names: list[str]) -> int:
             "",
             "Generated by `python scripts/plan_gate.py`: the final plan",
             "of each query's noop write, read from Spark's SQL execution",
-            "store (`local[32]`, 32 shuffle partitions), with expression",
+            "store (parallelism and shuffle partitions 32), with expression",
             "ids (`#x`), `plan_id`s and data paths masked. What to check:",
             "`PushedFilters` non-empty on filtered scans; `ReadSchema`",
             "pruned to referenced columns; dims under `BroadcastExchange`;",

@@ -8,18 +8,12 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from flume_hive_batched_sink_spark.session import (  # noqa: E402
-    executed_plans,
     get_spark,
+    last_execution_id,  # noqa: F401 — the tests' mark, imported from here
 )
 
 SF_SMALL = "/root/testdata/sf0.001"
 SF_ORACLE = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
-
-
-def last_execution_id(spark) -> int:
-    """The newest SQL execution id in Spark's status store (-1: none),
-    the mark to read the executions of one call after."""
-    return max((e[0] for e in executed_plans(spark)), default=-1)
 
 
 @pytest.fixture(scope="session")
