@@ -428,7 +428,7 @@ def oracle_sql() -> dict[str, str]:
     ns_hard_negatives re-ranks the cos_ranked fragment inside a
     literal band gate; ns_dedup_verbatim reuses the winnowing CTEs
     for candidates plus a stride-1 md5-hashed 8-gram intersection in
-    the established conv/'0x'-cast hash pairing; ts_holt_winters
+    the registry's hex_int/sql_hex_int hash pairing; ts_holt_winters
     replays a 10-wide [l,b,s0..s6,flag] list-state with init routed
     through flag CASEs; ts_acf rides exact-integer means, row-level
     deviation products, and the dsum decimal convention;

@@ -50,9 +50,11 @@ from pyspark.sql.window import Window
 from .registry import (
     det_ln_int,
     dsum,
+    hex_int,
     query,
     sql_det_ln_ctes,
     sql_dsum,
+    sql_hex_int,
     tbl,
 )
 
@@ -232,8 +234,7 @@ _CCNET_SAMPLE_NIBBLE = 4
     samp AS (
       SELECT * FROM docsc
       WHERE nb > 0
-        AND strpos('0123456789abcdef',
-                   substring(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1
+        AND {sql_hex_int("md5(CAST(doc_id AS VARCHAR))", 1, 1)}
             < {_CCNET_SAMPLE_NIBBLE}
     ),
     ranked AS (
@@ -291,11 +292,7 @@ def ns_quality_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     samp = docsc.filter(
         (F.col("nb") > 0)
         & (
-            F.conv(
-                F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1),
-                16,
-                10,
-            ).cast("int")
+            hex_int(F.md5(F.col("doc_id").cast("string")), 1, 1)
             < _CCNET_SAMPLE_NIBBLE
         )
     )
@@ -341,24 +338,13 @@ _DSIR_TARGET_SOURCE = "src2"
 _DSIR_BUCKETS = 256  # hashed-unigram feature space (DSIR uses 10^4)
 
 # bucket(w) = first 16 bits of md5(w) mod B — md5 is byte-identical in
-# both engines; DuckDB rebuilds the 16-bit value with a nibble
-# polynomial (same trick as dedup._h32_sql).
-_DSIR_BUCKET_SQL = (
-    "("
-    + " + ".join(
-        f"(strpos('0123456789abcdef', substring(md5(w), {i + 1}, 1)) - 1)"
-        f" * {16 ** (3 - i)}"
-        for i in range(4)
-    )
-    + f") % {_DSIR_BUCKETS}"
-)
+# both engines, and both read the 16-bit value through the registry's
+# hex_int twin (as dedup._h32 does).
+_DSIR_BUCKET_SQL = f"{sql_hex_int('md5(w)', 1, 4)} % {_DSIR_BUCKETS}"
 
 
 def _dsir_bucket(col: Column) -> Column:
-    return (
-        F.conv(F.substring(F.md5(col), 1, 4), 16, 10).cast("bigint")
-        % _DSIR_BUCKETS
-    )
+    return hex_int(F.md5(col), 1, 4) % _DSIR_BUCKETS
 
 
 @query(
@@ -497,25 +483,15 @@ _BLOOM_WORD = 63  # bits per bigint word (sign bit unused)
 _BLOOM_DELTA_SQL = ", ".join(f"'{s}'" for s in _BLOOM_DELTA)
 
 
-def _bloom_h40_sql(ck: str, j: int) -> str:
-    """DuckDB twin of the j-th 40-bit position hash: a nibble
-    polynomial over md5 hex chars [1+10j, 10+10j] (same trick as
-    dedup._h32_sql, widened to 10 nibbles so positions cover filters
-    up to 2^40 bits)."""
-    return (
-        "("
-        + " + ".join(
-            f"(strpos('0123456789abcdef',"
-            f" substring({ck}, {1 + 10 * j + i}, 1)) - 1)"
-            f" * {16 ** (9 - i)}"
-            for i in range(10)
-        )
-        + ")"
-    )
-
-
 def _bloom_h40(ck: Column, j: int) -> Column:
-    return F.conv(F.substring(ck, 1 + 10 * j, 10), 16, 10).cast("bigint")
+    """The j-th 40-bit position hash: md5 hex chars [1+10j, 10+10j] of
+    the chunk key, so positions cover filters up to 2^40 bits."""
+    return hex_int(ck, 1 + 10 * j, 10)
+
+
+def _bloom_h40_sql(ck: str, j: int) -> str:
+    """DuckDB twin of _bloom_h40."""
+    return sql_hex_int(ck, 1 + 10 * j, 10)
 
 
 # Position-hash address space: 10 md5 nibbles = 2^40 bits. A filter
@@ -823,27 +799,12 @@ _WTK_K = 100
 _WTK_C = 1 << 32  # md5-32 hash range; u = h / 2^32 in (0, 1]
 
 
-def _md5_poly_sql(expr: str, start: int, n: int) -> str:
-    """Nibble polynomial over md5 hex chars [start, start+n) — the
-    DuckDB twin of conv(substring(md5(x), start, n), 16, 10)."""
-    return (
-        "("
-        + " + ".join(
-            f"(strpos('0123456789abcdef',"
-            f" substring(md5({expr}), {start + i}, 1)) - 1)"
-            f" * {16 ** (n - 1 - i)}"
-            for i in range(n)
-        )
-        + ")"
-    )
-
-
 @query(
     "ns_sample_weighted_topk",
     f"""
     WITH base AS (
       SELECT doc_id, source, n_chars,
-             {_md5_poly_sql("CAST(doc_id AS VARCHAR)", 1, 8)} + 1 AS h,
+             {sql_hex_int("md5(CAST(doc_id AS VARCHAR))", 1, 8)} + 1 AS h,
              CAST({_WTK_C} AS BIGINT) AS c
       FROM documents
     ),
@@ -888,11 +849,7 @@ def ns_sample_weighted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the driver) — no global sort, no shuffle of the corpus. The
     final rank window runs on k rows."""
     d = tbl(spark, sf_dir, "documents", parallel=True)
-    h = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8),
-               16, 10).cast("bigint")
-        + 1
-    )
+    h = hex_int(F.md5(F.col("doc_id").cast("string")), 1, 8) + 1
     key = (
         (det_ln_int(F.lit(_WTK_C)) - det_ln_int(h))
         # clamp w >= 1 on BOTH engines (see the oracle comment): the
@@ -935,7 +892,7 @@ _FOLDS = 5
     ),
     assigned AS (
       SELECT doc_id, n_chars, ckey,
-             {_md5_poly_sql("ckey", 1, 4)} % {_FOLDS} AS fold,
+             {sql_hex_int("md5(ckey)", 1, 4)} % {_FOLDS} AS fold,
              doc_id % {_FOLDS} AS naive_fold
       FROM g
     ),
@@ -981,10 +938,7 @@ def ns_split_group_folds(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "n_chars",
         "ckey",
-        (
-            F.conv(F.substring(F.md5("ckey"), 1, 4), 16, 10).cast("bigint")
-            % _FOLDS
-        ).alias("fold"),
+        (hex_int(F.md5("ckey"), 1, 4) % _FOLDS).alias("fold"),
         (F.col("doc_id") % _FOLDS).alias("naive_fold"),
     )
     groups = assigned.groupBy("ckey").agg(

@@ -14,6 +14,10 @@ Determinism rules used throughout:
   decimal: row-level arithmetic stays in IEEE double (identical in
   both engines), the result is cast to DECIMAL(28,6), summed exactly,
   and cast back to double. Helper: `dsum` / `davg`.
+- **Hashing**: every hashed integer (MinHash, Bloom, sampling,
+  sharding) is a hex prefix of md5, which both engines compute
+  byte-identically, read as a BIGINT by `hex_int` / `sql_hex_int` —
+  the one place either engine turns hex into an integer.
 - **Time bucketing**: naive epoch-seconds arithmetic on both sides
   (no to_timestamp/TZ functions in the oracle — DuckDB's default TZ
   is the host's, not necessarily UTC).
@@ -89,6 +93,20 @@ def sql_davg(expr: str, alias: str) -> str:
         f"CAST(SUM(CAST({expr} AS DECIMAL(28,6))) AS DOUBLE)"
         f" / COUNT({expr}) AS {alias}"
     )
+
+
+# --- cross-engine hex-to-integer (md5 hashing, see module docstring) ---
+
+
+def hex_int(h: Column, start: int, n: int) -> Column:
+    """BIGINT value of the n hex chars of `h` from 1-based `start`;
+    n <= 15 so every value fits a signed bigint."""
+    return F.conv(F.substring(h, start, n), 16, 10).cast("bigint")
+
+
+def sql_hex_int(h: str, start: int, n: int) -> str:
+    """DuckDB twin of `hex_int`."""
+    return f"CAST(('0x' || substring({h}, {start}, {n})) AS BIGINT)"
 
 
 # --- cross-engine deterministic natural log (integer domain) ---
@@ -249,67 +267,6 @@ def persist_evicting(df: DataFrame, site: str) -> DataFrame:
 _TBL_META: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 
 
-def _scan_split_estimate(spark: SparkSession, path: str) -> int:
-    """Base split count of a parquet scan from the FILE LISTING alone
-    — Spark's own FilePartition packing arithmetic (maxSplitBytes =
-    min(maxPartitionBytes, max(openCostInBytes, totalBytes/cores)),
-    then greedy size-desc packing) replayed over os.stat sizes. This
-    replaces the old `df.rdd.getNumPartitions()` probe, which
-    CONVERTED the plan to an RDD (~290 ms of py4j + planning per
-    first touch of each table — r14 verdict #5: pure driver fixed
-    cost). Validated split-for-split against the RDD probe on every
-    testdata table at every SF (tests/test_properties.py).
-
-    One deliberate divergence: single-file tables with ONE row group
-    yield byte-range splits that collapse to one non-empty task at
-    execution; the RDD probe counted those byte-ranges too (it sees
-    the same FilePartition packing, not row groups), so estimate ==
-    probe there as well."""
-    from ..catalog import data_files
-
-    sizes = [os.path.getsize(f) for f in data_files(path)]
-    if not sizes:
-        return 0
-    # the JVM's own byte-string parser: every form Spark accepts
-    # ("1t", "1tb", "128m", plain bytes) parses as Spark parses it
-    java_utils = spark._jvm.org.apache.spark.network.util.JavaUtils
-    _bytes = java_utils.byteStringAsBytes
-    conf = spark.conf
-    max_pb = _bytes(
-        conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-    )
-    open_cost = _bytes(
-        conf.get("spark.sql.files.openCostInBytes", "4194304")
-    )
-    # FilePartition.maxSplitBytes: minPartitionNum, else the session's
-    # leafNodeDefaultParallelism, else the context's defaultParallelism
-    min_pn = conf.get("spark.sql.files.minPartitionNum", None) or conf.get(
-        "spark.sql.leafNodeDefaultParallelism", None
-    )
-    cores = (
-        int(min_pn)
-        if min_pn
-        else spark.sparkContext.defaultParallelism
-    )
-    total = sum(s + open_cost for s in sizes)
-    max_split = min(max_pb, max(open_cost, total // max(cores, 1)))
-    chunks: list[int] = []
-    for s in sizes:
-        off = 0
-        while off < s:
-            chunks.append(min(max_split, s - off))
-            off += max_split
-    chunks.sort(reverse=True)
-    nparts, cur, curfiles = 0, 0, 0
-    for c in chunks:
-        if curfiles and cur + c > max_split:
-            nparts += 1
-            cur, curfiles = 0, 0
-        cur += c + open_cost
-        curfiles += 1
-    return nparts + (1 if curfiles else 0)
-
-
 def tbl(
     spark: SparkSession, sf_dir: str, name: str, parallel: bool = False
 ) -> DataFrame:
@@ -334,8 +291,9 @@ def tbl(
     path) with an mtime+size fingerprint of every data file (a landed
     table gains files inside existing partition directories, which
     the top directory's own mtime does not show) — see _TBL_META:
-    plan metadata, never data. The split count comes from the file listing
-    (_scan_split_estimate), not an RDD-conversion probe."""
+    plan metadata, never data. The split count is Spark's own: the
+    input RDD of the planned file scan (FilePartition packing of the
+    listing), read without converting the plan to an RDD."""
     from ..catalog import data_files, load_table
 
     per = _TBL_META.setdefault(spark, {})
@@ -352,7 +310,8 @@ def tbl(
     ent = per.get(key)
     if ent is None or ent[0] != fp:
         df = load_table(spark, sf_dir, name)
-        ent = (fp, df, _scan_split_estimate(spark, path))
+        scan = df._jdf.queryExecution().sparkPlan().collectLeaves().apply(0)
+        ent = (fp, df, scan.inputRDD().getNumPartitions())
         per[key] = ent
     _fp, df, nparts = ent
     if parallel:

@@ -30,7 +30,7 @@ from ..functions.partition import (
 )
 from ..sources.parse import parse_column
 from .pipeline import sql_logdate
-from .registry import query, scoped_session, tbl
+from .registry import hex_int, query, scoped_session, sql_hex_int, tbl
 
 from ..scratch import SCRATCH
 
@@ -884,8 +884,8 @@ _EXPORT_SHARDS = 8
 @query(
     "sink_jsonl_export",
     f"""
-    SELECT CAST(CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))
-                  AS BIGINT) % {_EXPORT_SHARDS} AS BIGINT) AS shard,
+    SELECT CAST({sql_hex_int("md5(CAST(doc_id AS VARCHAR))", 1, 8)}
+                % {_EXPORT_SHARDS} AS BIGINT) AS shard,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
            CAST(SUM(n_chars) AS BIGINT) AS n_chars,
            CAST(MIN(doc_id) AS BIGINT) AS min_doc_id,
@@ -911,9 +911,7 @@ def sink_jsonl_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the shard count is the only knob that changes."""
     d = tbl(spark, sf_dir, "documents")
     shard = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("bigint")
-        % _EXPORT_SHARDS
+        hex_int(F.md5(F.col("doc_id").cast("string")), 1, 8) % _EXPORT_SHARDS
     ).alias("shard")
     out = os.path.join(SCRATCH, "sink_jsonl_export")
     exported = d.select("doc_id", "text", "lang", "source", "n_chars", shard)

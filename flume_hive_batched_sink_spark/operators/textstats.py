@@ -25,11 +25,13 @@ from .registry import (
     ORACLE,
     det_ln_int,
     dsum,
+    hex_int,
     local_frame,
     persist_evicting,
     query,
     sql_det_ln_ctes,
     sql_dsum,
+    sql_hex_int,
     tbl,
 )
 
@@ -1211,8 +1213,8 @@ _FFD_SHARDS = 8
     WITH RECURSIVE tok AS (
       SELECT source, doc_id,
              CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-             CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::UBIGINT
-                  AS BIGINT) % {_FFD_SHARDS} AS shard
+             {sql_hex_int("md5(CAST(doc_id AS VARCHAR))", 1, 4)}
+               % {_FFD_SHARDS} AS shard
       FROM documents
     ),
     ordered AS (
@@ -1295,8 +1297,10 @@ def ns_pack_ffd(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         "doc_id",
         F.size(_TOKENS(F.col("text"))).cast("bigint").alias("n_tokens"),
-        (F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
-         .cast("bigint") % _FFD_SHARDS).alias("shard"),
+        (
+            hex_int(F.md5(F.col("doc_id").cast("string")), 1, 4)
+            % _FFD_SHARDS
+        ).alias("shard"),
     )
 
     def pack(pdf: "pd.DataFrame") -> "pd.DataFrame":
@@ -1481,14 +1485,14 @@ def ns_quality_scriptmix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ns_sample_weighted",
-    """
+    f"""
     SELECT doc_id, source, n_tokens, keep_rate FROM (
       SELECT doc_id, source,
              CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
              least(1.0, greatest(0.1,
                len(string_split(text, ' ')) / 150.0)) AS keep_rate,
-             CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8)
-                  AS BIGINT) / 4294967296.0 AS u
+             {sql_hex_int("md5(CAST(doc_id AS VARCHAR))", 1, 8)}
+               / 4294967296.0 AS u
       FROM documents
     ) t
     WHERE u < keep_rate
@@ -1509,10 +1513,8 @@ def ns_sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     rate = F.least(
         F.lit(1.0), F.greatest(F.lit(0.1), n_tokens / F.lit(150.0))
     )
-    u = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("bigint")
-        / F.lit(4294967296.0)
+    u = hex_int(F.md5(F.col("doc_id").cast("string")), 1, 8) / F.lit(
+        4294967296.0
     )
     return (
         d.select(
@@ -2193,9 +2195,9 @@ _WINNOW_SQL_CTES = f"""
              CAST(greatest(len(t) - {_WINNOW_K} + 1, 0) AS BIGINT) AS m,
              list_transform(
                range(0, greatest(len(t) - {_WINNOW_K} + 1, 0)),
-               i -> CAST('0x' || substring(
-                      md5(array_to_string(t[i + 1 : i + {_WINNOW_K}], ' ')),
-                      1, 10) AS BIGINT) * {_WINNOW_POS}
+               i -> {sql_hex_int(
+                      f"md5(array_to_string(t[i + 1 : i + {_WINNOW_K}], ' '))",
+                      1, 10)} * {_WINNOW_POS}
                     + ({_WINNOW_POS} - 1 - i)
              ) AS carr
       FROM toks
@@ -2235,9 +2237,9 @@ def _winnow_sel(d: DataFrame) -> DataFrame:
 
     def kgram_hash(t: Column, i: Column) -> Column:
         s = F.concat_ws(" ", F.slice(t, i + 1, _WINNOW_K))
-        return F.conv(F.substring(F.md5(s), 1, 10), 16, 10).cast(
-            "bigint"
-        ) * F.lit(_WINNOW_POS) + (F.lit(_WINNOW_POS - 1) - i)
+        return hex_int(F.md5(s), 1, 10) * F.lit(_WINNOW_POS) + (
+            F.lit(_WINNOW_POS - 1) - i
+        )
 
     def inner(t: Column) -> Column:
         m = F.greatest(F.size(t) - F.lit(_WINNOW_K - 1), F.lit(0)).cast(
@@ -2555,9 +2557,9 @@ _VERB_SQL_CTES = f"""{_WINNOW_SQL_CTES},
     ),
     g8 AS (
       SELECT doc_id,
-             CAST('0x' || substring(
-                    md5(array_to_string(t[i + 1 : i + {_VERB_N}], ' ')),
-                    1, 10) AS BIGINT) AS sh,
+             {sql_hex_int(
+                f"md5(array_to_string(t[i + 1 : i + {_VERB_N}], ' '))", 1, 10
+             )} AS sh,
              MIN(i) AS pos
       FROM i8 GROUP BY doc_id, sh
     )"""
@@ -2591,21 +2593,11 @@ def _verb_g8(d: DataFrame) -> DataFrame:
             F.lit(0), (F.size(F.col("t")) - F.lit(_VERB_N)).cast("int")
         ),
         lambda i: F.struct(
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat_ws(
-                            " ", F.slice(F.col("t"), i + 1, _VERB_N)
-                        )
-                    ),
-                    1,
-                    10,
-                ),
-                16,
+            hex_int(
+                F.md5(F.concat_ws(" ", F.slice(F.col("t"), i + 1, _VERB_N))),
+                1,
                 10,
-            )
-            .cast("bigint")
-            .alias("sh"),
+            ).alias("sh"),
             i.alias("pos"),
         ),
     )

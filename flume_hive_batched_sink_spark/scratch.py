@@ -8,7 +8,8 @@ dirs — Spark aborts with "Unable to clear output directory"; (b) a
 killed run leaves half-written state that poisons the next run.
 Keying the scratch root by pid gives every process an isolated tree;
 stale trees from dead processes are garbage-collected on import so
-the default location (`/root/repo/.tmp`) does not accumulate.
+the default location (`.tmp` in the package's own checkout, so two
+checkouts never share one) does not accumulate.
 """
 
 from __future__ import annotations
@@ -16,7 +17,12 @@ from __future__ import annotations
 import os
 import shutil
 
-_BASE = os.environ.get("SPARK_GRAFT_SCRATCH", "/root/repo/.tmp")
+_BASE = os.environ.get(
+    "SPARK_GRAFT_SCRATCH",
+    os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".tmp"
+    ),
+)
 SCRATCH = os.path.join(_BASE, f"run_{os.getpid()}")
 
 

@@ -257,3 +257,40 @@ def test_bpe_merge_matches_greedy_reference(spark, words):
             for row in df.collect()
         }
         assert got == state, f"round {_round} merge ({l},{r})"
+
+
+_HEX32 = st.text(alphabet="0123456789abcdef", min_size=32, max_size=32)
+
+
+@given(hexes=st.lists(_HEX32, min_size=1, max_size=50))
+@settings(**SETTINGS)
+def test_hex_int_twins_agree(spark, hexes):
+    """registry.hex_int (Spark conv) and sql_hex_int (DuckDB '0x'
+    cast) read the same BIGINT from every window of an md5-shaped
+    hex string: every width n in 1..15 at every start in 1..33-n,
+    checked against Python's int(_, 16) too."""
+    import duckdb
+
+    from flume_hive_batched_sink_spark.operators.registry import (
+        hex_int,
+        sql_hex_int,
+    )
+
+    wins = [(s, n) for n in range(1, 16) for s in range(1, 34 - n)]
+    rows = list(enumerate(hexes))
+    got = spark.createDataFrame(rows, "i int, h string").select(
+        "i", *[hex_int(F.col("h"), s, n) for s, n in wins]
+    )
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (i INTEGER, h VARCHAR)")
+    con.executemany("INSERT INTO t VALUES (?, ?)", rows)
+    cols = ", ".join(sql_hex_int("h", s, n) for s, n in wins)
+    rel = con.sql(f"SELECT i, {cols} FROM t ORDER BY i")
+    assert {str(t) for t in rel.types[1:]} == {"BIGINT"}
+    duck = rel.fetchall()
+    want = [
+        (i, *[int(h[s - 1 : s - 1 + n], 16) for s, n in wins])
+        for i, h in rows
+    ]
+    assert sorted(tuple(r) for r in got.collect()) == want
+    assert duck == want

@@ -130,9 +130,8 @@ def test_approx_distinct_error_bound(spark):
 def test_minhash_finds_planted_duplicates(spark):
     """Plant near-duplicates; MinHash-LSH must recover the pairs."""
     from flume_hive_batched_sink_spark.operators.dedup import (
-        _norm_col,
-        minhash_signature,
-        shingles,
+        N_HASHES,
+        minhash_sig_wide,
     )
 
     docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet").limit(50)
@@ -142,24 +141,17 @@ def test_minhash_finds_planted_duplicates(spark):
         (F.col("doc_id") + 100000).alias("doc_id"),
         F.concat(F.col("text"), F.lit(" mutated")).alias("text"),
     )
-    corpus = originals.unionByName(mutated)
-    sig = corpus.select(
-        "doc_id", minhash_signature(shingles(_norm_col())).alias("sig")
-    )
+    sig = minhash_sig_wide(originals.unionByName(mutated))
     a = sig.alias("a")
     b = sig.alias("b")
     # full-signature agreement rate as similarity proxy
+    agree = sum(
+        (F.col(f"a.m{i}") == F.col(f"b.m{i}")).cast("int")
+        for i in range(N_HASHES)
+    )
     pairs = (
         a.join(b, F.col("a.doc_id") + 100000 == F.col("b.doc_id"))
-        .withColumn(
-            "agree",
-            F.size(
-                F.filter(
-                    F.zip_with("a.sig", "b.sig", lambda x, y: x == y),
-                    lambda v: v,
-                )
-            ),
-        )
+        .select(agree.alias("agree"))
         .collect()
     )
     assert pairs
@@ -5590,8 +5582,9 @@ def test_tbl_metadata_cache_identity_and_invalidation(spark):
 def test_tbl_accepts_every_spark_byte_string(spark):
     """Byte confs the engine does not set itself parse the way Spark
     parses them: a session with `spark.sql.files.maxPartitionBytes=1t`
-    (or openCostInBytes in `tb` form) must not crash tbl(), and the
-    split estimate must still match the RDD probe under it. The
+    (or openCostInBytes in `tb` form) must not crash tbl(), and
+    tbl(parallel=True) must add its repartition exactly when Spark's
+    split count (the RDD probe) is below defaultParallelism. The
     multi-file directory holds two zero-length files that sort first,
     and the partitioned one a zero-length file first in a partition
     directory: Spark's file index skips them (no split, no open cost),
@@ -5599,15 +5592,13 @@ def test_tbl_accepts_every_spark_byte_string(spark):
     last case sets `spark.sql.leafNodeDefaultParallelism=1` with a
     small open cost there, so total/cores sets the split size: Spark
     takes its core count from that conf before the context's
-    defaultParallelism."""
+    defaultParallelism. The last case splits sf0.1 lineitem into more
+    splits than cores, so it gets no repartition."""
     import os
     import tempfile
 
     from flume_hive_batched_sink_spark.catalog import load_table
-    from flume_hive_batched_sink_spark.operators.registry import (
-        _scan_split_estimate,
-        tbl,
-    )
+    from flume_hive_batched_sink_spark.operators.registry import tbl
 
     with tempfile.TemporaryDirectory() as multi:
         events = load_table(spark, SF_SMALL, "events")
@@ -5622,11 +5613,15 @@ def test_tbl_accepts_every_spark_byte_string(spark):
         ).parquet(pout)
         open(os.path.join(pout, "day=0", "a-empty.parquet"), "w").close()
         assert load_table(spark, parted, "events").columns[-1] == "day"
-        for max_pb, open_cost, leaf, sf_dirs in (
-            ("1t", "4mb", None, (SF_SMALL, "/root/testdata/sf0.01")),
-            ("128m", "1tb", None, (SF_SMALL, "/root/testdata/sf0.01")),
-            ("128m", "4mb", None, (multi, parted)),
-            ("128m", "1k", "1", (multi, parted)),
+        want = spark.sparkContext.defaultParallelism
+        decided = []
+        sf01, sf1 = "/root/testdata/sf0.01", "/root/testdata/sf0.1"
+        for max_pb, open_cost, leaf, sf_dirs, name in (
+            ("1t", "4mb", None, (SF_SMALL, sf01), "events"),
+            ("128m", "1tb", None, (SF_SMALL, sf01), "events"),
+            ("128m", "4mb", None, (multi, parted), "events"),
+            ("128m", "1k", "1", (multi, parted), "events"),
+            ("64k", "4mb", None, (sf1,), "lineitem"),
         ):
             scoped = spark.newSession()  # fresh tbl() cache, own conf
             scoped.conf.set("spark.sql.files.maxPartitionBytes", max_pb)
@@ -5634,45 +5629,17 @@ def test_tbl_accepts_every_spark_byte_string(spark):
             if leaf:
                 scoped.conf.set("spark.sql.leafNodeDefaultParallelism", leaf)
             for sf_dir in sf_dirs:
-                df = tbl(scoped, sf_dir, "events", parallel=True)
+                df = tbl(scoped, sf_dir, name, parallel=True)
                 assert df.count() > 0
-                path = os.path.join(sf_dir, "events.parquet")
-                probe = load_table(scoped, sf_dir, "events").rdd.getNumPartitions()
-                assert _scan_split_estimate(scoped, path) == probe, (
+                probe = load_table(scoped, sf_dir, name).rdd.getNumPartitions()
+                # tbl returns its cached scan frame unless it repartitions
+                repartitioned = df is not tbl(scoped, sf_dir, name)
+                assert repartitioned == (probe < want), (
                     max_pb,
                     open_cost,
                     leaf,
                     sf_dir,
+                    probe,
                 )
-
-
-def test_scan_split_estimate_matches_rdd_probe(spark):
-    """r15 optimization guard (r14 verdict #5): tbl()'s parallel
-    guard now derives the base split count from the file listing
-    (_scan_split_estimate — Spark's FilePartition packing arithmetic
-    over os.stat sizes) instead of the ~290 ms
-    df.rdd.getNumPartitions() RDD-conversion probe. The estimate must
-    agree with the probe split-for-split: on every catalog table at
-    every SF, and on a multi-file directory written by Spark."""
-    import os
-    import tempfile
-
-    from flume_hive_batched_sink_spark.catalog import TABLES, load_table
-    from flume_hive_batched_sink_spark.operators.registry import (
-        _scan_split_estimate,
-    )
-
-    for sf_dir in (SF_SMALL, "/root/testdata/sf0.01", "/root/testdata/sf0.1"):
-        for t in TABLES:
-            p = os.path.join(sf_dir, f"{t}.parquet")
-            df = load_table(spark, sf_dir, t)
-            assert _scan_split_estimate(spark, p) == df.rdd.getNumPartitions(), (
-                sf_dir,
-                t,
-            )
-
-    with tempfile.TemporaryDirectory() as tmp:
-        out = os.path.join(tmp, "multi.parquet")
-        load_table(spark, SF_SMALL, "events").repartition(7).write.parquet(out)
-        df = spark.read.parquet(out)
-        assert _scan_split_estimate(spark, out) == df.rdd.getNumPartitions()
+                decided.append(repartitioned)
+        assert decided[-1] is False and True in decided
