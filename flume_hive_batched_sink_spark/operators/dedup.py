@@ -364,9 +364,9 @@ def _simhash_oracle_sql() -> str:
     """DuckDB twin of ns_dedup_simhash, generated from the same bit
     layout: signature bit b = bit (b mod 4) of hex nibble b//4 of
     md5(token) — md5 is byte-identical across engines and each nibble
-    is read as an integer (sql_hex_int here, an instr digit lookup on
-    the Spark side), plain integer arithmetic both can evaluate, which is what moved this operator
-    off the rows-only list (r7 verdict #4; xxhash64/murmur3 have no
+    is read as an integer through the hex_int / sql_hex_int twin,
+    plain integer arithmetic both can evaluate, which is what moved
+    this operator off the rows-only list (r7 verdict #4; xxhash64/murmur3 have no
     DuckDB twin)."""
     nibs = ",\n           ".join(
         f"{sql_hex_int('md5(tok)', i + 1, 1)} AS n{i}"
@@ -420,7 +420,7 @@ def ns_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the digest. r8 switched this from xxhash64 (no DuckDB twin ⇒
     rows-only) to md5 so the oracle replays the 64 bit-votes exactly
     — same cryptographic-quality bit independence, still one native
-    hash per token. All nibble math is codegen'd substring/instr
+    hash per token. All nibble math is codegen'd substring/conv
     integer arithmetic, NOT interpreted HOFs."""
     d = tbl(spark, sf_dir, "documents", parallel=True)
     toks = F.array_distinct(F.split(_norm_col(), " "))
@@ -433,13 +433,7 @@ def ns_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # empty text), so explode drops no docs.
     hashed = d.select("doc_id", F.explode(toks).alias("tok")).select(
         "doc_id",
-        *[
-            F.expr(
-                f"instr('0123456789abcdef', substring(md5(tok), {i + 1}, 1))"
-                f" - 1"
-            ).alias(f"n{i}")
-            for i in range(16)
-        ],
+        *[hex_int(F.md5("tok"), i + 1, 1).alias(f"n{i}") for i in range(16)],
     )
 
     # Two-level vote aggregate keyed (doc_id, nibble) instead of ONE

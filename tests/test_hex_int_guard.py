@@ -6,7 +6,8 @@ samples, shards) is an md5 hex prefix read as a BIGINT, and the two
 engines agree only because both read it through one twin pair,
 `hex_int` (Spark's `conv`) and `sql_hex_int` (DuckDB's `'0x' ||`
 cast). A second spelling — an inline `conv`, a `'0x' ||` cast or a
-`strpos('0123456789abcdef', …)` nibble polynomial — is rejected here.
+`strpos`/`instr('0123456789abcdef', …)` digit lookup — is rejected
+here.
 """
 
 from __future__ import annotations
@@ -20,7 +21,7 @@ PKG = os.path.join(
     "flume_hive_batched_sink_spark",
 )
 TWIN = os.path.join("operators", "registry.py")
-SQL = re.compile(r"'0x'\s*\|\||strpos\(\s*'0123456789abcdef'", re.I)
+SQL = re.compile(r"'0x'\s*\|\||(strpos|instr)\(\s*'0123456789abcdef'", re.I)
 
 
 def _hex_sites() -> list[tuple[str, int, str]]:
