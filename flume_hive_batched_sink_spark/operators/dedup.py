@@ -143,8 +143,9 @@ def minhash_sig_wide(docs: DataFrame, n_hashes: int = N_HASHES) -> DataFrame:
     evaluate interpreted, CodegenFallback): every step — Generate,
     md5/_h32, k affine mins — stays inside whole-stage codegen with
     map-side partial aggregation, so the shuffle carries one combined
-    row per (doc, map partition), not the exploded shingles. Deliberately NO collect_set here: array-state
-    aggregates force ObjectHashAggregate (codegen off, heavy state);
+    row per (doc, map partition), not the exploded shingles.
+    Deliberately NO collect_set here: array-state aggregates force
+    ObjectHashAggregate (codegen off, heavy state);
     exact verification instead recomputes shingle sets for only the
     candidate docs (see ns_dedup_minhash).
     """
@@ -366,8 +367,8 @@ def _simhash_oracle_sql() -> str:
     md5(token) — md5 is byte-identical across engines and each nibble
     is read as an integer through the hex_int / sql_hex_int twin,
     plain integer arithmetic both can evaluate, which is what moved
-    this operator off the rows-only list (r7 verdict #4; xxhash64/murmur3 have no
-    DuckDB twin)."""
+    this operator off the rows-only list (r7 verdict #4;
+    xxhash64/murmur3 have no DuckDB twin)."""
     nibs = ",\n           ".join(
         f"{sql_hex_int('md5(tok)', i + 1, 1)} AS n{i}"
         for i in range(16)
